@@ -119,10 +119,10 @@ def plan_size_estimate(df: DataFrame) -> int:
     number: exactly right for separating bench-scale inputs (MBs) from
     production corpora (TBs), wrong for anything finer."""
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    # py4j maps scala.math.BigInt to a Python int for values that fit;
-    # very large estimates (unbounded-growth operators) arrive as the
-    # JVM object and stringify instead
-    return size if isinstance(size, int) else int(str(size))
+    # sizeInBytes is a scala.math.BigInt, which py4j always hands back as
+    # a JVM object reference (never a Python int); its toString is the
+    # exact decimal value
+    return int(str(size))
 
 
 def materialize(df: DataFrame, min_bytes: int | None = None) -> DataFrame:

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import accumulators_exact
+
 # --- engine-portable md5 hash family -------------------------------------
 #
 # The default hash everywhere is xxhash64 (JVM-native, fastest). Each
@@ -774,11 +776,12 @@ def connected_components_star(
     # round, or (vanishingly unlikely, but an early EXIT would be a
     # wrong result) a spurious cur==prev. Non-local masters therefore
     # take a retry-exact agg over the just-checkpointed frame instead;
-    # local masters (the bench/oracle regime, where stage resubmission
-    # cannot occur) keep the fused single-job form. The min-label
-    # variant above needs no gate: its `changed` flag can only be
-    # INFLATED by double-apply (an extra round), never zeroed.
-    _local = edges.sparkSession.sparkContext.master.startswith("local")
+    # single-JVM local masters (the bench/oracle regime, where stage
+    # resubmission cannot occur; not local-cluster) keep the fused
+    # single-job form. The min-label variant above needs no gate: its
+    # `changed` flag can only be INFLATED by double-apply (an extra
+    # round), never zeroed.
+    _local = accumulators_exact(edges.sparkSession.sparkContext.master)
     _checks = [
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(src, dst))").alias("h"),

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import accumulators_exact
+
 _DEC = "decimal(28,12)"
 
 
@@ -141,11 +143,14 @@ def pagerank(
         # can double-apply after a shuffle-fetch failure on a real
         # cluster — and here the metric feeds rank VALUES, not just a
         # convergence probe. The observed fast path is therefore gated
-        # to local masters (the bench/oracle regime, where stage
-        # resubmission cannot occur); clusters take a retry-exact 1-row
-        # agg job over the just-checkpointed rank instead (r14 ADVICE on
-        # the closure checksum, applied with a stricter rule here).
-        observed = edges.sparkSession.sparkContext.master.startswith("local")
+        # to single-JVM local masters (the bench/oracle regime, where
+        # stage resubmission cannot occur); clusters, local-cluster
+        # included, take a retry-exact 1-row agg job over the
+        # just-checkpointed rank instead (r14 ADVICE on the closure
+        # checksum, applied with a stricter rule here).
+        observed = accumulators_exact(
+            edges.sparkSession.sparkContext.master
+        )
         dangling_sum = F.coalesce(
             F.sum(
                 F.when(F.col("out_weight") == 0.0, F.col("rank")).cast(_DEC)

@@ -359,34 +359,35 @@ def merge_upsert(
         # consume `src`, and per-branch pruning re-ran the caller's whole
         # source pipeline (q59: a full events aggregation) for each. The
         # collect doubles as the EAGER materialization; delta-sized by
-        # contract, spillable, released before the fence exits.
+        # contract, spillable, released on every exit path (the schema
+        # refusal included) before the fence exits.
         src = src.persist()
-        buckets = sorted(
-            r[0] for r in src.select(BUCKET_COL).distinct().collect()
-        )  # bounded by num_buckets — never corpus-sized
-        target = spark.read.option("mergeSchema", "true").parquet(path)
-        # schema evolution (round 14, r13 VERDICT #6): WIDENING only — a
-        # source may ADD columns (old rows read them as NULL; untouched
-        # buckets keep the old footer, read_merged merges schemas), but a
-        # source missing target columns refuses: latest_version picks
-        # whole rows, so a narrower winning row would silently NULL a
-        # column the target had (Delta's UPDATE SET * errors there too)
-        missing = (
-            set(target.columns) - set(src.columns) - {BUCKET_COL}
-        )
-        if missing:
-            raise ValueError(
-                f"merge_upsert source is missing target columns "
-                f"{sorted(missing)}: schema evolution is widening-only"
-            )
-        relevant = target.where(F.col(BUCKET_COL).isin(buckets))
-        merged = latest_version(
-            relevant.unionByName(src, allowMissingColumns=True),
-            keys, version, tiebreak,
-        )
-
-        staging = path.rstrip("/") + "__merge_tmp"
         try:
+            buckets = sorted(
+                r[0] for r in src.select(BUCKET_COL).distinct().collect()
+            )  # bounded by num_buckets — never corpus-sized
+            target = spark.read.option("mergeSchema", "true").parquet(path)
+            # schema evolution (round 14, r13 VERDICT #6): WIDENING only — a
+            # source may ADD columns (old rows read them as NULL; untouched
+            # buckets keep the old footer, read_merged merges schemas), but a
+            # source missing target columns refuses: latest_version picks
+            # whole rows, so a narrower winning row would silently NULL a
+            # column the target had (Delta's UPDATE SET * errors there too)
+            missing = (
+                set(target.columns) - set(src.columns) - {BUCKET_COL}
+            )
+            if missing:
+                raise ValueError(
+                    f"merge_upsert source is missing target columns "
+                    f"{sorted(missing)}: schema evolution is widening-only"
+                )
+            relevant = target.where(F.col(BUCKET_COL).isin(buckets))
+            merged = latest_version(
+                relevant.unionByName(src, allowMissingColumns=True),
+                keys, version, tiebreak,
+            )
+
+            staging = path.rstrip("/") + "__merge_tmp"
             merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
                 staging
             )

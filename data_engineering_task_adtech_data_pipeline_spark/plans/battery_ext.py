@@ -2970,29 +2970,9 @@ _Q86 = dict(n_cells=8, m=2, n_codes=8, n_probe=2, k=5, rerank=20, dim=64,
 
 
 def _q86_root(sf_dir: str) -> str:
-    """Per-(sf_dir, embeddings fingerprint) local cache root for the
-    persisted q86 index: deterministic content, so any process may build
-    it and later processes (bench serve runs, driver correctness runs)
-    reuse it; the fingerprint makes a regenerated testdata vintage miss
-    the cache instead of serving stale rows."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    parts = [sf_dir.rstrip("/")]
-    if os.path.isdir(src):
-        for f in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, f))
-            # st_mtime_ns, not integer-second mtime: a regenerated
-            # same-size vintage written within the same second must MISS
-            # the cache, not serve a stale index (ADVICE r6)
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_q86", key)
+    """Cache root for the persisted q86 index, keyed on the embeddings
+    vintage (``_vintage_root``)."""
+    return _vintage_root(sf_dir, "embeddings", "spark_graft_q86")
 
 
 _Q86_MODEL_CACHE: dict = {}
@@ -3035,69 +3015,19 @@ def _q86_model(spark: SparkSession, sf_dir: str):
 def _q86_prepare(spark: SparkSession, sf_dir: str) -> None:
     """Build the persisted index once per (sf_dir, data vintage); no-op
     when the cache is warm. bench.py runs this untimed in warm-up.
+    Published through ``_staged_publish`` (concurrent first touches wait
+    on its lock for one build), then the in-process model memo is
+    warmed."""
 
-    Concurrency (round 15, r14 VERDICT #7): this was the LAST cache root
-    still built IN PLACE under a bare marker check — two concurrent
-    first-touch processes raced the same ``_temporary`` staging dir
-    (observed when round 14 ran pytest and the oracle gate together).
-    Now the q131/q134 protocol: build in a pid-private stage dir
-    (marker + ``_source`` breadcrumb written inside), publish by one
-    atomic ``os.rename``; the loser of a race discards its stage and
-    reuses the winner's landing. Crashed stages and orphaned
-    old-vintage roots are swept on entry with the shared q131
-    sweepers."""
-    import os
-    import shutil
-    from pathlib import Path
-
-    root = _q86_root(sf_dir)
-    _q131_sweep_vintages(root, sf_dir)
-    marker = os.path.join(root, "_built_ok")
-    if os.path.exists(marker):
-        _q86_model(spark, sf_dir)  # warm the in-process model memo
-        return
-    _q131_sweep_dead(root)
-    stage = f"{root}.stage.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)  # this pid's prior crash only
-    emb, cents, cb = _q86_model(spark, sf_dir)
-    similarity.ivf_index_write(
-        emb, cents, stage, dim=_Q86["dim"], codebooks=cb, pq_residual=True
-    )
-    Path(os.path.join(stage, "_source")).write_text(sf_dir.rstrip("/"))
-    Path(os.path.join(stage, "_built_ok")).write_text("ok")
-    try:
-        os.rename(stage, root)  # atomic claim: complete stage -> root
-        return
-    except OSError:
-        pass
-    if not os.path.exists(marker):
-        # marker-less root = pre-protocol debris or a crashed move-aside:
-        # move it aside under a unique pre-cleared name and retry once.
-        # If the aside TOCTOU-stole a landing a racer published in the
-        # interim, the marker inside betrays it — rename it straight back.
-        debris = f"{root}.stale.{os.getpid()}"
-        shutil.rmtree(debris, ignore_errors=True)  # pid-reuse leftover
-        try:
-            os.rename(root, debris)
-        except OSError:
-            pass
-        if os.path.exists(os.path.join(debris, "_built_ok")):
-            try:
-                os.rename(debris, root)  # stole a live landing: restore
-            except OSError:
-                shutil.rmtree(debris, ignore_errors=True)  # re-published
-        else:
-            shutil.rmtree(debris, ignore_errors=True)
-            try:
-                os.rename(stage, root)
-            except OSError:
-                pass
-    shutil.rmtree(stage, ignore_errors=True)
-    if not os.path.exists(marker):
-        raise RuntimeError(
-            f"q86 index claim failed twice for {root}; "
-            "remove the directory and retry"
+    def build(stage: str) -> None:
+        emb, cents, cb = _q86_model(spark, sf_dir)
+        similarity.ivf_index_write(
+            emb, cents, stage, dim=_Q86["dim"], codebooks=cb,
+            pq_residual=True,
         )
+
+    _staged_publish(_q86_root(sf_dir), sf_dir, build)
+    _q86_model(spark, sf_dir)
 
 
 def _q86_oracle() -> str:
@@ -5174,25 +5104,9 @@ _Q131_LATENESS = "40 days"
 
 
 def _q131_root(sf_dir: str) -> str:
-    """Per-(sf_dir, events fingerprint) cache root for the landed
-    streaming silver (the q86 recipe): any process may land it; later
-    processes reuse it; a regenerated testdata vintage misses the cache
-    instead of serving stale counts."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = [sf_dir.rstrip("/")]
-    if os.path.isdir(src):
-        for f in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_q131", key)
+    """Cache root for the landed streaming silver, keyed on the events
+    vintage (``_vintage_root``)."""
+    return _vintage_root(sf_dir, "events", "spark_graft_q131")
 
 
 def _q131_prepare(spark: SparkSession, sf_dir: str) -> None:
@@ -5200,189 +5114,45 @@ def _q131_prepare(spark: SparkSession, sf_dir: str) -> None:
     warm. bench.py runs this untimed in warm-up, so the timed entry
     measures the SERVING read — the q86 split of concerns.
 
-    Concurrency (round-9 review): the landing is built in a
-    PROCESS-PRIVATE staging dir (marker written INSIDE it) and published
-    by one atomic ``os.rename`` onto the cache root — the protocol never
-    publishes an incomplete root. Two concurrent first-touch processes
-    each build their own stage; the loser's rename fails, it discards
-    its stage and reuses the winner's. Marker-less debris (pre-protocol
-    or a crashed aside) is moved aside before the retry; if the aside
-    TOCTOU-steals a landing a racer published in the interim, the
-    marker inside betrays it and it is renamed straight back (a
-    microsecond aside window — readers retry a listing, never read
-    partial data). Dead-pid stage/stale leftovers are swept on entry
-    (``_q131_sweep_dead``). (The previous protocol — check marker,
-    rmtree the shared root, land in place — let process B rmtree
-    mid-landing-of-A and then count A's wave files on top of its own:
-    a silently double-counted silver persisted under the marker.)"""
+    The silver is append-structured, so it must never be landed in place
+    under a shared root: a process that re-lands over another's partial
+    landing counts both sets of wave files (a silently double-counted
+    silver). ``_staged_publish`` builds it in a pid-private stage under
+    the family lock and publishes it by one rename."""
     import os
-    import shutil
-    from pathlib import Path
 
     from ..streaming.jobs import stream_events_daily
 
-    root = _q131_root(sf_dir)
-    _q131_sweep_vintages(root, sf_dir)
-    marker = os.path.join(root, "_landed_ok")
-    if os.path.exists(marker):
-        # backfill the vintage-sweep breadcrumb into pre-breadcrumb
-        # landings (round-10 review): without it, a live pre-r10 cache
-        # keeps aging toward the 1-day fallback sweep on every entry —
-        # one warm touch by its owner makes it sweep-proof instead.
-        src_mark = os.path.join(root, "_source")
-        if not os.path.exists(src_mark):
-            try:
-                Path(src_mark).write_text(sf_dir.rstrip("/"))
-            except OSError:
-                pass
-        # refresh the dir mtime on every warm read (r10 ADVICE): an
-        # actively-read cache keeps renewing its age-out clock, so the
-        # 1-day fallback sweep can only ever claim genuinely idle
-        # pre-breadcrumb leftovers
-        try:
-            os.utime(root, None)
-        except OSError:
-            pass
-        return
-    _q131_sweep_dead(root)
-    stage = f"{root}.stage.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)  # this pid's prior crash only
-    input_dir = os.path.join(stage, "incoming")
-    silver = os.path.join(stage, "silver")
-    ckpt = os.path.join(stage, "ckpt")
-    os.makedirs(input_dir, exist_ok=True)
-    ev = (
-        Testdata(spark, sf_dir).events.where(
-            F.col("event_id").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-        ).select(
-            F.col("event_id").alias("id"),
-            (F.col("user_id") % _Q131_CAMPAIGNS).alias("campaign_id"),
-            F.col("ts").alias("created_at"),
-        )
-    )
-    # two deterministic arrival waves; wave 2 (every 3rd id) interleaves
-    # across all days, so run 2 must bump nearly every group's version
-    for wave_filter in (F.col("id") % 3 != 0, F.col("id") % 3 == 0):
-        ev.where(wave_filter).coalesce(4).write.mode("append").parquet(
-            input_dir
-        )
-        q = stream_events_daily(
-            spark, input_dir, silver, ckpt,
-            lateness=_Q131_LATENESS, available_now=True,
-        )
-        q.awaitTermination()
-    # breadcrumb BEFORE the marker: marker implies a complete landing
-    # including the _source the vintage sweep keys on
-    Path(os.path.join(stage, "_source")).write_text(sf_dir.rstrip("/"))
-    Path(os.path.join(stage, "_landed_ok")).write_text("ok")
-    try:
-        os.rename(stage, root)  # atomic claim: complete stage -> root
-        return
-    except OSError:
-        pass
-    if os.path.exists(marker):  # lost the race to a complete landing
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    # a marker-less root can only be pre-protocol debris or a crashed
-    # move-aside (the protocol never publishes without the marker
-    # inside): move it aside under a unique pre-cleared name and retry
-    # the claim once. If a concurrent process published a COMPLETE
-    # landing between the marker re-check and the rename (TOCTOU), the
-    # moved-aside dir carries the marker — rename it straight back and
-    # discard our stage instead of deleting a live landing.
-    debris = f"{root}.stale.{os.getpid()}"
-    shutil.rmtree(debris, ignore_errors=True)  # pid-reuse leftover
-    try:
-        os.rename(root, debris)
-    except OSError:
-        pass
-    if os.path.exists(os.path.join(debris, "_landed_ok")):
-        try:
-            os.rename(debris, root)  # stole a complete landing: restore
-        except OSError:
-            shutil.rmtree(debris, ignore_errors=True)  # root re-published
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    shutil.rmtree(debris, ignore_errors=True)
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise RuntimeError(
-                f"q131 landing claim failed twice for {root}; "
-                "remove the directory and retry"
+    def build(stage: str) -> None:
+        input_dir = os.path.join(stage, "incoming")
+        silver = os.path.join(stage, "silver")
+        ckpt = os.path.join(stage, "ckpt")
+        os.makedirs(input_dir, exist_ok=True)
+        ev = (
+            Testdata(spark, sf_dir).events.where(
+                F.col("event_id").isNotNull()
+                & F.col("user_id").isNotNull()
+                & F.col("ts").isNotNull()
+            ).select(
+                F.col("event_id").alias("id"),
+                (F.col("user_id") % _Q131_CAMPAIGNS).alias("campaign_id"),
+                F.col("ts").alias("created_at"),
             )
+        )
+        # two deterministic arrival waves; wave 2 (every 3rd id)
+        # interleaves across all days, so run 2 must bump nearly every
+        # group's version
+        for wave_filter in (F.col("id") % 3 != 0, F.col("id") % 3 == 0):
+            ev.where(wave_filter).coalesce(4).write.mode("append").parquet(
+                input_dir
+            )
+            q = stream_events_daily(
+                spark, input_dir, silver, ckpt,
+                lateness=_Q131_LATENESS, available_now=True,
+            )
+            q.awaitTermination()
 
-
-def _q131_sweep_vintages(root: str, sf_dir: str) -> None:
-    """Reclaim cache roots of OLD VINTAGES of the same ``sf_dir`` (r9
-    ADVICE): regenerated testdata changes the fingerprint key, so the
-    previous landing can never be reused — without this sweep each
-    regeneration leaks a parquet tree in tempdir indefinitely. Every
-    landing records its sf_dir in a ``_source`` breadcrumb (written
-    before the marker, so marker implies breadcrumb); a sibling key dir
-    with the SAME source but a different key is definitively an
-    orphaned vintage. Keys of OTHER sf_dirs (a concurrent sf0.001 run
-    beside this sf0.01 one) are live caches and are left alone — which
-    is why a blanket different-key sweep would be wrong. Pre-breadcrumb
-    key dirs are aged out after a day instead (source unknowable)."""
-    import os
-    import shutil
-    import time
-
-    parent, cur = os.path.dirname(root), os.path.basename(root)
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        return
-    for name in names:
-        # stage/stale siblings carry a ".": _q131_sweep_dead's job
-        if name == cur or "." in name:
-            continue
-        path = os.path.join(parent, name)
-        src = os.path.join(path, "_source")
-        try:
-            if os.path.exists(src):
-                with open(src) as fh:
-                    same = fh.read() == sf_dir.rstrip("/")
-                if same:
-                    shutil.rmtree(path, ignore_errors=True)
-            elif time.time() - os.path.getmtime(path) > 86400:
-                shutil.rmtree(path, ignore_errors=True)
-        except OSError:
-            pass
-
-
-def _q131_sweep_dead(root: str) -> None:
-    """Reclaim stage/stale dirs left by CRASHED landings (round-9
-    review): a SIGKILLed process leaks its ``{root}.stage.{pid}`` parquet
-    tree forever — sweep siblings whose pid suffix is no longer alive
-    (the write-fence PID-liveness idiom, ``operators/upsert.py``)."""
-    import os
-    import shutil
-
-    parent, base = os.path.dirname(root), os.path.basename(root)
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        return
-    for name in names:
-        for tag in (".stage.", ".stale."):
-            prefix = base + tag
-            if name.startswith(prefix):
-                pid_s = name[len(prefix):]
-                if pid_s.isdigit() and int(pid_s) != os.getpid():
-                    try:
-                        os.kill(int(pid_s), 0)
-                    except ProcessLookupError:
-                        shutil.rmtree(
-                            os.path.join(parent, name), ignore_errors=True
-                        )
-                    except OSError:
-                        pass  # alive but not ours (EPERM): leave it
+    _staged_publish(_q131_root(sf_dir), sf_dir, build)
 
 
 @query(
@@ -5623,26 +5393,9 @@ _Q134 = dict(n_cells=8, n_iter=3, n_probe=2, k=5, shortlist=20, dim=64,
 
 
 def _q134_root(sf_dir: str) -> str:
-    """Per-(sf_dir, embeddings fingerprint) cache root for the persisted
-    IVF,SQ8 index (the q86/q131 recipe): deterministic content keyed on
-    the source vintage, so any process may build it and later processes
-    (bench serving runs, driver correctness runs) reuse it; a regenerated
-    testdata vintage misses the cache instead of serving stale codes."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    parts = [sf_dir.rstrip("/")]
-    if os.path.isdir(src):
-        for f in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_q134", key)
+    """Cache root for the persisted IVF,SQ8 index, keyed on the
+    embeddings vintage (``_vintage_root``)."""
+    return _vintage_root(sf_dir, "embeddings", "spark_graft_q134")
 
 
 _Q134_MODEL_CACHE: dict = {}
@@ -5669,67 +5422,24 @@ def _q134_prepare(spark: SparkSession, sf_dir: str) -> None:
     """Train the IVF model + SQ8 scales and persist the cell-partitioned
     int8 index once per (sf_dir, vintage); no-op when warm. bench.py runs
     this untimed in warm-up, so the timed entry measures SERVING only.
-
-    Concurrency: the q131 protocol — build in a pid-private stage dir
-    (marker inside), publish by one atomic ``os.rename``; the loser of a
-    race discards its stage and reuses the winner's landing. Crashed
-    stages and orphaned old-vintage roots are swept on entry with the
-    shared q131 sweepers (they key on basename/`_source`, not on any
-    q131-specific layout)."""
-    import os
-    import shutil
-    from pathlib import Path
-
-    root = _q134_root(sf_dir)
-    _q131_sweep_vintages(root, sf_dir)
-    marker = os.path.join(root, "_built_ok")
-    if os.path.exists(marker):
-        _q134_model(spark, sf_dir)  # warm the in-process model memo
-        return
-    _q131_sweep_dead(root)
+    Published through ``_staged_publish`` (concurrent first touches wait
+    on its lock for one build), then the resident model memo is loaded
+    from the published root."""
     p = _Q134
-    stage = f"{root}.stage.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)  # this pid's prior crash only
-    emb = Testdata(spark, sf_dir).embeddings
-    scales = similarity.sq8_scales(emb)
-    cents = similarity.kmeans_fit(
-        emb, p["n_cells"], p["n_iter"], dim=p["dim"],
-        train_fraction=p["train_fraction"], train_hash_method="md5",
-    )
-    similarity.ivf_index_write(emb, cents, stage, dim=p["dim"], sq8=scales)
-    Path(os.path.join(stage, "_source")).write_text(sf_dir.rstrip("/"))
-    Path(os.path.join(stage, "_built_ok")).write_text("ok")
-    try:
-        os.rename(stage, root)  # atomic claim: complete stage -> root
-    except OSError:
-        # lost the race (complete landing present) or marker-less debris:
-        # q134 landings are pure overwrites of deterministic content, so
-        # debris can simply be cleared and the claim retried once.
-        if not os.path.exists(marker):
-            debris = f"{root}.stale.{os.getpid()}"
-            shutil.rmtree(debris, ignore_errors=True)
-            try:
-                os.rename(root, debris)
-            except OSError:
-                pass
-            if os.path.exists(os.path.join(debris, "_built_ok")):
-                try:
-                    os.rename(debris, root)  # stole a live landing: restore
-                except OSError:
-                    shutil.rmtree(debris, ignore_errors=True)
-            else:
-                shutil.rmtree(debris, ignore_errors=True)
-                try:
-                    os.rename(stage, root)
-                except OSError:
-                    pass
-        shutil.rmtree(stage, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise RuntimeError(
-                f"q134 index claim failed twice for {root}; "
-                "remove the directory and retry"
-            )
-    _Q134_MODEL_CACHE[root] = (cents, scales)
+
+    def build(stage: str) -> None:
+        emb = Testdata(spark, sf_dir).embeddings
+        scales = similarity.sq8_scales(emb)
+        cents = similarity.kmeans_fit(
+            emb, p["n_cells"], p["n_iter"], dim=p["dim"],
+            train_fraction=p["train_fraction"], train_hash_method="md5",
+        )
+        similarity.ivf_index_write(
+            emb, cents, stage, dim=p["dim"], sq8=scales
+        )
+
+    _staged_publish(_q134_root(sf_dir), sf_dir, build)
+    _q134_model(spark, sf_dir)
 
 
 @query(
@@ -5785,113 +5495,59 @@ _Q135_K = 64
 
 
 def _q135_root(sf_dir: str) -> str:
-    """Per-(sf_dir, events fingerprint) cache root for the landed sketch
-    log (the q131 recipe)."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = [sf_dir.rstrip("/")]
-    if os.path.isdir(src):
-        for f in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_q135", key)
+    """Cache root for the landed sketch log, keyed on the events vintage
+    (``_vintage_root``)."""
+    return _vintage_root(sf_dir, "events", "spark_graft_q135")
 
 
 def _q135_prepare(spark: SparkSession, sf_dir: str) -> None:
     """Land the sketch log once per (sf_dir, vintage); no-op when warm.
-    Same atomic stage-then-rename publish protocol as q131 (build in a
-    pid-private stage, marker inside, one os.rename claim) — the log is
-    append-structured, so landing in place would re-open q131's
-    double-count race."""
+    The log is append-structured like q131's silver, so it is built in
+    ``_staged_publish``'s pid-private stage under the family lock and
+    published by one rename, never landed in place."""
     import os
-    import shutil
-    from pathlib import Path
 
     from pyspark.sql import types as T
 
     from ..streaming.jobs import stream_kmv_monitor
 
-    root = _q135_root(sf_dir)
-    _q131_sweep_vintages(root, sf_dir)
-    marker = os.path.join(root, "_landed_ok")
-    if os.path.exists(marker):
-        return
-    _q131_sweep_dead(root)
-    stage = f"{root}.stage.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)  # this pid's prior crash only
-    input_dir = os.path.join(stage, "incoming")
-    sketch_log = os.path.join(stage, "sketch_log")
-    os.makedirs(input_dir, exist_ok=True)
-    ev = (
-        Testdata(spark, sf_dir).events.where(
-            F.col("event_id").isNotNull() & F.col("user_id").isNotNull()
-        ).select("event_id", "event_type", "user_id")
-    )
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("user_id", T.LongType()),
-    ])
-    # two deterministic arrival waves sharing one checkpoint (normal
-    # incremental operation: each wave's files fold in as per-batch
-    # sketches), then a FULL REPLAY under a fresh checkpoint — every file
-    # re-processed, a duplicate whole-corpus sketch appended to the log.
-    # The read-side merge-law collapse must absorb it exactly.
-    for ckpt, wave_filter in (
-        ("ckpt", F.col("event_id") % 3 != 0),
-        ("ckpt", F.col("event_id") % 3 == 0),
-        ("ckpt_replay", F.lit(True)),
-    ):
-        if ckpt == "ckpt":
-            ev.where(wave_filter).coalesce(4).write.mode("append").parquet(
-                input_dir
-            )
-        q = stream_kmv_monitor(
-            spark, input_dir, schema, "user_id", sketch_log,
-            os.path.join(stage, ckpt), group_cols=["event_type"],
-            k=_Q135_K, method="md5", available_now=True,
+    def build(stage: str) -> None:
+        input_dir = os.path.join(stage, "incoming")
+        sketch_log = os.path.join(stage, "sketch_log")
+        os.makedirs(input_dir, exist_ok=True)
+        ev = (
+            Testdata(spark, sf_dir).events.where(
+                F.col("event_id").isNotNull() & F.col("user_id").isNotNull()
+            ).select("event_id", "event_type", "user_id")
         )
-        q.awaitTermination()
-    Path(os.path.join(stage, "_source")).write_text(sf_dir.rstrip("/"))
-    Path(os.path.join(stage, "_landed_ok")).write_text("ok")
-    try:
-        os.rename(stage, root)  # atomic claim: complete stage -> root
-        return
-    except OSError:
-        pass
-    if os.path.exists(marker):  # lost the race to a complete landing
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    debris = f"{root}.stale.{os.getpid()}"
-    shutil.rmtree(debris, ignore_errors=True)  # pid-reuse leftover
-    try:
-        os.rename(root, debris)
-    except OSError:
-        pass
-    if os.path.exists(os.path.join(debris, "_landed_ok")):
-        try:
-            os.rename(debris, root)  # stole a complete landing: restore
-        except OSError:
-            shutil.rmtree(debris, ignore_errors=True)  # root re-published
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    shutil.rmtree(debris, ignore_errors=True)
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise RuntimeError(
-                f"q135 landing claim failed twice for {root}; "
-                "remove the directory and retry"
+        schema = T.StructType([
+            T.StructField("event_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("user_id", T.LongType()),
+        ])
+        # two deterministic arrival waves sharing one checkpoint (normal
+        # incremental operation: each wave's files fold in as per-batch
+        # sketches), then a FULL REPLAY under a fresh checkpoint — every
+        # file re-processed, a duplicate whole-corpus sketch appended to
+        # the log. The read-side merge-law collapse must absorb it
+        # exactly.
+        for ckpt, wave_filter in (
+            ("ckpt", F.col("event_id") % 3 != 0),
+            ("ckpt", F.col("event_id") % 3 == 0),
+            ("ckpt_replay", F.lit(True)),
+        ):
+            if ckpt == "ckpt":
+                ev.where(wave_filter).coalesce(4).write.mode(
+                    "append"
+                ).parquet(input_dir)
+            q = stream_kmv_monitor(
+                spark, input_dir, schema, "user_id", sketch_log,
+                os.path.join(stage, ckpt), group_cols=["event_type"],
+                k=_Q135_K, method="md5", available_now=True,
             )
+            q.awaitTermination()
+
+    _staged_publish(_q135_root(sf_dir), sf_dir, build)
 
 
 @query(
@@ -5950,25 +5606,29 @@ def q135_stream_kmv_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Shared cache-landing kernel for prepared entries (round 12): the
-# vintage-keyed root + pid-private-stage + atomic-rename publish protocol
-# that q131/q134/q135 each carry inline, factored once for new entries.
-# Semantics are identical to _q131_prepare's commentary: build in a
-# process-private stage (marker INSIDE), publish by one os.rename; the
-# loser of a race discards its stage and reuses the winner's landing;
-# marker-less debris is moved aside and the claim retried once, restoring
-# any complete landing a racer published in the TOCTOU window.
+# Shared cache-landing kernel for prepared entries: every cache root the
+# battery reuses across processes (q86/q134 persisted indexes, q131/q135
+# streamed landings, q136-q138 stored dedup state) is keyed by
+# ``_vintage_root`` and published by ``_staged_publish`` — nothing else
+# renames a stage onto a root. A root is complete iff its ``_landed_ok``
+# marker exists: the warm path checks it without locking; a cold entry
+# takes the per-family ``.claim.lock`` flock, re-checks the marker (a
+# racer may have published while it waited), clears any marker-less root
+# (under the lock that can only be debris of a crash), builds in a
+# pid-private stage and publishes it with one os.rename. Concurrent first
+# touches therefore wait for one build instead of racing two.
 # ===========================================================================
 
 
 def _vintage_root(sf_dir: str, table: str, family: str, salt: str = "") -> str:
-    """Per-(sf_dir, source-table fingerprint) cache root under tempdir —
-    the q131/q134/q135 key recipe: any process may build the landing and
-    later processes reuse it; a regenerated testdata vintage misses the
-    cache instead of serving stale artifacts. ``salt`` folds the
-    entry's OWN parameters into the key, so editing the recipe (splits,
-    tombstone ids) also misses the cache instead of serving an index
-    built under the old parameters."""
+    """Per-(sf_dir, source-table fingerprint) cache root under tempdir:
+    any process may build the landing and later processes reuse it; a
+    regenerated testdata vintage misses the cache instead of serving
+    stale artifacts (``st_mtime_ns``, so a same-size vintage rewritten
+    within one second still misses). ``salt`` folds the entry's OWN
+    parameters into the key, so editing the recipe (splits, tombstone
+    ids) also misses the cache instead of serving an index built under
+    the old parameters."""
     import hashlib
     import os
     import tempfile
@@ -5986,16 +5646,17 @@ def _vintage_root(sf_dir: str, table: str, family: str, salt: str = "") -> str:
     return os.path.join(tempfile.gettempdir(), family, key)
 
 
-def _staged_publish(root: str, sf_dir: str, build, label: str) -> None:
-    """Build-once-per-vintage with the shared claim protocol: sweeps old
-    vintages + dead-pid stages, no-ops on a live marker, calls
-    ``build(stage_dir)`` in a pid-private stage, then publishes it with
-    one atomic rename (race recovery per _q131_prepare)."""
+def _staged_publish(root: str, sf_dir: str, build) -> None:
+    """Build the landing at ``root`` once per vintage via
+    ``build(stage_dir)``; no-op when warm. See the section comment for
+    the protocol. The lock is per family (all keys of one entry share
+    it), so cold builds of different sf_dirs also run one at a time."""
+    import fcntl
     import os
     import shutil
     from pathlib import Path
 
-    _q131_sweep_vintages(root, sf_dir)
+    _sweep_vintages(root, sf_dir)
     marker = os.path.join(root, "_landed_ok")
     if os.path.exists(marker):
         try:
@@ -6003,45 +5664,91 @@ def _staged_publish(root: str, sf_dir: str, build, label: str) -> None:
         except OSError:
             pass
         return
-    _q131_sweep_dead(root)
-    stage = f"{root}.stage.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)  # this pid's prior crash only
-    os.makedirs(stage, exist_ok=True)
-    build(stage)
-    # breadcrumb BEFORE the marker: marker implies a complete landing
-    Path(os.path.join(stage, "_source")).write_text(sf_dir.rstrip("/"))
-    Path(os.path.join(stage, "_landed_ok")).write_text("ok")
-    try:
-        os.rename(stage, root)  # atomic claim: complete stage -> root
-        return
-    except OSError:
-        pass
-    if os.path.exists(marker):  # lost the race to a complete landing
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    debris = f"{root}.stale.{os.getpid()}"
-    shutil.rmtree(debris, ignore_errors=True)  # pid-reuse leftover
-    try:
-        os.rename(root, debris)
-    except OSError:
-        pass
-    if os.path.exists(os.path.join(debris, "_landed_ok")):
-        try:
-            os.rename(debris, root)  # stole a complete landing: restore
-        except OSError:
-            shutil.rmtree(debris, ignore_errors=True)  # root re-published
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    shutil.rmtree(debris, ignore_errors=True)
-    try:
+    parent = os.path.dirname(root)
+    os.makedirs(parent, exist_ok=True)
+    with open(os.path.join(parent, ".claim.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.path.exists(marker):
+            return  # a racer published while we waited
+        _sweep_dead(root)
+        shutil.rmtree(root, ignore_errors=True)  # marker-less: debris
+        stage = f"{root}.stage.{os.getpid()}"
+        shutil.rmtree(stage, ignore_errors=True)  # this pid's prior crash
+        os.makedirs(stage)
+        build(stage)
+        # breadcrumb BEFORE the marker: marker implies a complete landing
+        # including the _source the vintage sweep keys on
+        Path(os.path.join(stage, "_source")).write_text(sf_dir.rstrip("/"))
+        Path(os.path.join(stage, "_landed_ok")).write_text("ok")
         os.rename(stage, root)
+
+
+def _sweep_vintages(root: str, sf_dir: str) -> None:
+    """Reclaim cache roots of OLD VINTAGES of the same ``sf_dir`` (r9
+    ADVICE): regenerated testdata changes the fingerprint key, so the
+    previous landing can never be reused — without this sweep each
+    regeneration leaks a parquet tree in tempdir indefinitely. Every
+    landing records its sf_dir in a ``_source`` breadcrumb (written
+    before the marker, so marker implies breadcrumb); a sibling key dir
+    with the SAME source but a different key is definitively an
+    orphaned vintage. Keys of OTHER sf_dirs (a concurrent sf0.001 run
+    beside this sf0.01 one) are live caches and are left alone — which
+    is why a blanket different-key sweep would be wrong. Pre-breadcrumb
+    key dirs are aged out after a day instead (source unknowable)."""
+    import os
+    import shutil
+    import time
+
+    parent, cur = os.path.dirname(root), os.path.basename(root)
+    try:
+        names = os.listdir(parent)
     except OSError:
-        shutil.rmtree(stage, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise RuntimeError(
-                f"{label} landing claim failed twice for {root}; "
-                "remove the directory and retry"
-            )
+        return
+    for name in names:
+        # stages carry a "." (_sweep_dead's job), as does the lock file
+        if name == cur or "." in name:
+            continue
+        path = os.path.join(parent, name)
+        src = os.path.join(path, "_source")
+        try:
+            if os.path.exists(src):
+                with open(src) as fh:
+                    same = fh.read() == sf_dir.rstrip("/")
+                if same:
+                    shutil.rmtree(path, ignore_errors=True)
+            elif time.time() - os.path.getmtime(path) > 86400:
+                shutil.rmtree(path, ignore_errors=True)
+        except OSError:
+            pass
+
+
+def _sweep_dead(root: str) -> None:
+    """Reclaim dirs left by CRASHED landings (round-9 review): a
+    SIGKILLed process leaks its ``{root}.stage.{pid}`` parquet tree
+    forever — sweep ``{root}.<tag>.{pid}`` siblings (stages, and the
+    move-aside dirs of the pre-lock protocol) whose pid is no longer
+    alive (the write-fence PID-liveness idiom, ``operators/upsert.py``)."""
+    import os
+    import shutil
+
+    parent, base = os.path.dirname(root), os.path.basename(root)
+    try:
+        names = os.listdir(parent)
+    except OSError:
+        return
+    for name in names:
+        pid_s = name.rsplit(".", 1)[-1]
+        if (
+            name.startswith(base + ".")
+            and pid_s.isdigit()
+            and int(pid_s) != os.getpid()
+        ):
+            try:
+                os.kill(int(pid_s), 0)
+            except ProcessLookupError:
+                shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+            except OSError:
+                pass  # alive but not ours (EPERM): leave it
 
 
 # ===========================================================================
@@ -6117,7 +5824,7 @@ def _q136_prepare(spark: SparkSession, sf_dir: str) -> None:
             ).awaitTermination()
         dedup.minhash_index_delete(spark, idx, list(_Q136_TOMB))
 
-    _staged_publish(_q136_root(sf_dir), sf_dir, build, "q136")
+    _staged_publish(_q136_root(sf_dir), sf_dir, build)
 
 
 @query(
@@ -6240,7 +5947,7 @@ def _q137_prepare(spark: SparkSession, sf_dir: str) -> None:
                 "components_update no-op contract violated"
             )
 
-    _staged_publish(_q137_root(sf_dir), sf_dir, build, "q137")
+    _staged_publish(_q137_root(sf_dir), sf_dir, build)
 
 
 @query(
@@ -6425,7 +6132,7 @@ def _q138_prepare(spark: SparkSession, sf_dir: str) -> None:
                 verify_threshold=0.5, schema=docs.schema,
             ).awaitTermination()
 
-    _staged_publish(_q138_root(sf_dir), sf_dir, build, "q138")
+    _staged_publish(_q138_root(sf_dir), sf_dir, build)
 
 
 @query(

@@ -12,6 +12,7 @@ TIMESTAMP-without-tz semantics (reference normalizes tz away in
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -76,3 +77,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_LOCAL_MASTER = re.compile(r"local(\[(\d+|\*)(\s*,\s*\d+)?\])?")
+
+
+def accumulators_exact(master: str) -> bool:
+    """True iff ``master`` runs every task in the driver JVM (``local``,
+    ``local[N]``, ``local[*]``, ``local[N,F]``). Only there can no stage
+    be resubmitted after a shuffle-fetch failure, so accumulator-backed
+    ``observe()`` metrics are exact. ``local-cluster[...]`` runs separate
+    executor JVMs and, like every real cluster master, is not exact."""
+    return _LOCAL_MASTER.fullmatch(master) is not None

@@ -1903,6 +1903,31 @@ def test_pagerank_rejects_negative_weights(spark):
             pagerank(edges, n_iter=1, weight_col="wt")
 
 
+@pytest.mark.parametrize(
+    "master, exact",
+    [
+        ("local", True),
+        ("local[4]", True),
+        ("local[*]", True),
+        ("local[4,2]", True),
+        ("local-cluster[2,1,1024]", False),
+        ("spark://host:7077", False),
+        ("yarn", False),
+        ("k8s://https://host:443", False),
+    ],
+)
+def test_accumulators_exact_only_on_single_jvm_local(master, exact):
+    """The observe() fast paths in pagerank and the star closure trust
+    accumulators only where no stage can be resubmitted: local-cluster
+    runs separate executor JVMs, so it takes the agg path like any
+    cluster master."""
+    from data_engineering_task_adtech_data_pipeline_spark.session import (
+        accumulators_exact,
+    )
+
+    assert accumulators_exact(master) is exact
+
+
 def test_prefix_sum_release_persisted(spark):
     """distributed_prefix_sum registers its persisted frame; the release
     helper drains the registry, and releasing does not change results

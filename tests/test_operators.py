@@ -1240,5 +1240,8 @@ def test_merge_delete_and_schema_evolution_parquet(spark, tmp_path):
 
     # narrowing refuses — a whole-row winner would silently NULL `val`
     narrow = spark.createDataFrame([(1, 3)], "k long, ver long")
+    spark.catalog.clearCache()  # only this call's persist is under test
     with pytest.raises(ValueError, match="widening-only"):
         merge_upsert(narrow, path2, keys=["k"], version="ver", num_buckets=8)
+    # the refused merge released its persisted source
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

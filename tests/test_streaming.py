@@ -1087,8 +1087,8 @@ def test_q131_landing_protocol_branches(spark, tmp_path):
     """Round-9 review hardening: the q131 streaming-landing cache must
     (a) land cold via the atomic staged claim and serve counts equal to
     the batch GROUP BY, (b) no-op when warm (no file churn), and
-    (c) recover from pre-protocol debris — a marker-less root — by
-    moving it aside and re-landing. Runs against a synthetic tmp sf_dir
+    (c) recover from debris — a marker-less root — by clearing it under
+    the claim lock and re-landing. Runs against a synthetic tmp sf_dir
     so the real testdata cache keys are untouched."""
     import os
     import shutil
@@ -1159,7 +1159,7 @@ def test_q131_landing_protocol_branches(spark, tmp_path):
     _q131_prepare(spark, sf_dir)
     assert sorted(os.listdir(silver_dir)) == before
 
-    # (c) marker-less debris root: moved aside, fresh landing claims
+    # (c) marker-less debris root: cleared, fresh landing claims
     os.remove(os.path.join(root, "_landed_ok"))
     _q131_prepare(spark, sf_dir)
     assert os.path.exists(os.path.join(root, "_landed_ok"))
@@ -1209,6 +1209,80 @@ def test_q131_landing_protocol_branches(spark, tmp_path):
     shutil.rmtree(no_crumb, ignore_errors=True)
     shutil.rmtree(root, ignore_errors=True)
     shutil.rmtree(live_stage, ignore_errors=True)
+
+
+_RACER = """
+import os, sys, time
+
+from data_engineering_task_adtech_data_pipeline_spark.plans.battery_ext import (
+    _staged_publish,
+)
+
+root, sf_dir, log, go = sys.argv[1:5]
+open(f"{go}.ready.{os.getpid()}", "w").close()
+while not os.path.exists(go):
+    time.sleep(0.005)
+
+
+def build(stage):
+    with open(log, "a") as fh:
+        fh.write(f"{os.getpid()}\\n")
+    time.sleep(1.0)
+    with open(os.path.join(stage, "payload"), "w") as fh:
+        fh.write("built")
+
+
+_staged_publish(root, sf_dir, build)
+"""
+
+
+def test_staged_publish_two_process_race_builds_once(tmp_path):
+    """Two OS processes first-touch one cache root at the same moment:
+    the family lock lets exactly one of them build, the other waits and
+    reuses the published landing, and no stage or move-aside sibling is
+    left behind."""
+    import os
+    import subprocess
+    import sys
+    import time
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    root = tmp_path / "family" / "0123456789ab"
+    log = tmp_path / "builds.log"
+    go = tmp_path / "go"
+    env = dict(os.environ, PYTHONPATH=str(repo))
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _RACER, str(root), str(sf_dir), str(log),
+             str(go)],
+            cwd=repo, env=env, stderr=subprocess.PIPE, text=True,
+        )
+        for _ in range(2)
+    ]
+    deadline = time.time() + 120
+    while len(list(tmp_path.glob("go.ready.*"))) < 2:
+        assert time.time() < deadline, "racers never became ready"
+        assert all(p.poll() is None for p in procs), [
+            p.stderr.read() for p in procs if p.poll() is not None
+        ]
+        time.sleep(0.01)
+    go.touch()  # release both racers at once
+    for p in procs:
+        _, err = p.communicate(timeout=120)
+        assert p.returncode == 0, err
+
+    assert len(log.read_text().split()) == 1  # exactly one build ran
+    assert (root / "_landed_ok").exists()
+    assert (root / "_source").read_text() == str(sf_dir)
+    assert (root / "payload").read_text() == "built"
+    leftovers = [
+        n for n in os.listdir(root.parent)
+        if ".stage." in n or ".stale." in n
+    ]
+    assert leftovers == []
 
 
 @pytest.mark.slow

@@ -111,3 +111,23 @@ def test_unnormalized_flag_and_movers(tmp_path):
     assert s["normalized"] is False
     assert [m["query"] for m in s["movers_beyond_band"]] == ["q2"]
     assert s["movers_beyond_band"][0]["norm_ratio"] is None
+
+
+def test_interleaved_aggregate_tolerates_missing_queries_and_keeps_errors():
+    spec = importlib.util.spec_from_file_location(
+        "interleaved_ab", TOOLS / "interleaved_ab.py"
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    runs = [
+        {"queries": {"q1": 1.0, "q2": 3.0}, "errors": {"q9": "boom A"}},
+        {"errors": {"q9": "boom B"}},  # a run whose detail lacks queries
+        {"queries": {"q1": 2.0}, "errors": {"q9": "boom C"}},
+    ]
+    agg = m.aggregate(runs)
+    assert agg["queries_median"] == {"q1": 1.5, "q2": 3.0}
+    assert agg["per_run_totals"] == [4.0, 0, 2.0]
+    # every run's failure survives, keyed by run index
+    assert agg["errors"] == {
+        "run0:q9": "boom A", "run1:q9": "boom B", "run2:q9": "boom C",
+    }

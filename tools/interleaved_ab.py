@@ -88,9 +88,15 @@ def aggregate(runs: list[dict]) -> dict:
             "procs32_s": round(statistics.median(probes), 3) if probes else None,
             "all_procs32_s": probes,
         },
-        "per_run_totals": [round(sum(r["queries"].values()), 3) for r in runs],
+        "per_run_totals": [
+            round(sum(r.get("queries", {}).values()), 3) for r in runs
+        ],
         "per_run_walls": [r.get("_invocation_wall_s") for r in runs],
-        "errors": {k: v for r in runs for k, v in (r.get("errors") or {}).items()},
+        "errors": {
+            f"run{i}:{k}": v
+            for i, r in enumerate(runs)
+            for k, v in (r.get("errors") or {}).items()
+        },
     }
 
 
