@@ -168,25 +168,6 @@ def main() -> None:
         for name in timings
         if name not in errors
     }
-    # legacy count-action pass: r1-r5 benches timed df.count(); keep one
-    # warm count-action timing per query in the detail file so cross-round
-    # per-query comparisons stay possible (stdout + headline totals use
-    # the honest noop action only)
-    legacy: dict[str, float] = {}
-    legacy_errors: dict[str, str] = {}
-    for name, fn in queries.items():
-        t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            df.count()
-            legacy[name] = round(time.time() - t0, 3)
-        except Exception as exc:
-            # failed entries get NO timing (a time-to-exception would
-            # read as a speedup in cross-round diffs of this dict, its
-            # whole purpose) — only an error record
-            legacy_errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-        chunking.release_persisted()
-
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
@@ -209,14 +190,11 @@ def main() -> None:
         "n_runs": n_runs,
         "queries_median": median3,
         "median_total": round(sum(median3.values()), 3),
-        "legacy_count_action_queries": legacy,
         "cpu_probe": cpu_probe,
     }
     if errors:
         detail["errors"] = errors
         detail["errored_run0_timings"] = errored_timings
-    if legacy_errors:
-        detail["legacy_count_action_errors"] = legacy_errors
     if prepare_errors:
         detail["prepare_errors"] = prepare_errors
     detail_path.write_text(json.dumps(detail, indent=1) + "\n")

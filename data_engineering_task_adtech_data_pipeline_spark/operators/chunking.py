@@ -12,8 +12,6 @@ via Arrow-batched ``applyInPandas``. No driver loops anywhere.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -65,6 +63,10 @@ def chunk_documents(
 
 
 _PERSISTED_PARTS: list = []
+# (JavaSparkContext, RDD id) per :func:`checkpoint`: holding the frame would
+# pin its JVM objects through py4j (the ContextCleaner could then never
+# reclaim it), and RDD ids restart in every SparkContext
+_CHECKPOINTS: list = []
 
 
 def track_persist(df: DataFrame, storage_level=None, eager: bool = False) -> DataFrame:
@@ -88,27 +90,52 @@ def track_persist(df: DataFrame, storage_level=None, eager: bool = False) -> Dat
     return df
 
 
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` registered for
+    :func:`release_persisted`. Unregistered, the checkpoint's cached
+    blocks outlived the query (``graph.triangle_count`` left both of its
+    checkpoints cached, even after a Python and a JVM GC). The returned
+    frame must not outlive the current query: read after the release it
+    fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, never with wrong
+    rows.
+    Raises ``TypeError`` if the checkpointed plan is not a
+    ``LogicalRDD``."""
+    ck = df.localCheckpoint(eager)
+    plan = ck._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise TypeError(
+            f"localCheckpoint produced a {plan.nodeName()} plan, not a "
+            "LogicalRDD; its RDD cannot be registered for release"
+        )
+    _CHECKPOINTS.append((ck.sparkSession.sparkContext._jsc, plan.rdd().id()))
+    return ck
+
+
 def release_persisted() -> int:
-    """Unpersist every cached frame registered via :func:`track_persist`
-    (the prefix-sum boundary persists and :func:`materialize`'s subtree
-    caches); returns how many were released. Call AFTER the downstream
-    results are materialized (batch harnesses: once per query) — in a
-    long-lived session the caches otherwise accumulate until LRU
-    eviction. Safe to call eagerly: an un-materialized downstream result
-    recomputes through the same pinned RDD graph (see the persist comment
-    in :func:`distributed_prefix_sum`) — every registered frame is a
-    lineage-preserving persist(), never a lineage-truncating
-    checkpoint."""
+    """Free every cache registered via :func:`track_persist` and
+    :func:`checkpoint`; returns how many were freed (a checkpoint the
+    ContextCleaner already reclaimed, or one from a stopped context, is
+    skipped). Call only AFTER the results are consumed (batch harnesses:
+    once per query). A released persist recomputes if used again
+    (lineage-preserving; see :func:`distributed_prefix_sum`), but a
+    released checkpoint is gone: a frame that still reads it fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
     n = 0
     while _PERSISTED_PARTS:
         _PERSISTED_PARTS.pop().unpersist()
         n += 1
+    while _CHECKPOINTS:
+        jsc, rdd_id = _CHECKPOINTS.pop()
+        if jsc.sc().isStopped():
+            continue
+        rdd = jsc.getPersistentRDDs().get(rdd_id)
+        if rdd is not None:
+            rdd.unpersist(False)
+            n += 1
     return n
 
 
-_MATERIALIZE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", str(256 << 20))
-)
+_MATERIALIZE_MIN_BYTES = 256 << 20  # see materialize
 
 
 def plan_size_estimate(df: DataFrame) -> int:
@@ -125,7 +152,7 @@ def plan_size_estimate(df: DataFrame) -> int:
     return int(str(size))
 
 
-def materialize(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Size-gated EAGER materialization of a multiply-consumed subtree
     (optimization round 15; guide §2.4/§5).
 
@@ -139,14 +166,12 @@ def materialize(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
     catastrophic (re-running a 100 TB text explode per consumer). This
     helper encodes the trade:
 
-    - Below ``min_bytes`` (default 256 MiB,
-      ``$SPARK_GRAFT_MATERIALIZE_MIN_BYTES``): return ``df`` unchanged —
-      consumers recompute, which AQE runs fully parallel inside one job.
+    - Below ``_MATERIALIZE_MIN_BYTES`` (256 MiB of estimated plan
+      size): return ``df`` unchanged — consumers recompute, which AQE
+      runs fully parallel inside one job.
     - At/above: ``persist()`` + one eager ``count()`` job, registered for
-      :func:`release_persisted`. persist (not localCheckpoint) on
-      purpose: lineage survives executor loss, the blocks are released
-      per query by the existing harness discipline instead of
-      accumulating for the session (r14 ADVICE), and downstream plans
+      :func:`release_persisted`. persist (not a checkpoint) on
+      purpose: lineage survives executor loss, and downstream plans
       still collapse to one ``InMemoryRelation`` scan per consumer. The
       eager count exists because the consumers include concurrently-built
       broadcast relations, which all miss a lazily-populated cache in
@@ -155,10 +180,9 @@ def materialize(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
     NOT for iterative loops — a persist keeps the full logical lineage,
     so a loop referencing its own output k times per round grows the
     analyzed plan k^n; iterative operators keep their per-round
-    ``localCheckpoint`` (pagerank, connected components, BPE).
+    :func:`checkpoint` (pagerank, connected components, BPE).
     """
-    threshold = _MATERIALIZE_MIN_BYTES if min_bytes is None else min_bytes
-    if threshold > 0 and plan_size_estimate(df) < threshold:
+    if plan_size_estimate(df) < _MATERIALIZE_MIN_BYTES:
         return df
     return track_persist(df, eager=True)
 

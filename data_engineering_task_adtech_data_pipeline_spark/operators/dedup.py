@@ -32,6 +32,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..session import accumulators_exact
+from .chunking import checkpoint, materialize
 
 # --- engine-portable md5 hash family -------------------------------------
 #
@@ -530,40 +531,6 @@ def ngram_jaccard_pairs(
     return out.where(F.col("jaccard") >= threshold)
 
 
-class ProfileCache:
-    """Deterministic release for ``persist_profile``: the minhash profile
-    is persisted to be scanned three times inside ONE logical dedup call,
-    but the returned frame is lazy, so the operator itself has no safe
-    point to unpersist — without a handle, repeated dedup calls in a
-    long-lived session accumulate cached RDDs until LRU pressure. Pass an
-    instance (or use it as a context manager) and the operator registers
-    every frame it persists; call ``release()`` (or leave the ``with``
-    block) AFTER consuming the result to drop the cache deterministically.
-
-        with ProfileCache() as pc:
-            kept = minhash_dedup(docs, persist_profile=True, profile_cache=pc)
-            kept.write.parquet(out)   # consume inside the scope
-    """
-
-    def __init__(self) -> None:
-        self._frames: list[DataFrame] = []
-
-    def track(self, df: DataFrame) -> DataFrame:
-        self._frames.append(df)
-        return df
-
-    def release(self) -> None:
-        for f in self._frames:
-            f.unpersist()
-        self._frames.clear()
-
-    def __enter__(self) -> "ProfileCache":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
-
 def minhash_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -574,8 +541,6 @@ def minhash_dedup(
     verify_threshold: float | None = 0.8,
     max_shingles: int | None = 512,
     hash_method: str = "xxhash64",
-    persist_profile: bool = False,
-    profile_cache: "ProfileCache | None" = None,
 ) -> DataFrame:
     """Full near-dup removal: MinHash candidates (optionally verified with
     exact Jaccard) → connected-ish grouping by min-id → keep one doc per
@@ -595,16 +560,14 @@ def minhash_dedup(
     branches only collect_set), so their exchanges are not canonically
     identical — measured as three Generate(explode) passes in the plan.
     Locally recompute is cheaper than materializing (the pruned branches
-    each do less work); on a real corpus set ``persist_profile=True`` to
-    pay one full profile pass + storage instead of three scans of the
-    text. The returned frame is lazy, so the operator has no safe point to
-    unpersist automatically: pass a ``ProfileCache`` to release the cache
-    deterministically after consuming the result; without one it lives
-    until session end or LRU eviction.
+    each do less work); at corpus scale the verified profile goes through
+    ``chunking.materialize`` instead — one full profile pass + storage
+    instead of three scans of the text, released by the harness's
+    per-query ``chunking.release_persisted()``.
     """
     cand = _verified_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_k, verify_threshold,
-        max_shingles, hash_method, persist_profile, profile_cache,
+        max_shingles, hash_method,
     )
     drop = cand.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(drop, on=id_col, how="left_anti")
@@ -651,17 +614,14 @@ def _verified_candidates(
     verify_threshold: float | None,
     max_shingles: int | None = 512,
     hash_method: str = "xxhash64",
-    persist_profile: bool = False,
-    profile_cache: "ProfileCache | None" = None,
     max_bucket: int = 64,
 ) -> DataFrame:
     profile = minhash_profile(
         df, text_col, id_col, num_hashes, shingle_k, max_shingles, hash_method
     )
-    if persist_profile and verify_threshold is not None:
-        profile = profile.persist()
-        if profile_cache is not None:
-            profile_cache.track(profile)
+    if verify_threshold is not None:
+        # three consumers (signatures + both verify sides): size-gated
+        profile = materialize(profile)
     cand = minhash_lsh_candidates(
         profile.select(id_col, "signature"),
         id_col,
@@ -693,9 +653,9 @@ def connected_components(
     but a path-shaped component longer than ``max_iterations`` would be
     silently split. For adversarial/giant components use
     ``connected_components_star`` (O(log^2 n) regardless of shape).
-    Iterations checkpoint via ``localCheckpoint`` to cut the growing lineage
-    (the standard Spark iterative-algorithm pattern); the loop exits early
-    when no label changes.
+    Iterations checkpoint via ``chunking.checkpoint`` to cut the growing
+    lineage (the standard Spark iterative-algorithm pattern); the loop
+    exits early when no label changes.
 
     Returns (id, component) with component = min id in the group.
     """
@@ -706,7 +666,7 @@ def connected_components(
     )
     # checkpoint BEFORE deriving labels: otherwise the initial label frame
     # re-executes the whole upstream candidate pipeline a second time
-    sym = sym.localCheckpoint()
+    sym = checkpoint(sym)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -739,7 +699,7 @@ def connected_components(
             )
             .drop("__old")
         )
-        labels = updated.localCheckpoint()
+        labels = checkpoint(updated)
         if not obs.get["changed"]:
             break
     return labels
@@ -789,11 +749,11 @@ def connected_components_star(
 
     def _observed_checkpoint(ed: DataFrame):
         if not _local:
-            ck = ed.localCheckpoint()
+            ck = checkpoint(ed)
             row = ck.agg(*_checks).first()
             return ck, (row["n"], row["h"])
         obs = Observation()
-        ck = ed.observe(obs, *_checks).localCheckpoint()
+        ck = checkpoint(ed.observe(obs, *_checks))
         row = obs.get
         return ck, (row["n"], row["h"])
 
@@ -895,7 +855,7 @@ def update_components(
     )
     # (1) one scan of the big table, batch side broadcast: the assignment
     # rows whose id is an incoming endpoint (batch-sized output)
-    touched = a.join(F.broadcast(endpoints), "id").localCheckpoint()
+    touched = checkpoint(a.join(F.broadcast(endpoints), "id"))
     # contract each endpoint to its existing root where known, else itself
     ra = touched.select(
         F.col("id").alias("id_a"), F.col("component").alias("__ra")
@@ -917,7 +877,7 @@ def update_components(
     # roots ∪ brand-new ids, so min label == global min of the merged
     # group. Checkpointed (the star rounds already ran eagerly) so the
     # closure's internal tiny-frame joins don't appear in the serving plan.
-    labels = connected_components_star(contracted, max_iterations).localCheckpoint()
+    labels = checkpoint(connected_components_star(contracted, max_iterations))
     old_roots = touched.select(F.col("component").alias("id")).distinct()
     remap = (
         labels.join(F.broadcast(old_roots), "id")
@@ -965,8 +925,6 @@ def minhash_dedup_transitive(
     max_shingles: int | None = 512,
     hash_method: str = "xxhash64",
     cc: str = "propagation",
-    persist_profile: bool = False,
-    profile_cache: "ProfileCache | None" = None,
 ) -> DataFrame:
     """Near-dup removal with FULL transitive closure: verified candidate
     pairs → connected components → keep the min-id doc per component.
@@ -978,11 +936,10 @@ def minhash_dedup_transitive(
     (large-star/small-star, O(log^2 n) rounds independent of component
     shape — the safe choice when boilerplate corpora can chain thousands
     of docs into one giant component). Identical output either way
-    (equivalence-tested); measured the same wall-time at sf0.1.
-    ``persist_profile`` / ``profile_cache``: see ``minhash_dedup``."""
+    (equivalence-tested); measured the same wall-time at sf0.1."""
     cand = _verified_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_k, verify_threshold,
-        max_shingles, hash_method, persist_profile, profile_cache,
+        max_shingles, hash_method,
     )
     if cc not in ("propagation", "star"):
         raise ValueError(f"unknown cc strategy: {cc!r}")
@@ -1013,9 +970,11 @@ def benchmark_grams(
     hash_method: str = "xxhash64",
 ) -> DataFrame:
     """DISTINCT normalized ``ngram_k``-gram hash set of an eval benchmark —
-    the static side of decontamination. Precompute once and ``.cache()`` it
-    when scrubbing many corpora (or streaming micro-batches) against the
-    same suite, so the benchmark is shingled exactly once."""
+    the static side of decontamination. Precompute once and persist it
+    through ``chunking.track_persist`` (as ``streaming.stream_decontaminate``
+    does) when scrubbing many corpora (or streaming micro-batches) against
+    the same suite, so the benchmark is shingled exactly once and the
+    cache is freed by ``chunking.release_persisted()``."""
     return (
         shingle_rows(benchmark, text_col, id_col, k=ngram_k, max_shingles=None)
         .select(_gram_hash(hash_method).alias("__g"))
@@ -1289,8 +1248,6 @@ def duplicate_spans(
     k: int = 13,
     min_docs: int = 2,
     hash_method: str = "xxhash64",
-    persist_rows: bool = False,
-    profile_cache: "ProfileCache | None" = None,
 ) -> DataFrame:
     """Span-granular duplicate detection — the substring-level dedup step
     of Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -1328,13 +1285,13 @@ def duplicate_spans(
     Unlike the minhash profile — where the pruned branches are cheap and
     recompute wins locally — here each branch rebuilds every k-word gram
     STRING, and the measured crossover flips early: at 200k docs x 60
-    words on local[32], recompute 105 s vs ``persist_rows=True`` 56 s
-    (SCALING.md). Set ``persist_rows=True`` on any real corpus; pass a
-    ``ProfileCache`` to release the cached (id, pos, 8-byte hash) rows
-    deterministically. The gram equi-join broadcasts only when AQE sizes
-    the frequency table under the threshold; at scale it is a
-    co-partitioned hash join (both sides already hashed on ``h`` by the
-    agg).
+    words on local[32], recompute 105 s vs persisted rows 56 s
+    (SCALING.md). The (id, pos, 8-byte hash) rows therefore go through
+    ``chunking.materialize``: recomputed below its size gate, persisted
+    at corpus scale and freed by ``chunking.release_persisted()``. The
+    gram equi-join broadcasts only when AQE sizes the frequency table
+    under the threshold; at scale it is a co-partitioned hash join (both
+    sides already hashed on ``h`` by the agg).
     """
     if hash_method == "md5":
         gram_hash = lambda c: md5_long(c)  # noqa: E731
@@ -1368,10 +1325,7 @@ def duplicate_spans(
             gram_hash(F.col("pg.g")).alias("h"),
         )
     )
-    if persist_rows:
-        rows = rows.persist()
-        if profile_cache is not None:
-            profile_cache.track(rows)
+    rows = materialize(rows)
     dup_grams = (
         rows.groupBy("h")
         .agg(F.count_distinct("id").alias("df"))
@@ -1511,8 +1465,6 @@ def collapse_duplicates(
     cc: str = "star",
     cluster_col: str = "cluster",
     size_col: str = "cluster_size",
-    persist_profile: bool = False,
-    profile_cache: "ProfileCache | None" = None,
 ) -> DataFrame:
     """Quality-aware duplicate-cluster collapse: group near-duplicates by
     full transitive closure, then keep the BEST row of each cluster by
@@ -1537,7 +1489,7 @@ def collapse_duplicates(
     """
     cand = _verified_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_k, verify_threshold,
-        max_shingles, hash_method, persist_profile, profile_cache,
+        max_shingles, hash_method,
     )
     if cc not in ("propagation", "star"):
         raise ValueError(f"unknown cc strategy: {cc!r}")
@@ -2160,7 +2112,7 @@ def minhash_index_dedup(
         # stored bands scan). Only on the micro-batch contract path —
         # an unbounded batch (broadcast_batch=False) must not be
         # checkpointed wholesale.
-        prof_new = prof_new.localCheckpoint()
+        prof_new = checkpoint(prof_new)
     # Semantically a no-op (the profile groupBy only emits docs with >= 1
     # shingle) — but it is a "likely selective" predicate in Catalyst's
     # PartitionPruning rule, which is what makes the rule insert dynamic
@@ -2483,9 +2435,9 @@ def components_update(spark, root: str, new_edges: DataFrame,
     cur = components_read(spark, root)
     # materialize the (batch-sized) changed set once: the count decides
     # whether to write at all, and the write then reuses the same rows
-    changed = update_components(
-        cur, new_edges, max_iterations, changed_only=True
-    ).localCheckpoint()
+    changed = checkpoint(
+        update_components(cur, new_edges, max_iterations, changed_only=True)
+    )
     n = changed.count()
     if n == 0:
         return 0

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import accumulators_exact
+from .chunking import checkpoint
 
 _DEC = "decimal(28,12)"
 
@@ -192,10 +193,10 @@ def pagerank(
                 from pyspark.sql import Observation
 
                 obs = Observation()
-                rank = new_rank.observe(obs, dangling_sum).localCheckpoint()
+                rank = checkpoint(new_rank.observe(obs, dangling_sum))
                 dm = F.lit(obs.get["__dm"]).cast(_DEC)
             else:
-                rank = new_rank.localCheckpoint()
+                rank = checkpoint(new_rank)
                 row = rank.where(F.col("out_weight") == 0.0).agg(
                     dangling_sum
                 ).first()
@@ -204,7 +205,7 @@ def pagerank(
             # materialize the init frame so the returned rows do not
             # depend on the persisted base released in `finally` (the
             # loop's own checkpoints already guarantee this otherwise)
-            rank = rank.localCheckpoint()
+            rank = checkpoint(rank)
         return rank.select("node", "rank", "out_weight")
     finally:
         base.unpersist()
@@ -249,19 +250,18 @@ def triangle_count(
     # SLOWER and an eager persist()+count() variant 1.14x slower
     # (plans/r15/ab_q90_q107.json, ab_q107_persist.json) — the
     # checkpoint's task count is 5x lower than the cached-scan form (80
-    # vs 451). Block lifetime: localCheckpoint blocks are reclaimed by
-    # the ContextCleaner once the frame's last reference drops (per
-    # query in the bench/oracle harnesses); executor loss invalidates
-    # them — acceptable for a single-query intermediate, documented
-    # rather than traded for the measured-slower persist (r14 ADVICE).
-    e = (
+    # vs 451). Block lifetime: both checkpoints are registered with
+    # chunking and freed by the harness's per-query release_persisted();
+    # executor loss invalidates them — acceptable for a single-query
+    # intermediate, documented rather than traded for the
+    # measured-slower persist (r14 ADVICE).
+    e = checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("n"))
@@ -270,7 +270,7 @@ def triangle_count(
     )
     du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    ori = (
+    ori = checkpoint(
         e.join(du, "u")
         .join(dv, "v")
         .select(
@@ -283,7 +283,6 @@ def triangle_count(
             .alias("o")
         )
         .select(F.col("o.a").alias("a"), F.col("o.b").alias("b"))
-        .localCheckpoint()
     )
     t2 = ori.select(F.col("a").alias("b"), F.col("b").alias("c"))
     t3 = ori.select(F.col("a").alias("a"), F.col("b").alias("c"))

@@ -39,6 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .chunking import checkpoint
 from .dedup import md5_long
 
 # md5 base hash is 60 bits (15 hex digits); xxhash64 is 64.
@@ -584,14 +585,15 @@ def kmv_intersect_pairs(
     entire point at 100 TB: one scan builds the sketches, every pairwise
     overlap after that is arithmetic.
 
-    The sketch frame is materialized on entry (eager localCheckpoint —
-    it is sketch-sized by contract): it is referenced six times below
-    (stats a/b, common a/b, union a/b), and an unmaterialized ``sk``
+    The sketch frame is materialized on entry (eager
+    ``chunking.checkpoint`` — it is sketch-sized by contract): it is
+    referenced six times below (stats a/b, common a/b, union a/b), and
+    an unmaterialized ``sk``
     re-ran its whole build per reference — q121 measured 80 Exchanges
     from exactly that, against the documented 'one scan' contract. A
     lazy persist is not enough: the broadcast pair relations build
     concurrently at action start and race the unpopulated cache."""
-    sk = sk.select(group_col, "h", "rank").localCheckpoint()
+    sk = checkpoint(sk.select(group_col, "h", "rank"))
     st = _kmv_stats(sk, [group_col], k, method)
     a, b = "__ga", "__gb"
     pairs = (
@@ -796,8 +798,9 @@ def bloom_filter_rows(
     forced broadcast ``num_hashes`` times over — pass False to let the
     optimizer pick the join strategy (shuffle join on ``word``) instead.
 
-    Materialize ``bloom`` before calling (``.localCheckpoint()`` for an
-    in-plan sketch, or read it from storage): this function references
+    Materialize ``bloom`` before calling (``chunking.checkpoint`` for an
+    in-plan sketch, freed by ``chunking.release_persisted()`` once the
+    result is consumed, or read it from storage): this function references
     the sketch frame ``num_hashes`` times, and an unmaterialized sketch
     re-runs its whole build per reference (q139 measured 50 Exchanges
     from exactly that).

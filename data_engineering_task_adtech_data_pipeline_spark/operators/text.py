@@ -13,6 +13,7 @@ import threading
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .chunking import checkpoint, materialize
 from .dedup import normalize_text
 
 # Tiny marker-word inventories per language (n-gram-heuristic lang-id:
@@ -665,7 +666,7 @@ def term_freq(
     it, and feed the same frame to both ``bm25_scores(tf=...)`` and
     their relevance/truth derivation instead of re-exploding the corpus
     per consumer. Lazy — callers that reuse it are responsible for
-    materializing (one localCheckpoint; see bm25_scores)."""
+    materializing (one ``chunking.checkpoint``; see bm25_scores)."""
     words = df.select(
         F.col(id_col).alias("id"),
         F.explode(_word_array(text_col)).alias("term"),
@@ -714,14 +715,14 @@ def bm25_scores(
     # 15: callers evaluating the SAME corpus (truth tables, hybrid arms)
     # pass a pre-materialized ``tf`` (see :func:`term_freq`) so the
     # explode is shared across the whole pipeline, not just within this
-    # call. Checkpoint block lifetime: reclaimed by the ContextCleaner
-    # when the result frame's last reference drops (per query in the
-    # batch harnesses); executor loss invalidates the blocks mid-query —
-    # the documented trade for lineage truncation (an eager
-    # persist+count alternative measured slower at bench scale,
-    # plans/r15/ab_q107_persist.json — same shape, 5x the task count).
+    # call. Checkpoint block lifetime: registered with chunking and freed
+    # by the harness's per-query release_persisted(); executor loss
+    # invalidates the blocks mid-query — the documented trade for lineage
+    # truncation (an eager persist+count alternative measured slower at
+    # bench scale, plans/r15/ab_q107_persist.json — same shape, 5x the
+    # task count).
     if tf is None:
-        tf = term_freq(df, text_col, id_col).localCheckpoint()
+        tf = checkpoint(term_freq(df, text_col, id_col))
     dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = df.select(F.count(F.lit(1)).alias("__n"))
@@ -1005,8 +1006,6 @@ def word_jaccard_topk(
     # runs as one parallel job over MB-scale input), so the recompute
     # stays below the gate and a released persist takes over at corpus
     # scale where a second full explode is the greater evil.
-    from .chunking import materialize
-
     cw = materialize(
         df.select(
             F.col(id_col).alias("cid"),
@@ -1477,7 +1476,7 @@ def bpe_learn_merges(
     re-matches as ``l`` within the round.
 
     ``checkpoint_every`` re-roots the vocabulary frame
-    (``localCheckpoint``) after that many accumulated fold layers
+    (``chunking.checkpoint``) after that many accumulated fold layers
     (round 8 — the graph-iteration discipline from ``operators/graph``):
     each merge nests one higher-order fold into the projection, and past
     a few dozen layers Catalyst analysis/codegen time dominates the
@@ -1566,7 +1565,7 @@ def bpe_learn_merges(
             if checkpoint_every and pending_folds >= checkpoint_every:
                 # lazy checkpoint: materializes inside the NEXT round's
                 # count job instead of paying its own driver round-trip
-                cur = cur.localCheckpoint(eager=False)
+                cur = checkpoint(cur, eager=False)
                 pending_folds = 0
     finally:
         vocab.unpersist()

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, similarity, text
+from ..operators.chunking import checkpoint
 from ..sources.readers import Testdata
 from .battery import query
 
@@ -2668,7 +2669,7 @@ def q80_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation bm25 had already checkpointed internally — term_freq is
     # now computed once, materialized once, and shared by the scorer
     # (tf=...) and the relevance filter (tf >= 3 is the same count)
-    tf = term_freq(docs).localCheckpoint()
+    tf = checkpoint(term_freq(docs))
     results = bm25_scores(docs, qdf, k=5, tf=tf)
     tfc = tf.select(
         F.col("id").alias("doc_id"), "term", F.col("tf").alias("c")
@@ -5927,9 +5928,12 @@ def _q137_prepare(spark: SparkSession, sf_dir: str) -> None:
     def build(stage: str) -> None:
         store = os.path.join(stage, "store")
         docs = Testdata(spark, sf_dir).documents
-        edges = dedup._verified_candidates(
-            docs, "text", "doc_id", 64, 16, 3, 0.5, None, "md5",
-        ).localCheckpoint()  # one shingle pass feeds all three waves
+        # one shingle pass feeds all three waves
+        edges = checkpoint(
+            dedup._verified_candidates(
+                docs, "text", "doc_id", 64, 16, 3, 0.5, None, "md5",
+            )
+        )
         wave = F.pmod(F.col("id_a") + F.col("id_b"), F.lit(3))
         dedup.components_write(
             dedup.connected_components_star(edges.where(wave == 0)), store
@@ -6320,10 +6324,12 @@ def q139_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would all MISS a lazily-populated cache in parallel (measured — the
     # lazy form kept the 50-Exchange runtime), while the checkpoint pays
     # the build exactly once. Values unchanged.
-    bloom = sketch.bloom_merge(
-        sketch.bloom_sketch(member_keys("1-URGENT"), "__k", M, K, "md5"),
-        sketch.bloom_sketch(member_keys("2-HIGH"), "__k", M, K, "md5"),
-    ).localCheckpoint()
+    bloom = checkpoint(
+        sketch.bloom_merge(
+            sketch.bloom_sketch(member_keys("1-URGENT"), "__k", M, K, "md5"),
+            sketch.bloom_sketch(member_keys("2-HIGH"), "__k", M, K, "md5"),
+        )
+    )
     stats = bloom.agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.expr("bit_count(bits)")).cast("long").alias("n_set_bits"),

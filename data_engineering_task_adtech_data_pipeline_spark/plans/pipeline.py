@@ -152,31 +152,29 @@ class Pipeline:
             # recompute the full extract + anti-join lineage (two jobs per
             # table per cycle over the extract)
             upserts = select_changed(extract, changed, keys=keys).persist()
-            n = upserts.count()
-            counts[name] = n
-            if n:
-                # Collect touched buckets BEFORE the silver append: if the
-                # persisted partitions were evicted after the append, the
-                # recomputed lineage's anti-join would run against the
-                # post-append silver state and return empty — silently
-                # dropping buckets from the incremental gold rewrite. Before
-                # the append, any recompute sees the pre-append state and
-                # yields the same bucket set.
-                if incremental_gold:
-                    touched_buckets |= {
-                        r.b
-                        for r in upserts.select(
-                            F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS)).alias("b")
-                        )
-                        .distinct()
-                        .collect()
-                    }
-                upsert_append(
-                    upserts,
-                    self.paths.silver(name),
-                    partition_by=TABLE_PARTITION[name],
-                )
-            upserts.unpersist()
+            try:
+                n = upserts.count()
+                counts[name] = n
+                if n:
+                    # Collect touched buckets BEFORE the silver append: if
+                    # the persisted partitions were evicted after the
+                    # append, the recomputed lineage's anti-join would run
+                    # against the post-append silver state and return
+                    # empty — silently dropping buckets from the
+                    # incremental gold rewrite. Before the append, any
+                    # recompute sees the pre-append state and yields the
+                    # same bucket set.
+                    if incremental_gold:
+                        bucket = F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS))
+                        rows = upserts.select(bucket.alias("b")).distinct()
+                        touched_buckets |= {r.b for r in rows.collect()}
+                    upsert_append(
+                        upserts,
+                        self.paths.silver(name),
+                        partition_by=TABLE_PARTITION[name],
+                    )
+            finally:
+                upserts.unpersist()
         if any(counts.values()):
             if incremental_gold:
                 self.rebuild_reports_incremental(touched_buckets)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.chunking import checkpoint, track_persist
 from ..operators.upsert import upsert_append
 
 EVENT_SCHEMA = T.StructType(
@@ -287,13 +288,16 @@ def stream_decontaminate(
     Scale shape: the benchmark collapses to a DISTINCT set of 8-byte gram
     hashes ONCE (cached here, not re-shingled per batch) and is broadcast
     into every micro-batch's semi-join — per batch the work is one explode +
-    broadcast join, embarrassingly parallel across executors.
+    broadcast join, embarrassingly parallel across executors. The cache is
+    a ``chunking.track_persist`` persist: a ``release_persisted()`` while
+    the stream still runs costs later batches a recompute, never a wrong
+    result.
     """
     from ..operators.dedup import benchmark_grams, decontaminate
 
-    grams = benchmark_grams(
-        benchmark, text_col, id_col, ngram_k, hash_method
-    ).cache()
+    grams = track_persist(
+        benchmark_grams(benchmark, text_col, id_col, ngram_k, hash_method)
+    )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -674,7 +678,8 @@ def stream_dedup_against(
     (shingle the batch, band join against corpus buckets, candidate-local
     Jaccard), never proportional to corpus text. At true scale the profile
     is a persisted table maintained alongside the corpus; the cache here is
-    the session-local equivalent.
+    the session-local equivalent (a ``chunking.track_persist`` persist, so
+    a ``release_persisted()`` mid-stream only costs a recompute).
 
     Same ``foreachBatch`` + epoch-partitioned dynamic-overwrite sink recipe
     as :func:`stream_decontaminate` (and the same reason: the keep-only-
@@ -687,10 +692,12 @@ def stream_dedup_against(
     """
     from ..operators.dedup import dedup_against, minhash_profile
 
-    prof_corp = minhash_profile(
-        corpus, text_col, id_col, num_hashes, shingle_k, max_shingles,
-        hash_method,
-    ).cache()
+    prof_corp = track_persist(
+        minhash_profile(
+            corpus, text_col, id_col, num_hashes, shingle_k, max_shingles,
+            hash_method,
+        )
+    )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1419,7 +1426,12 @@ def stream_dedup_pipeline(
     forced-broadcast serving plan, larger batches fall back to
     ``broadcast_batch=False`` (AQE-chosen shuffle joins — the plan
     that completes where a forced broadcast would fail). NOTE the
-    fallback changes only the physical plan, never which docs survive."""
+    fallback changes only the physical plan, never which docs survive.
+    Each batch's ``chunking.checkpoint`` frames (and, for a batch above
+    ``chunking.materialize``'s size gate, its persisted profile) are
+    registered for ``release_persisted()``: call it between batches
+    (after ``awaitTermination`` for an ``available_now`` run), never
+    while a batch is in flight."""
     from .. import fs
     from ..operators.dedup import (
         MINHASH_DELTA_DIR,
@@ -1463,7 +1475,7 @@ def stream_dedup_pipeline(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch = batch_df.localCheckpoint()
+        batch = checkpoint(batch_df)
         # micro-batch contract guard: the checkpointed batch counts for
         # ~free; an oversized batch (unbounded backfill) downgrades the
         # forced-broadcast serving plan to AQE-chosen joins instead of
@@ -1473,19 +1485,19 @@ def stream_dedup_pipeline(
         # (1) intra-batch pass: verified pairs within the batch under the
         # INDEX's own banding/shingling params, closed transitively; the
         # min-id doc of each intra cluster goes on to probe the corpus
-        intra = _verified_candidates(
-            batch, text_col, id_col, p.num_hashes, p.bands, p.shingle_k,
-            verify_threshold, p.max_shingles, p.hash_method,
-            max_bucket=max_bucket,
-        ).localCheckpoint()
+        intra = checkpoint(
+            _verified_candidates(
+                batch, text_col, id_col, p.num_hashes, p.bands, p.shingle_k,
+                verify_threshold, p.max_shingles, p.hash_method,
+                max_bucket=max_bucket,
+            )
+        )
         intra_drop = (
             connected_components_star(intra)
             .where(F.col("id") != F.col("component"))
             .select(F.col("id").alias(id_col))
         )
-        canon = batch.join(
-            B(intra_drop), id_col, "left_anti"
-        ).localCheckpoint()
+        canon = checkpoint(batch.join(B(intra_drop), id_col, "left_anti"))
         # (2) corpus pass over the intra-survivors only
         links = minhash_index_dedup(
             canon, index_root, text_col, id_col, verify_threshold,
@@ -1494,7 +1506,7 @@ def stream_dedup_pipeline(
         # replay guard: never match a corpus doc whose id arrived in THIS
         # batch (only possible from a partially-committed prior attempt)
         own = batch.select(F.col(id_col).alias("id_b")).distinct()
-        links = links.join(B(own), "id_b", "left_anti").localCheckpoint()
+        links = checkpoint(links.join(B(own), "id_b", "left_anti"))
         dup_ids = links.select(F.col("id_a").alias(id_col)).distinct()
         survivors = canon.join(B(dup_ids), id_col, "left_anti")
         (

@@ -3,6 +3,8 @@ multimodal) on constructed frames with known ground truth."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -915,12 +917,21 @@ def test_resize_images_stub_contract(spark):
         multimodal.resize_images(media, 224, 224, fake=False).collect()
 
 
-def test_minhash_dedup_persist_profile_equivalent(spark):
+def test_minhash_dedup_materialized_profile_equivalent(spark, monkeypatch):
+    from data_engineering_task_adtech_data_pipeline_spark.operators import (
+        chunking,
+    )
+
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    # an RDD-backed frame has no size estimate (it reads as huge), so the
+    # recompute side pins the gate above any estimate
+    monkeypatch.setattr(chunking, "_MATERIALIZE_MIN_BYTES", math.inf)
     plain = {r.doc_id for r in dedup.minhash_dedup(
         df, verify_threshold=0.5).collect()}
+    monkeypatch.setattr(chunking, "_MATERIALIZE_MIN_BYTES", 0)
     persisted = {r.doc_id for r in dedup.minhash_dedup(
-        df, verify_threshold=0.5, persist_profile=True).collect()}
+        df, verify_threshold=0.5).collect()}
+    chunking.release_persisted()
     assert plain == persisted == {1, 4, 5}
 
 
@@ -1026,27 +1037,31 @@ def test_greedy_md5_shard_hash_matches_xxhash_semantics(spark):
         )
 
 
-def test_profile_cache_releases_persisted_profile(spark):
-    """ADVICE r4: persist_profile had no unpersist path — repeated dedup
-    calls accumulated cached RDDs for the session lifetime. ProfileCache
-    tracks what the operator persists and releases it deterministically."""
+def test_materialized_profile_released_after_consume(spark, monkeypatch):
+    """ADVICE r4: a persisted minhash profile had no unpersist path —
+    repeated dedup calls accumulated cached RDDs for the session
+    lifetime. Above the materialize gate the profile is registered with
+    chunking, and release_persisted() frees it after the result is
+    consumed."""
+    from data_engineering_task_adtech_data_pipeline_spark.operators import (
+        chunking,
+    )
     from data_engineering_task_adtech_data_pipeline_spark.operators.dedup import (
-        ProfileCache,
         minhash_dedup,
     )
 
     rows = [(i, f"common shingle text body number {i % 7} padding words") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    with ProfileCache() as pc:
-        kept = minhash_dedup(
-            df, num_hashes=16, bands=8, persist_profile=True, profile_cache=pc
-        )
-        assert kept.count() > 0
-        assert len(pc._frames) == 1
-        assert pc._frames[0].storageLevel.useMemory  # persisted inside scope
-        handle = pc._frames[0]
-    assert not handle.storageLevel.useMemory  # released on scope exit
-    assert pc._frames == []
+    chunking.release_persisted()  # drain anything earlier tests left
+    monkeypatch.setattr(chunking, "_MATERIALIZE_MIN_BYTES", 0)
+    kept = minhash_dedup(df, num_hashes=16, bands=8)
+    assert kept.count() > 0
+    assert len(chunking._PERSISTED_PARTS) == 1
+    handle = chunking._PERSISTED_PARTS[0]
+    assert handle.storageLevel.useMemory  # persisted until the release
+    assert chunking.release_persisted() == 1
+    assert not handle.storageLevel.useMemory
+    assert chunking._PERSISTED_PARTS == []
 
 
 def test_duplicate_spans_and_cut(spark):
@@ -1097,31 +1112,34 @@ def test_cut_spans_rejects_unknown_policy(spark):
         cut_spans(df, sp, keep="both")
 
 
-def test_duplicate_spans_persist_rows_equivalent_and_released(spark):
-    """persist_rows=True (the real-corpus default per SCALING.md) must be
-    result-identical to recompute, and ProfileCache must release the
-    cached gram rows deterministically."""
+def test_duplicate_spans_materialized_rows_equivalent_and_released(
+    spark, monkeypatch
+):
+    """Materialized gram rows (the corpus-scale form per SCALING.md) must
+    be result-identical to recompute, and release_persisted() must free
+    the cached rows once the result is consumed."""
+    from data_engineering_task_adtech_data_pipeline_spark.operators import (
+        chunking,
+    )
     from data_engineering_task_adtech_data_pipeline_spark.operators.dedup import (
-        ProfileCache,
         duplicate_spans,
     )
 
     rows = [(i, f"shared run of words here tail {i % 4} pad{i}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    chunking.release_persisted()  # drain anything earlier tests left
+    monkeypatch.setattr(chunking, "_MATERIALIZE_MIN_BYTES", math.inf)
     base = sorted(map(tuple, duplicate_spans(df, k=4, min_docs=2).collect()))
-    with ProfileCache() as pc:
-        fast = sorted(
-            map(
-                tuple,
-                duplicate_spans(
-                    df, k=4, min_docs=2, persist_rows=True, profile_cache=pc
-                ).collect(),
-            )
-        )
-        assert len(pc._frames) == 1
-        handle = pc._frames[0]
-        assert handle.storageLevel.useMemory
+    assert chunking._PERSISTED_PARTS == []  # below the gate: recompute
+    monkeypatch.setattr(chunking, "_MATERIALIZE_MIN_BYTES", 0)
+    fast = sorted(
+        map(tuple, duplicate_spans(df, k=4, min_docs=2).collect())
+    )
+    assert len(chunking._PERSISTED_PARTS) == 1
+    handle = chunking._PERSISTED_PARTS[0]
+    assert handle.storageLevel.useMemory
     assert fast == base
+    assert chunking.release_persisted() == 1
     assert not handle.storageLevel.useMemory
 
 
@@ -1948,6 +1966,32 @@ def test_prefix_sum_release_persisted(spark):
     assert chunking.release_persisted() == 0
     # post-release re-materialization is identical
     assert sorted((r["id"], r["__cum"]) for r in out.collect()) == before
+
+
+def test_checkpoints_released_per_query(spark):
+    """graph.triangle_count's two eager checkpoints are registered with
+    chunking: once the result is consumed, release_persisted() frees both
+    and no cached RDD is left behind (unregistered, both stayed cached
+    after the query, even across a Python and a JVM GC)."""
+    from data_engineering_task_adtech_data_pipeline_spark.operators import (
+        chunking,
+        graph,
+    )
+
+    chunking.release_persisted()  # drain anything earlier tests left
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)  # bare checkpoints made by earlier tests
+    assert len(jsc.sc().getRDDStorageInfo()) == 0
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 2)], "src long, dst long"
+    )
+    out = graph.triangle_count(edges)
+    got = sorted((r["node"], r["n_triangles"]) for r in out.collect())
+    assert got == [(1, 1), (2, 2), (3, 2), (4, 1)]
+    assert chunking.release_persisted() == 2
+    assert len(jsc.sc().getRDDStorageInfo()) == 0
 
 
 def test_bpe_tokenize_counts_hand_example(spark):
@@ -2884,21 +2928,23 @@ def test_bm25_shared_tf_identical(spark):
     assert tfc == {(1, "slow"), (3, "window")}
 
 
-def test_materialize_gate_and_release(spark):
+def test_materialize_gate_and_release(spark, monkeypatch):
     """Round-15 pin for chunking.materialize: below the size threshold
     the frame is returned UNCHANGED (no persist — bench-scale recompute
-    is the measured-faster form), while min_bytes=0 forces an eager
+    is the measured-faster form), while a zero threshold forces an eager
     persist that release_persisted() then unpersists."""
     from data_engineering_task_adtech_data_pipeline_spark.operators import (
         chunking,
     )
 
     df = spark.range(100).selectExpr("id", "id * 2 AS v")
-    lazy = chunking.materialize(df, min_bytes=1 << 40)
+    monkeypatch.setattr(chunking, "_MATERIALIZE_MIN_BYTES", 1 << 40)
+    lazy = chunking.materialize(df)
     assert lazy is df
     assert chunking.plan_size_estimate(df) > 0
 
-    eager = chunking.materialize(df, min_bytes=0)
+    monkeypatch.setattr(chunking, "_MATERIALIZE_MIN_BYTES", 0)
+    eager = chunking.materialize(df)
     assert eager.storageLevel.useMemory  # persisted (and already counted)
     assert chunking.release_persisted() >= 1
     assert not eager.storageLevel.useMemory

@@ -203,6 +203,35 @@ def test_incremental_gold_survives_cache_eviction(spark, tmp_path, monkeypatch):
     assert got == want
 
 
+def test_track_deltas_releases_upserts_when_append_fails(
+    spark, tmp_path, monkeypatch
+):
+    """The persisted changed-rows frame is released on every exit path:
+    a failing silver append must not leave it in the cache manager."""
+    from data_engineering_task_adtech_data_pipeline_spark.plans import (
+        pipeline as pipeline_mod,
+    )
+
+    def failing_append(df, path, partition_by=None):
+        raise RuntimeError("silver append failed")
+
+    p = Pipeline(spark, str(tmp_path / "lake"), as_of=AS_OF)
+    p.write_bronze(gen_all(spark, GenConfig(advertisers=2,
+                                            campaigns_per_advertiser=2,
+                                            impressions_per_campaign=40)))
+    p.initial_load()
+    p.append_bronze(gen_all(
+        spark,
+        GenConfig(advertisers=1, campaigns_per_advertiser=1,
+                  impressions_per_campaign=30, seed=5, id_offset=60),
+    ))
+    monkeypatch.setattr(pipeline_mod, "upsert_append", failing_append)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="silver append failed"):
+        p.track_deltas()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pipeline_on_uri_scheme_root(spark, tmp_path):
     """The whole lake must work through a URI-scheme root (file://...) —
     the shape of every non-local deployment. Regression for the round-4

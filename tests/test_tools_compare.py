@@ -27,14 +27,12 @@ def test_series_and_probe_detection():
     detail = {
         "queries": {"q1": 2.0},
         "queries_median": {"q1": 1.5},
-        "legacy_count_action_queries": {"q1": 1.0},
         "cpu_probe": {"single_s": 2.0, "procs32_s": 4.0},
     }
     # _series returns (values, label-actually-used) since round 14 so an
     # adjudication records which leg it compared
     assert m._series(detail, "median", "sf1") == ({"q1": 1.5}, "median")
     assert m._series(detail, "single", "sf1") == ({"q1": 2.0}, "single")
-    assert m._series(detail, "legacy", "sf1") == ({"q1": 1.0}, "legacy")
     assert m._probe(detail) == 4.0
     sf1 = {"queries": {"q1": {"sf0.1_sec": 1.0, "sf1_sec": 7.0, "ratio": 7.0}}}
     assert m._series(sf1, "median", "sf1") == ({"q1": 7.0}, "sf1-leg:sf1_sec")

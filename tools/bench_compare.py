@@ -14,8 +14,7 @@ queries run on local[32], so multi-core throughput (which sees hypervisor
 caps/steal that the single leg can miss) is the relevant box speed.
 
 Accepted file shapes (auto-detected):
-  - BENCH_DETAIL.json style: {queries, queries_median,
-    legacy_count_action_queries, cpu_probe, ...}
+  - BENCH_DETAIL.json style: {queries, queries_median, cpu_probe, ...}
   - BENCH_r{N}.json driver wrapper: {parsed: {queries, ...}} (no probe —
     ratios print raw, flagged UNNORMALIZED)
   - BENCH_SF1_r{N}.json: {queries: {name: {"sf0.1_sec": .., "sf1_sec": ..,
@@ -23,7 +22,7 @@ Accepted file shapes (auto-detected):
 
 Usage:
   python tools/bench_compare.py OLD.json NEW.json
-      [--series median|single|legacy] [--sf1-leg sf1|sf0.1]
+      [--series median|single] [--sf1-leg sf1|sf0.1]
       [--band 1.25] [--json OUT.json]
 
 Exit status is always 0 — the tool adjudicates, it does not gate.
@@ -58,8 +57,6 @@ def _series(d: dict, series: str, sf1_leg: str) -> tuple[dict[str, float], str]:
     if series == "median":
         got = d.get("queries_median")
         return (got, "median") if got else (qs, "single (no median recorded)")
-    if series == "legacy":
-        return d.get("legacy_count_action_queries") or {}, "legacy"
     return qs, "single"
 
 
@@ -87,8 +84,8 @@ def main() -> None:
             out_json = argv[i + 1]; i += 2
         else:
             paths.append(a); i += 1
-    if series not in ("median", "single", "legacy"):
-        sys.exit(f"unknown --series {series!r}: expected median|single|legacy")
+    if series not in ("median", "single"):
+        sys.exit(f"unknown --series {series!r}: expected median|single")
     if sf1_leg not in ("sf1", "sf0.1"):
         sys.exit(f"unknown --sf1-leg {sf1_leg!r}: expected sf1|sf0.1")
     if len(paths) != 2:

@@ -124,7 +124,7 @@ def main() -> int:
         t0 = time.time()
         sdf = fn(spark, sf_dir)
         spark_pdf = sdf.toPandas()
-        chunking.release_persisted()  # drop per-query prefix-sum caches
+        chunking.release_persisted()  # drop per-query caches and checkpoints
         if name not in oracles:
             problems = []
             try:
