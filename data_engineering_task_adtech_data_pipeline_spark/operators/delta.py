@@ -3,18 +3,19 @@
 The reference detects changes by fetching *every* key's watermark tuple to
 the Airflow worker and doing a Python ``set`` difference
 (``dags/track_delta.py:121-123, 284-286, 386-388``), then inlines the changed
-keys back into SQL as a ``VALUES (%s,%s,%s)...`` literal list
-(``:127-128, 191-194``). Both patterns are O(keys) on a single node and die
-at 100 TB. Here the same semantics are a 2-join dataflow that never leaves
-the cluster:
+keys back into SQL as a ``VALUES (%s,%s,%s)...`` literal list and re-runs
+the extract joined to it (``:127-128, 191-216``). Both steps are O(keys) on
+a single node and die at 100 TB. Here the two steps are one anti-join that
+never leaves the cluster:
 
-    changed = oltp_watermarks LEFT ANTI olap_watermarks ON keys+[version]
-    upserts = full_extract    LEFT SEMI changed          ON keys+[version]
+    upserts = full_extract LEFT ANTI olap_state ON keys+[version]
 
-The anti-join replaces the set difference; the semi-join replaces the VALUES
-literal re-extract (``track_delta.py:191-216``). Changed-key sets are small
-relative to the fact tables, so Spark's AQE broadcasts them automatically;
-``broadcast_changed=True`` forces the hint.
+An extract row whose ``keys + [version]`` tuple is absent from the OLAP
+state is exactly a row the reference's set difference flags and its
+``VALUES`` re-extract returns, so the extract is evaluated once per cycle
+instead of once for the difference and again for the re-extract. Rows with
+a NULL key or version are dropped first: the reference's inner join against
+the ``VALUES`` list can never match them (``changed_rows``).
 
 Caveat (inherent to high-watermark CDC, shared with the reference): a new
 row whose timestamp does NOT advance its key's max watermark is invisible to
@@ -59,23 +60,28 @@ def changed_keys(
     )
 
 
-def select_changed(
-    full_extract: DataFrame,
-    changed: DataFrame,
+def changed_rows(
+    extract: DataFrame,
+    olap_state: DataFrame,
     keys: Sequence[str],
     version: str = "rtm_delta",
-    broadcast_changed: bool = True,
 ) -> DataFrame:
-    """Rows of the full extract belonging to changed keys — the reference's
-    INNER JOIN against the VALUES literal CTE (``dags/track_delta.py:191-216``)
-    as a semi-join against the in-engine changed-key frame."""
-    ck = changed.select(*keys, version)
-    if broadcast_changed:
-        ck = F.broadcast(ck)
-    # semi-joins move the join keys to the front; restore the extract's
+    """Rows of the extract whose ``keys + [version]`` tuple is new or moved
+    against the OLAP state — the reference's set difference plus its
+    ``VALUES`` re-extract (``dags/track_delta.py:121-128, 191-216``) as one
+    anti-join, so the extract is evaluated once.
+
+    Equal, duplicates included, to semi-joining the extract against its own
+    ``changed_keys``; rows with a NULL in ``keys + [version]`` are dropped
+    because that semi-join's equi-join can never match them."""
+    on = [*keys, version]
+    fresh = extract
+    for c in on:
+        fresh = fresh.where(F.col(c).isNotNull())
+    # USING joins move the join keys to the front; restore the extract's
     # column order so appended files keep a stable schema
-    return full_extract.join(ck, on=[*keys, version], how="left_semi").select(
-        *full_extract.columns
+    return fresh.join(olap_state.select(*on), on=on, how="left_anti").select(
+        *extract.columns
     )
 
 

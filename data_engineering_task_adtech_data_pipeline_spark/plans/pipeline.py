@@ -3,12 +3,16 @@
 - ``initial_load`` = DAG `initial_load` (``dags/initial_load_generate_postgres_data.py:570-658``):
   bronze → silver (full extract) → gold reports.
 - ``track_deltas`` = DAG `track_deltas` (``dags/track_delta.py:617-664``):
-  watermark extraction → distributed anti-join change detection → semi-join
-  re-extract → versioned append (upsert) → gold rebuild.
+  watermark extraction → change detection (each extract LEFT ANTI its silver
+  state, ``operators.delta.changed_rows``, which is also the reference's
+  ``VALUES`` re-extract) → versioned append (upsert) → gold rebuild.
 
 All the reference's process boundaries (fetchall → XCom → INSERT,
 ``initial_load_generate_postgres_data.py:232-343``) collapse into lazy
 DataFrame lineage; the only materializations are the silver/gold writes.
+Every bronze and silver read uses the table's declared schema
+(``TABLE_SCHEMA``, from ``schemas.py``): no read infers one, and a bronze
+write whose columns differ from it is refused before anything is written.
 
 Scale notes: silver tables are append-only parquet partitioned by nothing at
 test size — at 100 TB partition the daily tables by ``event_date`` (so delta
@@ -25,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fs
-from ..operators.delta import changed_keys, select_changed
+from .. import schemas as S
+from ..operators.delta import changed_rows
 from ..operators.upsert import latest_version, upsert_append
 from .reports import daily_ctr_report, totals_report
 from .silver import advertiser_campaigns, events_daily
@@ -49,6 +54,17 @@ TABLE_PARTITION = {
     "advertiser_campaigns_clicks": ["campaign_clicks_date"],
 }
 DAILY_KEYS = TABLE_KEYS["advertiser_campaigns_impressions"]  # impressions twin
+# declared schema of every bronze and silver table; a partitioned read puts
+# the partition column last whatever its place here, as an inferred read does
+TABLE_SCHEMA = {
+    "advertiser": S.ADVERTISER,
+    "campaign": S.CAMPAIGN,
+    "impressions": S.IMPRESSIONS,
+    "clicks": S.CLICKS,
+    "advertiser_campaigns": S.ADVERTISER_CAMPAIGNS,
+    "advertiser_campaigns_impressions": S.advertiser_campaigns_daily("impressions"),
+    "advertiser_campaigns_clicks": S.advertiser_campaigns_daily("clicks"),
+}
 
 # gold daily report hash-bucket partition count (incremental rebuild grain).
 # The report's campaign_day is a per-campaign ORDINAL (row_number over that
@@ -80,16 +96,31 @@ class Pipeline:
         self.as_of = as_of
 
     # -- bronze -----------------------------------------------------------
-    def write_bronze(self, tables: dict[str, DataFrame]) -> None:
+    def _write_bronze(self, tables: dict[str, DataFrame], mode: str) -> None:
+        # refuse, before writing any table, a frame whose column names or
+        # types (nullability aside) differ from its declared schema: the
+        # pinned read would turn a missing column into NULLs without a word
         for name, df in tables.items():
-            df.write.mode("overwrite").parquet(self.paths.bronze(name))
+            got = [(f.name, f.dataType) for f in df.schema]
+            want = [(f.name, f.dataType) for f in TABLE_SCHEMA[name]]
+            if got != want:
+                raise ValueError(
+                    f"{name}: columns {got} differ from the declared schema {want}"
+                )
+        for name, df in tables.items():
+            df.write.mode(mode).parquet(self.paths.bronze(name))
+
+    def write_bronze(self, tables: dict[str, DataFrame]) -> None:
+        self._write_bronze(tables, "overwrite")
 
     def append_bronze(self, tables: dict[str, DataFrame]) -> None:
-        for name, df in tables.items():
-            df.write.mode("append").parquet(self.paths.bronze(name))
+        self._write_bronze(tables, "append")
+
+    def _read(self, path: str, name: str) -> DataFrame:
+        return self.spark.read.schema(TABLE_SCHEMA[name]).parquet(path)
 
     def bronze(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.paths.bronze(name))
+        return self._read(self.paths.bronze(name), name)
 
     # -- silver extract (shared by both DAG paths) ------------------------
     def _extracts(self) -> dict[str, DataFrame]:
@@ -103,7 +134,7 @@ class Pipeline:
 
     def silver(self, name: str) -> DataFrame:
         """Read-time dedup view = ReplacingMergeTree read semantics."""
-        raw = self.spark.read.parquet(self.paths.silver(name))
+        raw = self._read(self.paths.silver(name), name)
         return latest_version(
             raw,
             keys=TABLE_KEYS[name],
@@ -137,21 +168,19 @@ class Pipeline:
         """
         if not fs.is_dir(self.spark, self.paths.silver("advertiser_campaigns")):
             self.initial_load()
-            return {name: df.count() for name, df in self._extracts().items()}
+            # the silver tables were just written from one extract each
+            return {
+                name: self._read(self.paths.silver(name), name).count()
+                for name in TABLE_KEYS
+            }
         counts: dict[str, int] = {}
         touched_buckets: set[int] = set()
         for name, extract in self._extracts().items():
-            keys = TABLE_KEYS[name]
-            olap_state = self.spark.read.parquet(self.paths.silver(name))
-            changed = changed_keys(
-                extract.select(*keys, "rtm_delta"),
-                olap_state.select(*keys, "rtm_delta"),
-                keys=keys,
-            )
+            olap_state = self._read(self.paths.silver(name), name)
             # persist: the count probe and the append below otherwise each
             # recompute the full extract + anti-join lineage (two jobs per
             # table per cycle over the extract)
-            upserts = select_changed(extract, changed, keys=keys).persist()
+            upserts = changed_rows(extract, olap_state, keys=TABLE_KEYS[name]).persist()
             try:
                 n = upserts.count()
                 counts[name] = n
@@ -193,9 +222,16 @@ class Pipeline:
 
     def _write_daily_ctr(self, report: DataFrame, dynamic: bool = False) -> None:
         path = self.paths.gold("advertiser_campaigns_daily_ctr_report")
-        writer = report.withColumn(
-            "gold_bucket", F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS))
-        ).write.mode("overwrite")
+        # hash-partition by bucket: several tasks write, and each bucket
+        # lands in one task, so as one file
+        tasks = min(GOLD_BUCKETS, self.spark.sparkContext.defaultParallelism)
+        writer = (
+            report.withColumn(
+                "gold_bucket", F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS))
+            )
+            .repartition(tasks, "gold_bucket")
+            .write.mode("overwrite")
+        )
         if dynamic:
             writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.partitionBy("gold_bucket").parquet(path)

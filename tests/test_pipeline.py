@@ -6,8 +6,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_engineering_task_adtech_data_pipeline_spark.operators.upsert import (
+    latest_version,
+)
 from data_engineering_task_adtech_data_pipeline_spark.plans.pipeline import (
     DAILY_KEYS,
+    TABLE_KEYS,
+    TABLE_SCHEMA,
+    TABLE_TIEBREAK,
     TOTALS_KEYS,
     Pipeline,
 )
@@ -262,3 +268,122 @@ def test_pipeline_on_uri_scheme_root(spark, tmp_path):
     # in size, not an exact superset of keys — the URI-path property under
     # test is that the delta cycle LANDS rows through the scheme at all
     assert p.silver("advertiser_campaigns").count() >= 8
+
+
+def _names_types(schema):
+    return [(f.name, f.dataType) for f in schema]
+
+
+def test_extract_and_pinned_silver_schemas_match_declared(pipe, spark):
+    """Each extract produces exactly its declared schema (nullability
+    aside), and a silver read pinned to that schema returns the same
+    columns, in the same order, and the same rows as an inferred read."""
+    for name, extract in pipe._extracts().items():
+        assert _names_types(extract.schema) == _names_types(TABLE_SCHEMA[name]), name
+        pinned = pipe.silver(name)
+        inferred = latest_version(
+            spark.read.parquet(pipe.paths.silver(name)),
+            keys=TABLE_KEYS[name],
+            version="rtm_delta",
+            tiebreak=TABLE_TIEBREAK[name],
+        )
+        assert pinned.columns == inferred.columns, name
+        assert _names_types(pinned.schema) == _names_types(inferred.schema), name
+        assert pinned.exceptAll(inferred).count() == 0, name
+        assert inferred.exceptAll(pinned).count() == 0, name
+
+
+def test_append_bronze_refuses_frame_missing_a_column(pipe):
+    """A frame whose columns differ from the declared bronze schema is
+    refused before anything is written: a pinned read would otherwise
+    read the missing column as NULL."""
+    import os
+
+    path = pipe.paths.bronze("impressions")
+    files_before = sorted(os.listdir(path))
+    rows_before = pipe.bronze("impressions").count()
+    short = pipe.bronze("impressions").limit(5).drop("created_at")
+    with pytest.raises(ValueError, match="impressions"):
+        pipe.append_bronze({"impressions": short})
+    assert sorted(os.listdir(path)) == files_before
+    assert pipe.bronze("impressions").count() == rows_before
+
+
+def _relation_roots(df):
+    """Root path of every file relation the frame's analyzed plan reads,
+    once per occurrence (no cache or exchange reuse applies at that
+    stage)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRelation":
+            paths = leaf.relation().location().rootPaths()
+            roots += [paths.apply(j).toString() for j in range(paths.size())]
+    return roots
+
+
+def test_track_deltas_reads_each_bronze_input_once(spark, tmp_path, monkeypatch):
+    """The changed-rows frame handed to the silver append evaluates its
+    extract once: each bronze input the extract reads is scanned once per
+    table, not once for change detection and again for the re-extract."""
+    from data_engineering_task_adtech_data_pipeline_spark.plans import (
+        pipeline as pipeline_mod,
+    )
+
+    handed = {}
+
+    def capturing_append(df, path, partition_by=None):
+        handed[path.rstrip("/").rsplit("/", 1)[-1]] = _relation_roots(df)
+
+    p = Pipeline(spark, str(tmp_path / "lake"), as_of=AS_OF)
+    p.write_bronze(gen_all(spark, GenConfig(advertisers=2,
+                                            campaigns_per_advertiser=2,
+                                            impressions_per_campaign=40)))
+    p.initial_load()
+    p.append_bronze(gen_all(
+        spark,
+        GenConfig(advertisers=1, campaigns_per_advertiser=2,
+                  impressions_per_campaign=30, seed=5, id_offset=60),
+    ))
+    monkeypatch.setattr(pipeline_mod, "upsert_append", capturing_append)
+    monkeypatch.setattr(Pipeline, "rebuild_reports", lambda self: None)
+    p.track_deltas()
+
+    inputs = {
+        "advertiser_campaigns": ["advertiser", "campaign", "impressions", "clicks"],
+        "advertiser_campaigns_impressions": ["impressions", "campaign"],
+        "advertiser_campaigns_clicks": ["clicks", "campaign"],
+    }
+    assert set(handed) == set(inputs)
+    for table, bronze in inputs.items():
+        scans = [r.rstrip("/").rsplit("/", 1)[-1] for r in handed[table]
+                 if "/bronze/" in r]
+        assert sorted(scans) == sorted(bronze), (table, scans)
+
+
+def test_full_rebuild_writes_one_file_per_gold_bucket(spark, tmp_path):
+    """Each gold bucket of a full rebuild lands as exactly one parquet file,
+    also when AQE does not coalesce the shuffle that feeds the write. The
+    lake has more campaigns than buckets, so buckets share campaigns."""
+    import os
+
+    p = Pipeline(spark, str(tmp_path / "lake"), as_of=AS_OF)
+    p.write_bronze(gen_all(spark, GenConfig(advertisers=10,
+                                            campaigns_per_advertiser=20,
+                                            impressions_per_campaign=5)))
+    p.initial_load()
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        p.rebuild_reports()
+    finally:
+        spark.conf.set(key, prior)
+    path = p.paths.gold("advertiser_campaigns_daily_ctr_report")
+    buckets = [d for d in os.listdir(path) if d.startswith("gold_bucket=")]
+    assert buckets
+    for d in buckets:
+        files = [f for f in os.listdir(os.path.join(path, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)

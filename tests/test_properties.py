@@ -11,8 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from data_engineering_task_adtech_data_pipeline_spark.operators.delta import (
-    changed_keys,
-    select_changed,
+    changed_rows,
 )
 from data_engineering_task_adtech_data_pipeline_spark.operators.joins import asof_join
 
@@ -30,8 +29,8 @@ event_lists = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(before=event_lists, after=event_lists)
 def test_cdc_incremental_equals_full(spark, before, after):
-    """The CDC invariant: applying changed_keys/select_changed to
-    (old_state, new_extract) then unioning the changed rows onto old state
+    """The CDC invariant: applying changed_rows to
+    (new_extract, old_state) then unioning the changed rows onto old state
     (latest-version-wins) equals recomputing the extract from scratch.
 
     Holds under per-key time-advancing arrivals (the event-stream reality);
@@ -53,10 +52,7 @@ def test_cdc_incremental_equals_full(spark, before, after):
 
     old_state = extract(before)
     full = extract(before + after)
-    changed = changed_keys(
-        full.select("k", "rtm_delta"), old_state.select("k", "rtm_delta"), keys=["k"]
-    )
-    upserts = select_changed(full, changed, keys=["k"])
+    upserts = changed_rows(full, old_state, keys=["k"])
 
     # latest-version-wins merge of old state + upserts
     merged = {r.k: (r.rtm_delta, r.n) for r in old_state.collect()}
@@ -64,6 +60,38 @@ def test_cdc_incremental_equals_full(spark, before, after):
         merged[r.k] = (r.rtm_delta, r.n)
     expect = {r.k: (r.rtm_delta, r.n) for r in full.collect()}
     assert merged == expect
+
+
+maybe = st.one_of(st.none(), st.integers(0, 2))
+
+
+@pytest.mark.slow
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    extract=st.lists(st.tuples(maybe, maybe, maybe, st.integers(0, 9)),
+                     min_size=0, max_size=40),
+    state=st.lists(st.tuples(maybe, maybe, maybe), min_size=0, max_size=40),
+)
+def test_changed_rows_equals_semi_join_of_own_anti_join(spark, extract, state):
+    """``changed_rows(E, O)`` equals the two-join composition it replaces
+    (E LEFT SEMI (E's key tuples LEFT ANTI O)), as multisets and column
+    for column, for extracts with duplicate keys, NULL keys and NULL
+    versions."""
+    on = ["a", "b", "v"]
+    e = spark.createDataFrame(extract, "a int, b int, v int, x int")
+    o = spark.createDataFrame(state, "a int, b int, v int")
+    changed = e.select(*on).join(o.select(*on), on=on, how="left_anti")
+    reference = e.join(F.broadcast(changed), on=on, how="left_semi").select(
+        *e.columns
+    )
+    got = changed_rows(e, o, keys=["a", "b"], version="v")
+    assert got.columns == e.columns
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    assert rows(got) == rows(reference)
 
 
 @pytest.mark.slow

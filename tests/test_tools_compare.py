@@ -10,6 +10,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 
@@ -129,3 +131,41 @@ def test_interleaved_aggregate_tolerates_missing_queries_and_keeps_errors():
     assert agg["errors"] == {
         "run0:q9": "boom A", "run1:q9": "boom B", "run2:q9": "boom C",
     }
+
+
+def test_interleaved_perfbench_summary_medians_quartiles_and_wins():
+    spec = importlib.util.spec_from_file_location(
+        "interleaved_ab", TOOLS / "interleaved_ab.py"
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+
+    def run(round_s, setup_s, correct=True, failed=0):
+        return {"correct": correct, "attempted": 2, "failed": failed,
+                "metrics": {"round_s.p50": {"value": round_s, "unit": "s"},
+                            "setup_s": {"value": setup_s, "unit": "s"}}}
+
+    pairs = [
+        (run(7.0, 20.0), run(5.0, 19.0)),
+        (run(7.2, 19.0), run(5.5, 19.5)),
+        (run(7.4, 21.0), run(7.6, 21.0, correct=False, failed=1)),
+        (run(7.6, 18.0), run(5.2, 18.5)),
+        # a run that printed no result line leaves the metric out
+        (run(7.1, 20.0), {"correct": False, "attempted": 0, "failed": 0,
+                          "metrics": {}}),
+    ]
+    s = m.summarize_perfbench(
+        pairs, {"round_s.p50": "lower", "setup_s": "lower"}
+    )
+    r = s["metrics"]["round_s.p50"]
+    assert r["n"] == 4
+    assert r["a"] == pytest.approx({"median": 7.3, "q1": 7.15, "q3": 7.45})
+    assert r["b"]["median"] == pytest.approx(5.35)
+    assert (r["b_wins"], r["b_win_frac"]) == (3, 0.75)
+    assert r["b_better_beyond_a_iqr"] is True  # 1.95 > 0.3
+    st = s["metrics"]["setup_s"]
+    assert (st["a"]["median"], st["b"]["median"]) == (19.5, 19.25)
+    assert st["b_wins"] == 1  # the tie at 21.0 is no win
+    assert st["b_better_beyond_a_iqr"] is False
+    assert s["a"] == {"incorrect_runs": 0, "failed_frac": 0.0}
+    assert s["b"] == {"incorrect_runs": 2, "failed_frac": 0.125}

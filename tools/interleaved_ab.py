@@ -18,10 +18,20 @@ BENCH_DETAIL-shaped file is written per side (queries_median = cross-run
 median, cpu_probe = median probe), and tools/bench_compare.py
 adjudicates the pair.
 
+With ``--perfbench WORKLOAD`` the tool alternates untraced
+``perfbench/run.py --workload WORKLOAD --seed S --seconds 5 --trace 0`` runs
+instead, one pair per seed, switching which checkout runs first from pair
+to pair. For every end-to-end metric the B checkout's BENCHMARK.json
+declares, it prints each side's median and quartiles and the share of
+pairs B wins, and whether the medians differ by more than A's
+interquartile range (``perfbench_summary.json`` in ``--out``).
+
 Usage:
   python tools/interleaved_ab.py --a /root/r13head --b /root/repo \
       --rounds 4 --out /root/repo/plans/r15/ab_start \
       [--label-a r13 --label-b r15] [--sf-dir /root/testdata/sf0.1]
+  python tools/interleaved_ab.py --a ../parent --b . --perfbench etl_wide \
+      --rounds 10 --first-seed 11 --out /tmp/ab_etl
 """
 
 from __future__ import annotations
@@ -100,6 +110,110 @@ def aggregate(runs: list[dict]) -> dict:
     }
 
 
+def run_perfbench(root: Path, workload: str, seed: int) -> dict:
+    """One untraced perfbench run in ``root``: its result line, or an
+    incorrect run without metrics when it printed none."""
+    proc = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", "5", "--trace", "0"],
+        cwd=root, capture_output=True, text=True,
+    )
+    lines = proc.stdout.strip().splitlines()
+    try:
+        result = json.loads(lines[-1])
+    except (IndexError, json.JSONDecodeError):
+        result = {"correct": False, "attempted": 0, "failed": 0, "metrics": {},
+                  "stderr_tail": proc.stderr[-2000:]}
+    result["seed"] = seed
+    return result
+
+
+def _spread(vals: list[float]) -> dict[str, float]:
+    q1 = q3 = vals[0]
+    if len(vals) > 1:
+        q1, _, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+    return {"median": statistics.median(vals), "q1": q1, "q3": q3}
+
+
+def summarize_perfbench(pairs: list[tuple[dict, dict]],
+                        better: dict[str, str]) -> dict:
+    """Per end-to-end metric (``better`` maps its name to "lower" or
+    "higher"): each side's median and quartiles over the pairs where both
+    runs report it, the share of those pairs B wins (a tie is no win), and
+    whether B's median is better than A's by more than A's interquartile
+    range. Also each side's incorrect runs and failed share of
+    operations."""
+    out: dict = {"pairs": len(pairs), "metrics": {}}
+    for name, direction in better.items():
+        both = [(a["metrics"][name]["value"], b["metrics"][name]["value"])
+                for a, b in pairs
+                if name in a.get("metrics", {}) and name in b.get("metrics", {})]
+        if not both:
+            continue
+        sides = {"a": _spread([x for x, _ in both]),
+                 "b": _spread([y for _, y in both])}
+        sign = 1 if direction == "lower" else -1
+        wins = sum(1 for x, y in both if sign * (x - y) > 0)
+        gain = sign * (sides["a"]["median"] - sides["b"]["median"])
+        out["metrics"][name] = {
+            "better": direction,
+            "n": len(both),
+            **sides,
+            "b_wins": wins,
+            "b_win_frac": wins / len(both),
+            "b_better_beyond_a_iqr": gain > sides["a"]["q3"] - sides["a"]["q1"],
+        }
+    for side, idx in (("a", 0), ("b", 1)):
+        runs = [pair[idx] for pair in pairs]
+        attempted = sum(r.get("attempted", 0) for r in runs)
+        out[side] = {
+            "incorrect_runs": sum(1 for r in runs if not r.get("correct")),
+            "failed_frac": (sum(r.get("failed", 0) for r in runs) / attempted
+                            if attempted else None),
+        }
+    return out
+
+
+def perfbench_ab(args, roots: dict[str, Path], out: Path) -> None:
+    label_a, label_b = roots
+    spec = json.loads((roots[label_b] / "BENCHMARK.json").read_text())
+    better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    pairs = []
+    for i in range(args.rounds):
+        seed = args.first_seed + i
+        order = [label_a, label_b] if i % 2 == 0 else [label_b, label_a]
+        res = {}
+        for label in order:
+            res[label] = run_perfbench(roots[label], args.perfbench, seed)
+            (out / f"{label}_{args.perfbench}_seed{seed}.json").write_text(
+                json.dumps(res[label], indent=1) + "\n"
+            )
+            vals = {k: round(v["value"], 3)
+                    for k, v in res[label].get("metrics", {}).items()}
+            print(f"[interleaved_ab] pair {i + 1}/{args.rounds} seed {seed} "
+                  f"{label}: correct={res[label].get('correct')} {vals}",
+                  flush=True)
+        pairs.append((res[label_a], res[label_b]))
+    summary = summarize_perfbench(pairs, better)
+    summary["workload"] = args.perfbench
+    summary["labels"] = {"a": label_a, "b": label_b}
+    (out / "perfbench_summary.json").write_text(
+        json.dumps(summary, indent=1) + "\n"
+    )
+    for name, m in summary["metrics"].items():
+        a, b = m["a"], m["b"]
+        print(f"[interleaved_ab] {args.perfbench} {name} ({m['better']} is "
+              f"better): {label_a} {a['median']:.3f} [{a['q1']:.3f}, "
+              f"{a['q3']:.3f}]  {label_b} {b['median']:.3f} [{b['q1']:.3f}, "
+              f"{b['q3']:.3f}]  {label_b} wins {m['b_wins']}/{m['n']}; "
+              f"better beyond {label_a}'s IQR: {m['b_better_beyond_a_iqr']}",
+              flush=True)
+    for side, label in (("a", label_a), ("b", label_b)):
+        print(f"[interleaved_ab] {label}: incorrect runs "
+              f"{summary[side]['incorrect_runs']}, failed share "
+              f"{summary[side]['failed_frac']}", flush=True)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--a", required=True, help="checkout A (old/baseline)")
@@ -109,11 +223,18 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--out", required=True)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--perfbench", metavar="WORKLOAD",
+                    help="alternate perfbench runs of WORKLOAD instead of bench.py")
+    ap.add_argument("--first-seed", type=int, default=1,
+                    help="perfbench seed of the first pair; pair i uses +i")
     args = ap.parse_args()
 
     out = Path(args.out)
     out.mkdir(parents=True, exist_ok=True)
     roots = {args.label_a: Path(args.a), args.label_b: Path(args.b)}
+    if args.perfbench:
+        perfbench_ab(args, roots, out)
+        return
     runs: dict[str, list[dict]] = {args.label_a: [], args.label_b: []}
 
     for i in range(args.rounds):
