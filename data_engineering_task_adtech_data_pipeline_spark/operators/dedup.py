@@ -1956,22 +1956,21 @@ def minhash_index_write(
 
 
 def _minhash_delta(spark, root: str) -> "DataFrame | None":
-    """The streamed delta's profile rows (None when no delta exists).
-    Strips the physical ``__epoch_id`` idempotence-partition column."""
+    """The streamed delta's profile rows, without the epoch partition
+    column (None when no delta exists)."""
     fs = _fs_mod()
     path = fs.join(root, MINHASH_DELTA_DIR)
     if not fs.is_dir(spark, path):
         return None
     from pyspark.errors import AnalysisException
 
+    from ..streaming.jobs import read_epochs
+
     try:
-        delta = spark.read.parquet(path)
+        return read_epochs(spark, path)
     except AnalysisException:  # dir exists but holds no committed files
         return None  # yet; any OTHER failure must surface, not read as
         # "no delta" — that would silently serve without the streamed docs
-    if "__epoch_id" in delta.columns:
-        delta = delta.drop("__epoch_id")
-    return delta
 
 
 # Resolved stored-relation memo for the SERVING path (round 14, r13
@@ -2319,9 +2318,16 @@ def minhash_index_compact(spark, root: str) -> int:
         _invalidate_index_memo(spark, root)
         return 0
     fs.rename(spark, delta_path, staging)
+    from pyspark.errors import AnalysisException
+
+    from ..streaming.jobs import read_epochs
+
+    # Only "no committed files" reads as an empty delta: any other read
+    # failure (a corrupt part file) raises and leaves the streamed rows in
+    # the staging dir, which the next run refuses.
     try:
-        delta = spark.read.parquet(staging)
-    except Exception:
+        delta = read_epochs(spark, staging)
+    except AnalysisException:
         delta = None
     if delta is None:
         fs.delete(spark, staging)
@@ -2329,8 +2335,6 @@ def minhash_index_compact(spark, root: str) -> int:
         _bump_generation(spark, root)
         _invalidate_index_memo(spark, root)
         return 0
-    if "__epoch_id" in delta.columns:
-        delta = delta.drop("__epoch_id")
     n = delta.count()
     if n:
         delta.write.mode("append").parquet(fs.join(root, MINHASH_DOCS_DIR))

@@ -1743,10 +1743,15 @@ def ivf_index_compact(spark, root: str) -> int:
     # Reading the snapshot by explicit file list keeps the manifest's
     # exactly-once filtering (orphan files from aborted tasks excluded)
     # while the rename keeps racing new epochs out of this fold.
+    # Only "no committed files" reads as an empty delta: any other read
+    # failure (a corrupt part file) raises here, before the rename, and
+    # leaves the streamed rows in place.
+    from pyspark.errors import AnalysisException
+
     try:
         delta_preview = spark.read.parquet(delta_path)
         files = delta_preview.inputFiles()
-    except Exception:  # only empty committed epochs -> nothing to fold
+    except AnalysisException:  # only empty committed epochs -> nothing to fold
         delta_preview, files = None, []
     if files:
         # Schema-coverage guard BEFORE any mutation: a delta missing base

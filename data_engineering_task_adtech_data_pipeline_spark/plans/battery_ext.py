@@ -5149,7 +5149,7 @@ def _q131_prepare(spark: SparkSession, sf_dir: str) -> None:
             )
             q = stream_events_daily(
                 spark, input_dir, silver, ckpt,
-                lateness=_Q131_LATENESS, available_now=True,
+                lateness=_Q131_LATENESS,
             )
             q.awaitTermination()
 
@@ -5544,7 +5544,7 @@ def _q135_prepare(spark: SparkSession, sf_dir: str) -> None:
             q = stream_kmv_monitor(
                 spark, input_dir, schema, "user_id", sketch_log,
                 os.path.join(stage, ckpt), group_cols=["event_type"],
-                k=_Q135_K, method="md5", available_now=True,
+                k=_Q135_K, method="md5",
             )
             q.awaitTermination()
 
@@ -6199,10 +6199,10 @@ def q138_stream_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _q138_root(sf_dir)
     from pyspark.errors import AnalysisException
 
+    from ..streaming.jobs import read_epochs
+
     try:
-        acc = spark.read.parquet(
-            os.path.join(root, "accepted")
-        ).drop("__epoch_id")
+        acc = read_epochs(spark, os.path.join(root, "accepted"))
     except AnalysisException:
         # zero survivors is a VALID pipeline outcome (every arrival
         # duplicated the corpus — observed on the 100x replica stress

@@ -9,8 +9,10 @@ replacement is a continuous job:
     foreachBatch: versioned append (the ReplacingMergeTree-style upsert)
 
 Semantics mapping:
-- Airflow ``schedule_interval=5min``  → ``trigger(processingTime="5 minutes")``
-  (tests use ``availableNow`` for run-to-completion),
+- Airflow ``schedule_interval=5min``  → ``processing_time="5 minutes"``
+  (``trigger(processingTime=...)``). Every job's ``processing_time``
+  defaults to None, which is ``trigger(availableNow=True)``: process what
+  has landed, then stop (run-to-completion, as tests and the battery use),
 - the per-key high-watermark ``rtm_delta`` → ``max(created_at)`` inside each
   update — identical version column, so batch and streaming rows interleave
   correctly under the same latest-version-wins dedup view,
@@ -21,6 +23,23 @@ Semantics mapping:
   (``dags/track_delta.py:291-325``),
 - state at scale: update-mode day-grain groups expire once the watermark
   passes; state size is O(active (campaign, day) keys), not O(history).
+
+Micro-batch sink protocol, one copy each:
+- :func:`_start` sets the checkpoint location and the trigger and starts
+  every job; ``foreachBatch`` sinks see only non-empty micro-batches.
+- Epoch-idempotent landing (:func:`_land_epoch`): ``foreachBatch`` is
+  at-least-once — a failure between a batch's write and its checkpoint
+  commit replays the batch. Sinks whose output a replay would duplicate
+  or double-count stamp each row with the epoch id (``EPOCH_COL``),
+  partition on it and write with dynamic partition overwrite, so a
+  replayed epoch replaces its own ``__epoch_id=N/`` partition:
+  effectively-once output for a given checkpoint lineage (the standard
+  Structured Streaming idempotent-sink recipe). The guarantee covers
+  re-execution of an EPOCH; deleting a multi-epoch checkpoint renumbers
+  epochs and is NOT idempotent (clear the output too). Read such outputs
+  through :func:`read_epochs`, which drops the partition column.
+- Generation guard (:func:`_pin_generation`) for jobs that grow a
+  persisted index's streamed delta.
 """
 
 from __future__ import annotations
@@ -30,7 +49,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
+from .. import fs
 from ..operators.chunking import checkpoint, track_persist
 from ..operators.upsert import upsert_append
 
@@ -41,6 +62,100 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("created_at", T.TimestampType()),
     ]
 )
+
+EPOCH_COL = "__epoch_id"
+
+
+def _start(
+    frame: DataFrame,
+    checkpoint_dir: str,
+    processing_time: str | None,
+    sink: Callable[[DataFrame, int], None] | str,
+    output_mode: str = "append",
+    partition_by: tuple[str, ...] = (),
+) -> StreamingQuery:
+    """Start ``frame`` as a streaming query under the module's trigger
+    mapping. A callable ``sink`` runs per non-empty micro-batch through
+    ``foreachBatch``; a string ``sink`` is the path of a native parquet
+    sink (manifest-committed, exactly-once files) partitioned by
+    ``partition_by``."""
+    writer = frame.writeStream.outputMode(output_mode).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if isinstance(sink, str):
+        writer = writer.format("parquet").option("path", sink).partitionBy(
+            *partition_by
+        )
+    else:
+
+        def run(batch_df: DataFrame, epoch_id: int) -> None:
+            if not batch_df.isEmpty():
+                sink(batch_df, epoch_id)
+
+        writer = writer.foreachBatch(run)
+    if processing_time is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
+def _land_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Write one micro-batch's rows as the ``__epoch_id=epoch_id``
+    partition of ``path``, replacing that partition only (the module's
+    epoch-idempotent landing)."""
+    (
+        df.withColumn(EPOCH_COL, F.lit(epoch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(EPOCH_COL)
+        .parquet(path)
+    )
+
+
+def read_epochs(spark: SparkSession, path: str) -> DataFrame:
+    """Read an epoch-landed output (:func:`stream_decontaminate`,
+    :func:`stream_dedup_against`, the accepted table of
+    :func:`stream_dedup_pipeline`, a MinHash index delta) without the
+    physical ``__epoch_id`` partition column, so consumers see the plain
+    schema (interchangeable with the batch operator's output)."""
+    return spark.read.parquet(path).drop(EPOCH_COL)
+
+
+def _pin_generation(
+    spark: SparkSession,
+    checkpoint_dir: str,
+    root: str | None,
+    marker: str,
+    items: str,
+) -> None:
+    """Generation guard: an index compaction consumes the streamed delta
+    and bumps ``<root>/generation``. A checkpoint created against the
+    pre-compaction delta would REPLAY its epochs into a new delta, and
+    every one of those ``items`` would then be served twice, silently.
+    So the generation a checkpoint was born under is pinned into
+    ``<checkpoint_dir>/<marker>``, and the job refuses to start once they
+    diverge: after each compaction, callers start a FRESH checkpoint. A
+    pre-marker checkpoint adopts the current generation; a root without a
+    generation marker (or no root) skips the guard."""
+    from ..operators.similarity import index_generation
+
+    gen = index_generation(spark, root) if root else None
+    if gen is None:
+        return
+    path = fs.join(checkpoint_dir, marker)
+    if not fs.exists(spark, path):
+        fs.write_text(spark, path, str(gen))
+        return
+    pinned = int(fs.read_text(spark, path).strip())
+    if pinned != gen:
+        raise RuntimeError(
+            f"stale streaming checkpoint {checkpoint_dir}: it was "
+            f"created at index generation {pinned} but {root} is "
+            f"now at generation {gen} (compaction ran) — reusing "
+            "it would replay already-compacted epochs and "
+            f"double-ingest their {items}; start a fresh checkpoint"
+        )
 
 
 def streaming_daily_agg(
@@ -82,7 +197,7 @@ def stream_running_totals(
     input_dir: str,
     output_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
+    processing_time: str | None = None,
 ):
     """Custom stateful operator via ``applyInPandasWithState``: per-campaign
     RUNNING totals (cumulative count + last-event watermark) maintained in
@@ -139,19 +254,10 @@ def stream_running_totals(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.isEmpty():
-            upsert_append(batch_df, output_path)
-
-    writer = (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        totals, checkpoint_dir, processing_time,
+        lambda batch_df, _: upsert_append(batch_df, output_path), "update",
     )
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
-        processingTime="5 minutes"
-    )
-    return writer.start()
 
 
 def streaming_sessionize(
@@ -258,8 +364,7 @@ def stream_decontaminate(
     ngram_k: int = 13,
     min_matches: int = 1,
     hash_method: str = "xxhash64",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Ingestion-time benchmark decontamination: document parquet files land
     → each micro-batch is scrubbed of docs sharing >= ``min_matches``
@@ -274,16 +379,9 @@ def stream_decontaminate(
     ``foreachBatch`` runs the unchanged batch operator per micro-batch with
     no streaming state.
 
-    Sink semantics: foreachBatch alone is at-least-once (a failure between
-    the write and the checkpoint commit replays the batch), so the sink is
-    made IDEMPOTENT by partitioning the output on ``__epoch_id`` and using
-    dynamic partition overwrite — a replayed epoch overwrites its own
-    partition instead of appending duplicates, giving effectively-once
-    output for a given checkpoint lineage (the standard Structured
-    Streaming idempotent-sink recipe). The physical ``__epoch_id``
-    partition column is an implementation detail: read the output through
-    ``read_decontaminated`` (which strips it, mirroring
-    ``Pipeline.gold``'s handling of gold_bucket), not a raw parquet read.
+    Sink semantics: the module's epoch-idempotent landing, so a replayed
+    epoch cannot append duplicates. Read the output through
+    :func:`read_epochs`, not a raw parquet read.
 
     Scale shape: the benchmark collapses to a DISTINCT set of 8-byte gram
     hashes ONCE (cached here, not re-shingled per batch) and is broadcast
@@ -300,8 +398,6 @@ def stream_decontaminate(
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         clean = decontaminate(
             batch_df,
             benchmark=None,
@@ -312,33 +408,10 @@ def stream_decontaminate(
             hash_method=hash_method,
             bench_grams=grams,
         )
-        (
-            clean.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(output_path)
-        )
+        _land_epoch(clean, epoch_id, output_path)
 
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def read_decontaminated(spark: SparkSession, output_path: str) -> DataFrame:
-    """Public reader for ``stream_decontaminate`` output: strips the
-    physical ``__epoch_id`` idempotence-partition column so consumers see
-    the plain document schema (interchangeable with the batch
-    ``operators.dedup.decontaminate`` output)."""
-    return spark.read.parquet(output_path).drop("__epoch_id")
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def stream_events_daily(
@@ -348,8 +421,7 @@ def stream_events_daily(
     checkpoint_dir: str,
     campaign_map: DataFrame | None = None,
     lateness: str = "1 day",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
     post_batch: Callable[[SparkSession, int], None] | None = None,
     prefix: str | None = None,
     sink_format: str = "append",
@@ -406,8 +478,6 @@ def stream_events_daily(
         )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if sink_format == "merge":
             from ..operators.upsert import merge_upsert
 
@@ -422,16 +492,7 @@ def stream_events_daily(
         if post_batch is not None:
             post_batch(batch_df.sparkSession, epoch_id)
 
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(agg, checkpoint_dir, processing_time, sink, "update")
 
 
 EMBEDDING_SCHEMA = T.StructType(
@@ -450,8 +511,7 @@ def stream_ivf_ingest(
     output_path: str,
     checkpoint_dir: str,
     emb_col: str = "embedding",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
     schema: "T.StructType | None" = None,
     planes: int | None = None,
     sig_seed: int = 42,
@@ -503,43 +563,20 @@ def stream_ivf_ingest(
     only cross-node traffic is the (tiny) broadcast model above
     ``literal_max`` cells.
     """
-    from .. import fs
     from ..operators.similarity import (
         _with_cell,
         hyperplane_signature,
-        index_generation,
         with_double_embedding,
     )
 
-    # Generation guard (persisted-index roots only): ivf_index_compact
-    # consumes the delta and bumps <root>/generation; a checkpoint created
-    # against the pre-compaction delta would REPLAY its epochs into a new
-    # delta — every one of those vectors would then appear twice in search
-    # results, silently. Pin the generation this checkpoint was born under
-    # into the checkpoint dir and refuse to start once they diverge: after
-    # each compaction, callers start a FRESH checkpoint (the contract the
-    # ivf_index_compact docstring states — now enforced, not conventional).
-    # A pre-marker checkpoint (no pinned generation) adopts the current one.
+    # the persisted index whose compaction generation the checkpoint
+    # pins: index_root, or the root whose stream_index/ delta this grows
     root = index_root
     if root is None:
         op = output_path.rstrip("/")
         if op.endswith("/stream_index"):
             root = op[: -len("/stream_index")]
-    gen = index_generation(spark, root) if root else None
-    if gen is not None:
-        marker = fs.join(checkpoint_dir, ".ivf_generation")
-        if fs.exists(spark, marker):
-            pinned = int(fs.read_text(spark, marker).strip())
-            if pinned != gen:
-                raise RuntimeError(
-                    f"stale streaming checkpoint {checkpoint_dir}: it was "
-                    f"created at index generation {pinned} but {root} is "
-                    f"now at generation {gen} (compaction ran) — reusing "
-                    "it would replay already-compacted epochs and "
-                    "double-ingest their vectors; start a fresh checkpoint"
-                )
-        else:
-            fs.write_text(spark, marker, str(gen))
+    _pin_generation(spark, checkpoint_dir, root, ".ivf_generation", "vectors")
 
     stream = spark.readStream.schema(schema or EMBEDDING_SCHEMA).parquet(input_dir)
     work = with_double_embedding(stream, emb_col)
@@ -570,18 +607,10 @@ def stream_ivf_ingest(
             assigned = assigned.withColumn(
                 "codes", F.expr(_pq_codes_sql(f"`{emb_col}`", codebooks))
             )
-    writer = (
-        assigned.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("cell")
+    return _start(
+        assigned, checkpoint_dir, processing_time, output_path,
+        partition_by=("cell",),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def stream_hll_monitor(
@@ -594,8 +623,7 @@ def stream_hll_monitor(
     group_cols: list[str] | None = None,
     p: int = 10,
     method: str = "xxhash64",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Streaming distinct-count monitor: new value files fold into a
     per-group HyperLogLog sketch incrementally — the cardinality dashboard
@@ -619,20 +647,9 @@ def stream_hll_monitor(
     regs = hll_registers(stream, value_col, group_cols or [], p, method)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.write.mode("append").parquet(registers_path)
 
-    writer = (
-        regs.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(regs, checkpoint_dir, processing_time, sink, "update")
 
 
 def read_hll_registers(
@@ -662,8 +679,7 @@ def stream_dedup_against(
     max_shingles: int | None = 512,
     hash_method: str = "xxhash64",
     max_bucket: int = 64,
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Ingestion-time INCREMENTAL near-dedup: document parquet files land →
     each micro-batch is deduped AGAINST the accepted ``corpus`` via
@@ -681,10 +697,10 @@ def stream_dedup_against(
     the session-local equivalent (a ``chunking.track_persist`` persist, so
     a ``release_persisted()`` mid-stream only costs a recompute).
 
-    Same ``foreachBatch`` + epoch-partitioned dynamic-overwrite sink recipe
-    as :func:`stream_decontaminate` (and the same reason: the keep-only-
+    Same ``foreachBatch`` + epoch-idempotent landing as
+    :func:`stream_decontaminate` (and the same reason: the keep-only-
     unmatched decision is an anti-join, not a supported stream-static join
-    shape), so replays are idempotent per checkpoint lineage. NOTE: batches
+    shape); read the output through :func:`read_epochs`. NOTE: batches
     are deduped against the STATIC corpus only — rows accepted by earlier
     micro-batches do not join the corpus mid-stream (fold the output back
     into the corpus profile between stream runs for that); within-batch
@@ -700,8 +716,6 @@ def stream_dedup_against(
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         kept = dedup_against(
             batch_df,
             None,
@@ -716,31 +730,10 @@ def stream_dedup_against(
             max_bucket=max_bucket,
             corpus_profile=prof_corp,
         )
-        (
-            kept.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(output_path)
-        )
+        _land_epoch(kept, epoch_id, output_path)
 
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def read_deduped(spark: SparkSession, output_path: str) -> DataFrame:
-    """Public reader for ``stream_dedup_against`` output: strips the
-    physical ``__epoch_id`` idempotence-partition column."""
-    return spark.read.parquet(output_path).drop("__epoch_id")
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def stream_datacard(
@@ -752,8 +745,7 @@ def stream_datacard(
     group_cols: "list[str] | None" = None,
     short_words: int = 50,
     p: int = 10,
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Streaming corpus census: document files land → each micro-batch
     appends its PARTIAL data-card aggregates — per (group, predicted
@@ -771,7 +763,6 @@ def stream_datacard(
     cannot hold every content hash; `n_distinct_content_est` is named to
     make that visible.
     """
-    from .. import fs
     from ..operators.sketch import hll_registers
     from ..operators.text import _word_array, lang_id
     from ..operators.dedup import normalize_text
@@ -791,15 +782,13 @@ def stream_datacard(
             raise ValueError(
                 f"stream_datacard: {d} holds flat parquet files from the "
                 "pre-epoch-partitioned sink; migrate by rewriting them "
-                "under an __epoch_id=-1/ partition (or point the stream "
+                f"under an {EPOCH_COL}=-1/ partition (or point the stream "
                 "at a fresh output_path)"
             )
 
     groups = list(group_cols or ["source"])
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         base = lang_id(batch_df, text_col).select(
             *groups,
             "lang_pred",
@@ -820,39 +809,14 @@ def stream_datacard(
         regs = hll_registers(
             base, "__content", [*groups, "lang_pred"], p=p
         )
-        # foreachBatch is at-least-once: a replayed epoch must not append
-        # its partials twice (HLL registers survive a double-append via
-        # max-merge, but counts SUM — a replay would permanently inflate
-        # n_docs/total_chars/total_words). Same idempotent-sink recipe as
-        # stream_dedup_against/stream_decontaminate: stamp the epoch,
-        # partition on it, dynamic-overwrite so a replay replaces its own
-        # partition only.
-        (
-            counts.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(output_path + "/counts")
-        )
-        (
-            regs.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(output_path + "/registers")
-        )
+        # epoch-idempotent landing: HLL registers survive a double-append
+        # via max-merge, but counts SUM — a replay would permanently
+        # inflate n_docs/total_chars/total_words
+        _land_epoch(counts, epoch_id, output_path + "/counts")
+        _land_epoch(regs, epoch_id, output_path + "/registers")
 
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def read_datacard(
@@ -912,8 +876,7 @@ def stream_cm_monitor(
     d: int = 4,
     w: int = 2048,
     method: str = "xxhash64",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Streaming heavy-hitter frequency monitor: each micro-batch lands
     its PARTIAL Count-Min counters (``operators.sketch.cm_sketch`` over
@@ -924,42 +887,21 @@ def stream_cm_monitor(
 
     Unlike :func:`stream_hll_monitor`'s registers (max-merge absorbs a
     replayed epoch for free), summed counters double-count under
-    foreachBatch's at-least-once replay — so this sink uses the
-    __epoch_id dynamic-overwrite recipe: a replayed epoch replaces its
-    own partition. Scope of the guarantee (same as
-    :func:`stream_datacard`): re-execution of an EPOCH — the crash window
-    between its write and its checkpoint commit. Deleting a multi-epoch
-    checkpoint renumbers epochs and is NOT idempotent for any additive
-    sink; recover that case by clearing the sketch path too. Sketch-sized
-    writes per epoch (groups x d x <= w counters), unbounded stream,
-    bounded state.
+    foreachBatch's at-least-once replay — so this sink uses the module's
+    epoch-idempotent landing (whose scope is re-execution of an epoch;
+    after deleting a multi-epoch checkpoint, clear the sketch path too).
+    Sketch-sized writes per epoch (groups x d x <= w counters), unbounded
+    stream, bounded state.
     """
     from ..operators.sketch import cm_sketch
 
     stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sk = cm_sketch(batch_df, value_col, group_cols or [], d, w, method)
-        (
-            sk.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(sketch_path)
-        )
+        _land_epoch(sk, epoch_id, sketch_path)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def read_cm_sketch(
@@ -984,8 +926,7 @@ def stream_quality_monitor(
     checkpoint_dir: str,
     text_col: str = "text",
     group_cols: "list[str] | None" = None,
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Streaming quality-gate census: document files land → each
     micro-batch runs the BATCH quality gates (``text.gopher_gate``
@@ -997,18 +938,14 @@ def stream_quality_monitor(
     aggregation, the ``stream_datacard`` contract) and
     :func:`read_quality_report` folds the append log by summing.
 
-    foreachBatch is at-least-once, so partials are stamped with the epoch
-    and written via dynamic partition overwrite — a replayed epoch
-    replaces its own partition instead of double-counting (the
-    epoch-idempotent sink recipe shared by every monitor in this module).
+    Partials land through the module's epoch-idempotent landing, so a
+    replayed epoch replaces its own partition instead of double-counting.
     """
     from ..operators.text import char_entropy, gopher_gate
 
     groups = list(group_cols or ["source"])
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         gate = gopher_gate(batch_df, text_col=text_col).select(
             "doc_id", F.col("keep").alias("__keep_gopher")
         )
@@ -1040,25 +977,10 @@ def stream_quality_monitor(
             ),
             F.sum("__hm").cast("decimal(28,6)").alias("entropy_mass"),
         )
-        (
-            partial.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(output_path)
-        )
+        _land_epoch(partial, epoch_id, output_path)
 
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def read_quality_report(
@@ -1104,8 +1026,7 @@ def stream_kmv_monitor(
     group_cols: list[str] | None = None,
     k: int = 64,
     method: str = "md5",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Streaming KMV/theta-sketch monitor — the set-operations twin of
     :func:`stream_hll_monitor`: new value files fold into per-group
@@ -1130,21 +1051,10 @@ def stream_kmv_monitor(
     stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sk = kmv_sketch(batch_df, value_col, gcols, k=k, method=method)
         sk.select(*gcols, "h").write.mode("append").parquet(sketch_path)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def read_kmv_sketch(
@@ -1175,8 +1085,7 @@ def stream_bloom_monitor(
     num_bits: int = 1 << 20,
     num_hashes: int = 5,
     method: str = "xxhash64",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """Streaming Bloom membership monitor — the definite-absence twin of
     the HLL/KMV monitors: new value files fold into a corpus Bloom filter,
@@ -1210,22 +1119,11 @@ def stream_bloom_monitor(
     stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         bloom_sketch(
             batch_df, value_col, num_bits, num_hashes, method
         ).write.mode("append").parquet(sketch_path)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def _bloom_params_path(sketch_path: str) -> str:
@@ -1243,8 +1141,6 @@ def _bloom_pin_params(
     validate against the already-pinned values — mixed-parameter appends
     would corrupt the filter silently (wrong bit positions OR'd in), so
     a mismatch refuses the stream instead."""
-    from .. import fs
-
     path = _bloom_params_path(sketch_path)
     if fs.is_dir(spark, path):
         p = read_bloom_params(spark, sketch_path)
@@ -1348,8 +1244,7 @@ def stream_dedup_pipeline(
     id_col: str = "doc_id",
     verify_threshold: float | None = 0.8,
     max_bucket: int = 64,
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
     schema: "T.StructType | None" = None,
     max_files_per_trigger: int | None = None,
     broadcast_max_batch_rows: int = 500_000,
@@ -1367,8 +1262,8 @@ def stream_dedup_pipeline(
     2. dedup the intra-survivors against the persisted MinHash index
        (``minhash_index_dedup(keep="links")`` — stored band buckets,
        DPP-pruned, batch broadcast);
-    3. land the SURVIVORS to ``accepted_path`` (epoch-partitioned
-       dynamic overwrite — idempotent under replay);
+    3. land the SURVIVORS to ``accepted_path`` (the module's
+       epoch-idempotent landing; read it through :func:`read_epochs`);
     4. fold the duplicate links — intra-batch pairs AND batch↔corpus
        links — into the persisted cluster assignment store
        (``components_update`` — contracted closure, changed-rows-only
@@ -1430,11 +1325,11 @@ def stream_dedup_pipeline(
     Each batch's ``chunking.checkpoint`` frames (and, for a batch above
     ``chunking.materialize``'s size gate, its persisted profile) are
     registered for ``release_persisted()``: call it between batches
-    (after ``awaitTermination`` for an ``available_now`` run), never
+    (after ``awaitTermination`` for a ``processing_time=None`` run), never
     while a batch is in flight."""
-    from .. import fs
     from ..operators.dedup import (
         MINHASH_DELTA_DIR,
+        _invalidate_index_memo,
         _minhash_params,
         _verified_candidates,
         components_update,
@@ -1442,7 +1337,6 @@ def stream_dedup_pipeline(
         minhash_index_dedup,
         minhash_profile,
     )
-    from ..operators.similarity import index_generation
 
     if verify_threshold is None and components_root is not None:
         raise ValueError(
@@ -1454,27 +1348,13 @@ def stream_dedup_pipeline(
             "cluster bookkeeping, or set a verify_threshold"
         )
     p = _minhash_params(spark, index_root)
-    gen = index_generation(spark, index_root)
-    if gen is not None:
-        marker = fs.join(checkpoint_dir, ".minhash_generation")
-        if fs.exists(spark, marker):
-            pinned = int(fs.read_text(spark, marker).strip())
-            if pinned != gen:
-                raise RuntimeError(
-                    f"stale streaming checkpoint {checkpoint_dir}: it was "
-                    f"created at index generation {pinned} but {index_root} "
-                    f"is now at generation {gen} (compaction ran) — reusing "
-                    "it would replay already-compacted epochs and "
-                    "double-ingest their docs; start a fresh checkpoint"
-                )
-        else:
-            fs.write_text(spark, marker, str(gen))
+    _pin_generation(
+        spark, checkpoint_dir, index_root, ".minhash_generation", "docs"
+    )
 
     delta_path = fs.join(index_root, MINHASH_DELTA_DIR)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = checkpoint(batch_df)
         # micro-batch contract guard: the checkpointed batch counts for
         # ~free; an oversized batch (unbounded backfill) downgrades the
@@ -1509,13 +1389,7 @@ def stream_dedup_pipeline(
         links = checkpoint(links.join(B(own), "id_b", "left_anti"))
         dup_ids = links.select(F.col("id_a").alias(id_col)).distinct()
         survivors = canon.join(B(dup_ids), id_col, "left_anti")
-        (
-            survivors.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(accepted_path)
-        )
+        _land_epoch(survivors, epoch_id, accepted_path)
         # (4) one fold of BOTH link kinds: intra pairs cluster dropped
         # docs with their canonical; corpus links cluster batch docs with
         # the stored corpus. Skipped when components_root is None (the
@@ -1529,34 +1403,17 @@ def stream_dedup_pipeline(
             survivors, text_col, id_col, p.num_hashes, p.shingle_k,
             p.max_shingles, p.hash_method,
         ).withColumnRenamed(id_col, p.id_col)
-        (
-            prof.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(delta_path)
-        )
+        _land_epoch(prof, epoch_id, delta_path)
         # the NEXT batch's serving join must see this epoch's profiles:
         # drop the in-process resolved-relation memo entry now (never
         # rely on dir-mtime fingerprints for our own writes)
-        from ..operators.dedup import _invalidate_index_memo
-
         _invalidate_index_memo(spark, index_root)
 
     reader = spark.readStream.schema(schema or DOC_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(stream, checkpoint_dir, processing_time, sink)
 
 
 def stream_minhash_ingest(
@@ -1566,8 +1423,7 @@ def stream_minhash_ingest(
     checkpoint_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
     schema: "T.StructType | None" = None,
 ):
     """Streaming ingestion for the persisted MinHash dedup index
@@ -1582,76 +1438,36 @@ def stream_minhash_ingest(
     ``<root>/stream_profiles``, which ``minhash_index_dedup`` unions with
     the base automatically.
 
-    Sink semantics: foreachBatch is at-least-once, made IDEMPOTENT by the
-    package's epoch-partitioned dynamic-overwrite recipe (see
-    ``stream_decontaminate``) — a replayed epoch overwrites its own
-    ``__epoch_id`` partition.
-
-    Generation guard (same contract as ``stream_ivf_ingest``):
-    ``minhash_index_compact`` consumes the delta and bumps
-    ``<root>/generation``; a checkpoint created against the
-    pre-compaction delta would replay its epochs into a new delta and
-    double-ingest every doc — the checkpoint pins the generation it was
-    born under and refuses to start once the index has moved on.
+    Sink semantics: the module's epoch-idempotent landing and generation
+    guard (``minhash_index_compact`` consumes the delta, as
+    ``ivf_index_compact`` does for :func:`stream_ivf_ingest`).
 
     Scale shape: per micro-batch the work is the batch profile kernel
     (one shingle explode + one hash-agg shuffle of batch-sized data);
     nothing touches the base index. ``id_col``/``text_col`` name the
     ARRIVING columns; the profile's id column is stored under the
     index's own id column name."""
-    from .. import fs
     from ..operators.dedup import (
         MINHASH_DELTA_DIR,
+        _invalidate_index_memo,
         _minhash_params,
         minhash_profile,
     )
-    from ..operators.similarity import index_generation
 
     p = _minhash_params(spark, index_root)
-    gen = index_generation(spark, index_root)
-    if gen is not None:
-        marker = fs.join(checkpoint_dir, ".minhash_generation")
-        if fs.exists(spark, marker):
-            pinned = int(fs.read_text(spark, marker).strip())
-            if pinned != gen:
-                raise RuntimeError(
-                    f"stale streaming checkpoint {checkpoint_dir}: it was "
-                    f"created at index generation {pinned} but {index_root} "
-                    f"is now at generation {gen} (compaction ran) — reusing "
-                    "it would replay already-compacted epochs and "
-                    "double-ingest their docs; start a fresh checkpoint"
-                )
-        else:
-            fs.write_text(spark, marker, str(gen))
+    _pin_generation(
+        spark, checkpoint_dir, index_root, ".minhash_generation", "docs"
+    )
 
     output_path = fs.join(index_root, MINHASH_DELTA_DIR)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         prof = minhash_profile(
             batch_df, text_col, id_col, p.num_hashes, p.shingle_k,
             p.max_shingles, p.hash_method,
         ).withColumnRenamed(id_col, p.id_col)
-        (
-            prof.withColumn("__epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch_id")
-            .parquet(output_path)
-        )
-        from ..operators.dedup import _invalidate_index_memo
-
+        _land_epoch(prof, epoch_id, output_path)
         _invalidate_index_memo(spark, index_root)
 
     stream = spark.readStream.schema(schema or DOC_SCHEMA).parquet(input_dir)
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(stream, checkpoint_dir, processing_time, sink)

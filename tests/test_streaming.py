@@ -35,7 +35,7 @@ def test_streaming_matches_batch(spark, tmp_path):
     # (that drop is the *correct* streaming behavior; equivalence with batch
     # holds only within the lateness bound)
     q = stream_events_daily(
-        spark, input_dir, silver, ckpt, available_now=True, lateness="30 days"
+        spark, input_dir, silver, ckpt, lateness="30 days"
     )
     q.awaitTermination(120)
 
@@ -45,7 +45,7 @@ def test_streaming_matches_batch(spark, tmp_path):
     )
     batch2.write.mode("append").parquet(input_dir)
     q2 = stream_events_daily(
-        spark, input_dir, silver, ckpt, available_now=True, lateness="30 days"
+        spark, input_dir, silver, ckpt, lateness="30 days"
     )
     q2.awaitTermination(120)
 
@@ -334,10 +334,10 @@ def test_stream_decontaminate_replay_is_idempotent(spark, tmp_path):
         spark, d + "/in", benchmark, d + "/out", d + "/ckpt"
     ).awaitTermination(120)
     from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
-        read_decontaminated,
+        read_epochs,
     )
 
-    out = read_decontaminated(spark, d + "/out")
+    out = read_epochs(spark, d + "/out")
     # the idempotence partition column is stripped for consumers
     assert "__epoch_id" not in out.columns
     got = [r.doc_id for r in out.collect()]
@@ -441,13 +441,17 @@ def test_stream_hll_monitor_matches_batch_sketch(spark, tmp_path):
 def test_stream_dedup_against_matches_batch(spark, tmp_path):
     """Streaming incremental dedup converges to the batch operator's output
     on the union of all landed files: corpus near-dups dropped, novel docs
-    (and within-batch duplicates, per the documented contract) kept."""
+    (and within-batch duplicates, per the documented contract) kept. A
+    replayed epoch (checkpoint wiped while exactly one epoch exists, same
+    input files) overwrites its own partition instead of appending."""
+    import shutil
+
     from data_engineering_task_adtech_data_pipeline_spark.operators.dedup import (
         dedup_against,
     )
     from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
         DOC_SCHEMA,
-        read_deduped,
+        read_epochs,
         stream_dedup_against,
     )
 
@@ -472,6 +476,13 @@ def test_stream_dedup_against_matches_batch(spark, tmp_path):
         spark, d + "/in", corpus, d + "/out", d + "/ckpt",
         verify_threshold=0.5,
     ).awaitTermination(120)
+    once = sorted(map(tuple, read_epochs(spark, d + "/out").collect()))
+    shutil.rmtree(d + "/ckpt")
+    stream_dedup_against(
+        spark, d + "/in", corpus, d + "/out", d + "/ckpt",
+        verify_threshold=0.5,
+    ).awaitTermination(120)
+    assert sorted(map(tuple, read_epochs(spark, d + "/out").collect())) == once
 
     batch2 = docs([(12, known), (13, novel + " plus a novel twist here")])
     batch2.write.mode("append").parquet(d + "/in")
@@ -480,7 +491,7 @@ def test_stream_dedup_against_matches_batch(spark, tmp_path):
         verify_threshold=0.5,
     ).awaitTermination(120)
 
-    got = sorted(r.doc_id for r in read_deduped(spark, d + "/out").collect())
+    got = sorted(r.doc_id for r in read_epochs(spark, d + "/out").collect())
     expect = sorted(
         r.doc_id
         for r in dedup_against(
@@ -488,7 +499,7 @@ def test_stream_dedup_against_matches_batch(spark, tmp_path):
         ).collect()
     )
     assert got == expect == [11, 13]
-    assert "__epoch_id" not in read_deduped(spark, d + "/out").columns
+    assert "__epoch_id" not in read_epochs(spark, d + "/out").columns
 
 
 def test_stream_datacard_matches_batch_census(spark, tmp_path):
@@ -596,7 +607,7 @@ def test_stream_events_daily_merge_sink_matches_batch(spark, tmp_path):
     ).parquet(d + "/in")
     stream_events_daily(
         spark, d + "/in", d + "/silver", d + "/ckpt",
-        available_now=True, lateness="30 days", sink_format="merge",
+        lateness="30 days", sink_format="merge",
         merge_buckets=4,
     ).awaitTermination(120)
     gen_impressions(
@@ -604,7 +615,7 @@ def test_stream_events_daily_merge_sink_matches_batch(spark, tmp_path):
     ).write.mode("append").parquet(d + "/in")
     stream_events_daily(
         spark, d + "/in", d + "/silver", d + "/ckpt",
-        available_now=True, lateness="30 days", sink_format="merge",
+        lateness="30 days", sink_format="merge",
         merge_buckets=4,
     ).awaitTermination(120)
 
@@ -647,7 +658,7 @@ def test_stream_events_daily_merge_sink_replay_after_crash(spark, tmp_path):
     ).parquet(d + "/in")
     stream_events_daily(
         spark, d + "/in", d + "/silver", d + "/ckpt",
-        available_now=True, lateness="30 days", sink_format="merge",
+        lateness="30 days", sink_format="merge",
         merge_buckets=4,
     ).awaitTermination(120)
     before = sorted(
@@ -658,7 +669,7 @@ def test_stream_events_daily_merge_sink_replay_after_crash(spark, tmp_path):
     shutil.rmtree(d + "/ckpt")
     stream_events_daily(
         spark, d + "/in", d + "/silver", d + "/ckpt",
-        available_now=True, lateness="30 days", sink_format="merge",
+        lateness="30 days", sink_format="merge",
         merge_buckets=4,
     ).awaitTermination(120)
     after = sorted(
@@ -749,7 +760,12 @@ def test_stream_quality_monitor_matches_batch_gates(spark, tmp_path):
     """Two file batches streamed through the quality monitor fold to the
     same per-source keep counts and mean entropy as running the batch
     gopher_gate/char_entropy gates on the union — including docs the
-    gates emit no row for (empty text counts as not-keep)."""
+    gates emit no row for (empty text counts as not-keep). The counters
+    SUM on read, so a replayed epoch (checkpoint wiped while exactly one
+    epoch exists, same input files) must replace its own partition rather
+    than double-count."""
+    import shutil
+
     from data_engineering_task_adtech_data_pipeline_spark.operators.text import (
         char_entropy,
         gopher_gate,
@@ -783,6 +799,14 @@ def test_stream_quality_monitor_matches_batch_gates(spark, tmp_path):
     stream_quality_monitor(
         spark, d + "/in", d + "/q", d + "/ckpt"
     ).awaitTermination(120)
+    once = sorted(map(tuple, read_quality_report(spark, d + "/q").collect()))
+    shutil.rmtree(d + "/ckpt")
+    stream_quality_monitor(
+        spark, d + "/in", d + "/q", d + "/ckpt"
+    ).awaitTermination(120)
+    assert sorted(
+        map(tuple, read_quality_report(spark, d + "/q").collect())
+    ) == once
     b2.write.mode("append").parquet(d + "/in")
     stream_quality_monitor(
         spark, d + "/in", d + "/q", d + "/ckpt"
@@ -1342,7 +1366,7 @@ def test_stream_events_daily_soak_bounded_state(spark, tmp_path):
 
     q = stream_events_daily(
         spark, input_dir, silver, ckpt,
-        lateness="4 days", available_now=False, processing_time="1 seconds",
+        lateness="4 days", processing_time="1 seconds",
     )
     try:
         run_waves(q, range(0, 5))
@@ -1351,7 +1375,7 @@ def test_stream_events_daily_soak_bounded_state(spark, tmp_path):
     # restart from the same checkpoint mid-soak; keep landing waves
     q2 = stream_events_daily(
         spark, input_dir, silver, ckpt,
-        lateness="4 days", available_now=False, processing_time="1 seconds",
+        lateness="4 days", processing_time="1 seconds",
     )
     try:
         run_waves(q2, range(5, n_waves))

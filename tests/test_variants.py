@@ -1147,6 +1147,53 @@ def test_minhash_index_stream_ingest_and_compact(spark, tmp_path):
     assert dedup.minhash_index_compact(spark, root) == 1
 
 
+def test_stream_dedup_pipeline_generation_guard(spark, tmp_path):
+    """stream_dedup_pipeline grows the index delta like
+    stream_minhash_ingest, so it pins the same generation: after
+    minhash_index_compact, restarting on the old checkpoint refuses
+    (replaying its epochs would double-ingest their docs), and a fresh
+    checkpoint proceeds."""
+    import pytest
+
+    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup, similarity
+    from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
+        read_epochs,
+        stream_dedup_pipeline,
+    )
+
+    d = str(tmp_path)
+    root = d + "/idx"
+    corpus = _mk_docs(spark, [
+        (1, "the quick brown fox jumps over the lazy dog again and again today"),
+    ])
+    dedup.minhash_index_write(corpus, root, num_hashes=32, bands=8)
+
+    def run(landing, ckpt, accepted="/acc"):
+        return stream_dedup_pipeline(
+            spark, d + landing, root, None, d + accepted, d + ckpt,
+            verify_threshold=0.5, schema=corpus.schema,
+        )
+
+    _mk_docs(spark, [
+        (10, "fresh unique content that matches nothing stored anywhere at all yet"),
+    ]).write.mode("append").parquet(d + "/in")
+    run("/in", "/ckpt").awaitTermination(120)
+    assert dedup.minhash_index_compact(spark, root) == 1
+    assert similarity.index_generation(spark, root) == 1
+
+    with pytest.raises(RuntimeError, match="stale streaming checkpoint"):
+        run("/in", "/ckpt")
+    # a fresh checkpoint is pinned to the new generation; it restarts
+    # epoch numbering, so it gets a fresh landing dir (the compacted files
+    # would otherwise be re-read) and a fresh accepted table
+    _mk_docs(spark, [
+        (20, "another novel document with its own vocabulary and no overlap here"),
+    ]).write.mode("append").parquet(d + "/in2")
+    run("/in2", "/ckpt2", "/acc2").awaitTermination(120)
+    assert [r.doc_id for r in read_epochs(spark, d + "/acc").collect()] == [10]
+    assert [r.doc_id for r in read_epochs(spark, d + "/acc2").collect()] == [20]
+
+
 def test_minhash_index_delete_matches_rebuild(spark, tmp_path):
     """Tombstoned docs vanish from serving EXACTLY as if the index were
     rebuilt from the survivors — including the per-bucket cap contract:
@@ -1213,3 +1260,63 @@ def test_minhash_index_compact_refuses_interrupted_run(spark, tmp_path):
         dedup.minhash_index_compact(spark, root)
     fs.delete(spark, fs.join(root, "stream_profiles.compacting"))
     assert dedup.minhash_index_compact(spark, root) == 0
+
+
+def test_index_compact_refuses_corrupt_delta(spark, tmp_path):
+    """Only a delta with no committed files reads as "nothing to fold":
+    when a streamed delta's part file is corrupt, both index compactions
+    raise and leave the streamed rows on disk (in the delta or its
+    ``.compacting`` staging dir) instead of deleting them as empty."""
+    import glob
+    import os
+
+    import pytest
+
+    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup
+    from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
+        stream_ivf_ingest,
+        stream_minhash_ingest,
+    )
+
+    d = str(tmp_path)
+
+    def corrupt_part(delta):
+        parts = glob.glob(delta + "/**/part-*.parquet", recursive=True)
+        assert len(parts) == 1, parts  # the one file schema inference reads
+        with open(parts[0], "wb") as f:
+            f.write(b"garbage bytes, not a parquet file")
+        return os.path.basename(parts[0])
+
+    def still_on_disk(root, name):
+        return glob.glob(root + "/**/" + name, recursive=True)
+
+    # MinHash index: foreachBatch epoch-landed delta
+    mh = d + "/mh"
+    docs = _mk_docs(spark, [
+        (1, "the quick brown fox jumps over the lazy dog again and again today"),
+    ])
+    dedup.minhash_index_write(docs, mh, num_hashes=32, bands=8)
+    _mk_docs(spark, [
+        (10, "fresh unique content that matches nothing stored anywhere at all yet"),
+    ]).coalesce(1).write.parquet(d + "/mh_in")
+    stream_minhash_ingest(
+        spark, d + "/mh_in", mh, d + "/mh_ckpt", schema=docs.schema
+    ).awaitTermination(120)
+    name = corrupt_part(mh + "/stream_profiles")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        dedup.minhash_index_compact(spark, mh)
+    assert still_on_disk(mh, name)
+
+    # IVF index: native parquet sink delta
+    emb = Testdata(spark, SF_ORACLE).embeddings
+    ivf = d + "/ivf"
+    cents = similarity.kmeans_fit(emb, n_cells=4, n_iter=1, dim=64)
+    similarity.ivf_index_write(emb.where(F.col("vec_id") != 1), cents, ivf)
+    emb.where(F.col("vec_id") == 1).coalesce(1).write.parquet(d + "/ivf_in")
+    stream_ivf_ingest(
+        spark, d + "/ivf_in", cents, ivf + "/stream_index", d + "/ivf_ckpt"
+    ).awaitTermination(120)
+    name = corrupt_part(ivf + "/stream_index")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        similarity.ivf_index_compact(spark, ivf)
+    assert still_on_disk(ivf, name)
