@@ -1,24 +1,45 @@
 """Approximate/exact nearest-neighbor search over embedding columns.
 
-Two tiers (both pure built-in expressions — the dot products run as
-``F.zip_with`` + ``F.aggregate`` inside codegen, no Python in the hot path):
+Every score is a built-in expression — the dot products run as
+``F.zip_with`` + ``F.aggregate`` inside codegen, no Python in the hot path.
+Ranking is the same everywhere: score first, then ``corpus_id`` ascending,
+self-matches (``query_id == corpus_id``) excluded.
 
-- ``brute_force_topk`` — exact cosine top-k; the correctness baseline.
-  Cost O(|queries| x |corpus|); fine when queries are broadcastable.
-- ``lsh_topk`` — random-hyperplane LSH (Charikar 2002): each vector gets a
-  ``planes``-bit signature (sign of dot with pseudo-random ±1 hyperplanes
-  derived deterministically from xxhash64, so no driver-side plane matrix and
-  any executor regenerates them identically); candidates share a signature
-  bucket (multi-probe via band splits), then exact cosine re-ranks. At 100 TB
-  the bucket join replaces the cross join: cost O(bucket_size x queries).
+Flat scans: ``brute_force_topk`` (exact cosine, the correctness baseline),
+``lsh_topk`` (random-hyperplane LSH, Charikar 2002: ``planes``-bit sign
+signatures from hash-derived ±1 hyperplanes, multi-probe band buckets —
+no trained state), ``pq_topk`` (PQ asymmetric distance) and ``sq8_topk``
+(int8 dot-product shortlist).
 
-An IVF variant would cluster once (KMeans) and probe nearest centroids; LSH
-was chosen because it needs no trained state and stays deterministic.
+IVF search has ONE plan skeleton, the candidate-generator / verify /
+global-top-k split of REPOSE (ICDE 2021) and CASS (SIGMOD 2020):
+
+1. candidates — each query explodes into its ``n_probe`` nearest k-means
+   cells (``_with_probed_cells``) and equi-joins, broadcast, against the
+   index rows of those cells, read through a ``candidates(*cols)``
+   callable;
+2. shortlist — the index kind's cheap score prunes the pairs: none for
+   IVF-Flat (``_flat_plan``), the hamming distance of the stored sign
+   sketch ``sig`` (``_hybrid_plan``), PQ asymmetric distance over the
+   stored ``codes`` (``_pq_plan``), the int8 dot product over the stored
+   ``sq8_code`` (``_sq8_plan``);
+3. exact re-rank — ``_exact_rerank`` joins the true embeddings back BY ID
+   (shortlist rows only) and scores cosine;
+4. top-k — ``_topk``.
+
+The four plans serve both the in-memory operators (``ivf_topk``,
+``ivf_lsh_topk``, ``ivf_pq_topk``, ``ivf_sq8_topk``: fit, encode, select
+from the encoded frame) and the persisted ``ivf_index_search`` (reads
+with the filter predicate, the streamed delta and the tombstones). The
+stored-row encoding (``cell``, ``sig``, ``codes``, ``sq8_code``) is
+computed only by ``_encode_index``, which ``ivf_index_write`` and
+``streaming.stream_ivf_ingest`` write and the in-memory operators search.
 """
 
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -70,6 +91,69 @@ def normalize_embeddings(
     )
 
 
+# --- the shared search stages ------------------------------------------------
+
+
+def _vectors(df: DataFrame, role: str, id_col: str, emb_col: str) -> DataFrame:
+    """(``query_id``, ``__q_emb``) or (``corpus_id``, ``__c_emb``) for
+    ``role`` "query" / "corpus": the id and the double-cast embedding."""
+    return with_double_embedding(df, emb_col).select(
+        F.col(id_col).alias(f"{role}_id"),
+        F.col(emb_col).alias(f"__{role[0]}_emb"),
+    )
+
+
+def _not_self() -> Column:
+    return F.col("query_id") != F.col("corpus_id")
+
+
+def _topk(
+    df: DataFrame,
+    k: "int | Column",
+    order: "tuple[Column, ...]",
+    by: "tuple[str, ...]" = ("query_id",),
+    rank: str = "rank",
+) -> DataFrame:
+    """The one per-group top-k: number each ``by`` group's rows 1.. under
+    ``order`` (the score, then the id tie-break) into ``rank`` and keep
+    ranks <= ``k`` (an int, or a per-row Column)."""
+    w = W.partitionBy(*by).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _exact_rerank(
+    pairs: DataFrame,
+    corpus_emb: "DataFrame | None" = None,
+    q_emb: "DataFrame | None" = None,
+    carry: "tuple[str, ...]" = (),
+) -> DataFrame:
+    """The one exact cosine re-rank: (query_id, corpus_id, *carry) pairs
+    gain ``cosine_sim``. The true embeddings join back BY ID — the corpus
+    side (corpus_id, __c_emb) first, then the query side (query_id,
+    __q_emb); callers wrap either in ``F.broadcast``. A flat scan whose
+    pairs already carry both arrays passes neither."""
+    if corpus_emb is not None:
+        pairs = pairs.join(corpus_emb, "corpus_id")
+    if q_emb is not None:
+        pairs = pairs.join(q_emb, "query_id")
+    return pairs.select(
+        "query_id",
+        "corpus_id",
+        *carry,
+        cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+    )
+
+
+def _cosine_topk(
+    scored: DataFrame, k: int, carry: "tuple[str, ...]" = ()
+) -> DataFrame:
+    """Final stage of every cosine-ranked search: top ``k`` per query by
+    ``cosine_sim`` desc, ``corpus_id`` asc."""
+    return _topk(
+        scored, k, (F.col("cosine_sim").desc(), F.col("corpus_id").asc())
+    ).select("query_id", "corpus_id", *carry, "cosine_sim", "rank")
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -84,25 +168,10 @@ def brute_force_topk(
     the broadcast small-query-side contract (see ``_guard_query_count``
     — round 10 extended the sq8 guard to every flat-scan entry point)."""
     _guard_query_count(queries, max_queries)
-    c = with_double_embedding(corpus, emb_col).select(
-        F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("__c_emb")
-    )
-    q = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "corpus_id",
-        cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-    ).where(F.col("query_id") != F.col("corpus_id"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine_sim", "rank")
-    )
+    c = _vectors(corpus, "corpus", id_col, emb_col)
+    q = _vectors(queries, "query", id_col, emb_col)
+    scored = _exact_rerank(c.crossJoin(F.broadcast(q))).where(_not_self())
+    return _cosine_topk(scored, k)
 
 
 def rrf_fuse(
@@ -152,13 +221,13 @@ def rrf_fuse(
         F.sum("__contrib").alias("__score"),
         F.count(F.lit(1)).cast("int").alias("n_lists"),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("__score").desc(), F.col("corpus_id").asc()
-    )
     return (
-        fused.withColumn("rrf_rank", F.row_number().over(w))
-        .where(F.col("rrf_rank") <= top_k)
-        .select(
+        _topk(
+            fused,
+            top_k,
+            (F.col("__score").desc(), F.col("corpus_id").asc()),
+            rank="rrf_rank",
+        ).select(
             "query_id",
             "corpus_id",
             "n_lists",
@@ -342,32 +411,15 @@ def lsh_topk(
         sig_bands(queries, "query")
         .join(c_buckets, on=["band_idx", "band_val"])
         .select("query_id", F.explode("members").alias("corpus_id"))
-        .where(F.col("query_id") != F.col("corpus_id"))
+        .where(_not_self())
         .dropDuplicates(["query_id", "corpus_id"])
     )
-    c_emb = with_double_embedding(corpus, emb_col).select(
-        F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("__c_emb")
+    scored = _exact_rerank(
+        cand,
+        _vectors(corpus, "corpus", id_col, emb_col),
+        _vectors(queries, "query", id_col, emb_col),
     )
-    q_emb = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
-    scored = (
-        cand.join(q_emb, "query_id")
-        .join(c_emb, "corpus_id")
-        .select(
-            "query_id",
-            "corpus_id",
-            cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine_sim", "rank")
-    )
+    return _cosine_topk(scored, k)
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -671,41 +723,21 @@ def ivf_topk(
     corpus/``n_cells``-sized cell scans instead of hash buckets — better on
     clustered embedding distributions.
 
-    Scale shape: up to ``literal_max`` cells the centroid literals ride the
-    plan (no model table, no join); above, the model travels as a broadcast
-    one-row centroid table with a codegen argmin (no giant literal tree).
-    The candidate join is an equi-join on ``cell``; the wide embedding
-    arrays never fan out (each corpus row keeps exactly one cell; only
-    query rows replicate x ``n_probe``)."""
+    Runs the IVF-Flat plan of the module skeleton (``_flat_plan``) over the
+    in-memory encoded corpus — the same plan ``ivf_index_search`` runs on a
+    persisted index. Up to ``literal_max`` cells the centroid literals ride
+    the plan (no model table, no join); above, the model travels as a
+    broadcast one-row centroid table with a codegen argmin. The wide
+    embedding arrays never fan out (each corpus row keeps exactly one
+    cell; only query rows replicate x ``n_probe``)."""
     centroids = kmeans_fit(
         corpus, n_cells, n_iter, id_col, emb_col, dim,
         train_fraction, train_salt, train_hash_method, literal_max,
     )
-    c = _with_cell(
-        with_double_embedding(corpus, emb_col).select(
-            F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("__c_emb")
-        ),
-        "__c_emb",
-        centroids,
-        literal_max,
+    _, probed, candidates = _in_memory_index(
+        corpus, queries, centroids, n_probe, literal_max, id_col, emb_col
     )
-    q = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
-    probed = _with_probed_cells(q, "__q_emb", centroids, n_probe, literal_max)
-    scored = probed.join(c, "cell").select(
-        "query_id",
-        "corpus_id",
-        cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-    ).where(F.col("query_id") != F.col("corpus_id"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine_sim", "rank")
-    )
+    return _flat_plan(probed, candidates, k)
 
 
 def ivf_lsh_topk(
@@ -740,73 +772,21 @@ def ivf_lsh_topk(
     IVF's 0.86; real embedding corpora (neighbors at cosine >= 0.7) sit
     several binomial sigmas from random pairs and prune most of the cell.
 
-    Scale shape: the cell join carries only (id, cell, 8-byte sig) — wide
-    embedding arrays are joined back BY ID after pruning, once per side;
-    corpus rows never replicate (one cell each); query rows replicate only
-    x ``n_probe``. The hamming filter is codegen (xor + bit_count) applied
-    join-side, so pruned candidates never reach the embedding join."""
+    Runs the hybrid plan of the module skeleton (``_hybrid_plan``) over the
+    in-memory encoded corpus, whose ``sig`` column is the one a persisted
+    hybrid index stores: the cell join carries only (id, cell, 8-byte
+    sig), the hamming filter is codegen applied join-side, and the wide
+    embeddings join back BY ID for the survivors only."""
     centroids = kmeans_fit(
         corpus, n_cells, n_iter, id_col, emb_col, dim,
         train_fraction, train_salt, train_hash_method, literal_max,
     )
-    c_emb = with_double_embedding(corpus, emb_col).select(
-        F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("__c_emb")
+    q, probed, candidates = _in_memory_index(
+        corpus, queries, centroids, n_probe, literal_max, id_col, emb_col,
+        planes=planes, sig_seed=seed, sig_hash_method=hash_method, dim=dim,
     )
-    c_compact = _with_cell(
-        c_emb.select(
-            "corpus_id",
-            F.col("__c_emb"),
-            hyperplane_signature(
-                F.col("__c_emb"), planes, seed, hash_method, dim
-            ).alias("__c_sig"),
-        ),
-        "__c_emb",
-        centroids,
-        literal_max,
-    ).select("corpus_id", "cell", "__c_sig")
-    q_emb = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
-    q_compact = _with_probed_cells(
-        q_emb.select(
-            "query_id",
-            F.col("__q_emb"),
-            hyperplane_signature(
-                F.col("__q_emb"), planes, seed, hash_method, dim
-            ).alias("__q_sig"),
-        ),
-        "__q_emb",
-        centroids,
-        n_probe,
-        literal_max,
-    ).select("query_id", "__q_sig", "cell")
-    # a corpus vector lives in exactly one cell and probed cells are
-    # distinct, so (query_id, corpus_id) pairs are already unique
-    pairs = (
-        q_compact.join(c_compact, "cell")
-        .where(
-            F.bit_count(F.col("__q_sig").bitwiseXOR(F.col("__c_sig")))
-            <= max_hamming
-        )
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id")
-    )
-    scored = (
-        pairs.join(c_emb, "corpus_id")
-        .join(F.broadcast(q_emb), "query_id")
-        .select(
-            "query_id",
-            "corpus_id",
-            cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine_sim", "rank")
+    return _hybrid_plan(
+        q, probed, candidates, k, max_hamming, planes, seed, hash_method, dim
     )
 
 
@@ -989,15 +969,13 @@ def mine_hard_negatives(
             .alias("pair_type"),
         )
     )
-    w = W.partitionBy("anchor_id", "pair_type").orderBy(
-        F.col("cosine_sim").desc(), F.col("pair_id").asc()
-    )
     keep = F.when(F.col("pair_type") == "pos", k_pos).otherwise(k_neg)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= keep)
-        .select("anchor_id", "pair_id", "cosine_sim", "pair_type", "rank")
-    )
+    return _topk(
+        scored,
+        keep,
+        (F.col("cosine_sim").desc(), F.col("pair_id").asc()),
+        by=("anchor_id", "pair_type"),
+    ).select("anchor_id", "pair_id", "cosine_sim", "pair_type", "rank")
 
 
 # --- product quantization (Jégou/Douze/Schmid 2011, the FAISS IVF-PQ path) --
@@ -1119,50 +1097,27 @@ def pq_fit(
     return codebooks
 
 
-def _pq_res_slice_sql(
-    emb_sql: str, s: int, sub: int, centroid_arr_sql: "str | None"
-) -> str:
-    """Subspace ``s``'s slice of the (residual-)vector. Residual encoding
-    subtracts the coarse centroid SLICE-WISE — each element is touched
-    once across all subspaces, so residual mode costs the same O(dim)
-    arithmetic as raw mode (never a full-dim residual recomputed per
-    subspace)."""
-    sl = f"slice({emb_sql}, {s * sub + 1}, {sub})"
-    if centroid_arr_sql is not None:
-        sl = (
-            f"zip_with({sl}, slice({centroid_arr_sql}, {s * sub + 1}, "
-            f"{sub}), (x, y) -> x - y)"
-        )
-    return sl
+def _pq_slice_sql(emb_sql: str, s: int, sub: int) -> str:
+    """Subspace ``s``'s slice of the vector (the residual, for IVF-PQ —
+    bound once per row by ``_with_residual``)."""
+    return f"slice({emb_sql}, {s * sub + 1}, {sub})"
 
 
-def _pq_codes_sql(
-    emb_sql: str,
-    codebooks: list[list[list[float]]],
-    centroid_arr_sql: "str | None" = None,
-) -> str:
-    """codes array<int> for one row; ``centroid_arr_sql`` (the row's
-    coarse centroid as an array expression) switches on residual
-    encoding. SQL form (round 14 — the Column build cost m x n_codes x
-    ~6 py4j round trips per call)."""
+def _pq_codes_sql(emb_sql: str, codebooks: list[list[list[float]]]) -> str:
+    """codes array<int> for one row. SQL form (round 14 — the Column
+    build cost m x n_codes x ~6 py4j round trips per call)."""
     sub = len(codebooks[0][0])
     return (
         "array("
         + ", ".join(
-            _nearest_cell_sql(
-                _pq_res_slice_sql(emb_sql, s, sub, centroid_arr_sql), cb
-            )
+            _nearest_cell_sql(_pq_slice_sql(emb_sql, s, sub), cb)
             for s, cb in enumerate(codebooks)
         )
         + ")"
     )
 
 
-def _pq_lut_sql(
-    emb_sql: str,
-    codebooks: list[list[list[float]]],
-    centroid_arr_sql: "str | None" = None,
-) -> str:
+def _pq_lut_sql(emb_sql: str, codebooks: list[list[list[float]]]) -> str:
     """m x n_codes LUT of 6-dp squared L2 distances from a (residual-)
     query vector to every codebook centroid (SQL form)."""
     sub = len(codebooks[0][0])
@@ -1172,10 +1127,7 @@ def _pq_lut_sql(
             "array("
             + ", ".join(
                 "round("
-                + _sq_dist_sql(
-                    _pq_res_slice_sql(emb_sql, s, sub, centroid_arr_sql),
-                    _arr_sql(c),
-                )
+                + _sq_dist_sql(_pq_slice_sql(emb_sql, s, sub), _arr_sql(c))
                 + ", 6)"
                 for c in cb
             )
@@ -1183,22 +1135,6 @@ def _pq_lut_sql(
             for s, cb in enumerate(codebooks)
         )
         + ")"
-    )
-
-
-def _centroid_arr_sql(centroids: list[list[float]], cell_sql: str) -> str:
-    """The row's coarse centroid as an array expression (literal model
-    table, O(1) element_at by cell id) — SQL form."""
-    arrs = ", ".join(_arr_sql(c) for c in centroids)
-    return f"element_at(array({arrs}), {cell_sql} + 1)"
-
-
-def _centroid_arr(centroids: list[list[float]], cell: Column) -> Column:
-    """The row's coarse centroid as an array column (literal model table,
-    O(1) element_at by cell id). Column form — kept for the one-time
-    full-dim residual subtraction in ``ivf_pq_fit`` (not a wide tree)."""
-    return F.element_at(
-        F.lit([[float(x) for x in c] for c in centroids]), cell + 1
     )
 
 
@@ -1210,33 +1146,37 @@ def _with_residual(
     named column (optimization round 14): the PQ code/LUT expressions
     over the residual then reference a cheap attribute instead of
     re-deriving the residual — and re-embedding the whole coarse
-    centroid table — per (subspace, code). Values are element-identical
-    to the old slice-wise derivation (``x[i] - cent[i]`` either way), so
-    every training-unrolled oracle is unchanged. The alias is non-cheap
-    and multiply-referenced, so CollapseProject cannot inline it back
-    (SPARK-36718 guard)."""
+    centroid table — per (subspace, code). The centroid comes from a
+    literal model table by O(1) ``element_at`` on the cell id. The alias
+    is non-cheap and multiply-referenced, so CollapseProject cannot
+    inline it back (SPARK-36718 guard)."""
+    table = F.lit([[float(x) for x in c] for c in centroids])
     return df.withColumn(
         out_col,
         F.zip_with(
             F.col(emb_attr),
-            _centroid_arr(centroids, F.col("cell")),
+            F.element_at(table, F.col("cell") + 1),
             lambda x, y: x - y,
         ),
     )
 
 
-def _pq_adc_dist() -> Column:
+def _pq_adc_dist(codes: str = "codes") -> Column:
     """ADC distance: left-to-right sum of per-subspace LUT lookups over
     the row's ``codes`` against the query's ``__lut``."""
     return F.aggregate(
         F.zip_with(
-            F.col("codes"),
+            F.col(codes),
             F.col("__lut"),
             lambda c, l: F.element_at(l, c + 1),
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def _adc_order() -> "tuple[Column, Column]":
+    return (F.col("approx_dist").asc(), F.col("corpus_id").asc())
 
 
 def pq_encode(
@@ -1278,27 +1218,15 @@ def pq_topk(
     Scale shape: the LUT rides the (tiny, broadcast) query side; the
     corpus side scans only the ``m``-int code column — the point of PQ:
     the candidate scan touches ``m`` bytes per vector, not the raw
-    embedding, and stays whole-stage codegen. Compose with the IVF cell
-    routing (``_with_cell`` / probed cells) for IVF-PQ, and re-rank the
-    top candidates against true embeddings when exactness matters.
+    embedding, and stays whole-stage codegen. ``ivf_pq_topk`` composes
+    it with IVF cell routing and an exact re-rank of the top candidates.
     ``max_queries`` enforces the broadcast small-query-side contract
     (``_guard_query_count``, round 10).
     """
     _guard_query_count(queries, max_queries)
-    sub = len(codebooks[0][0])
-    q = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
     lut = F.expr(_pq_lut_sql("`__q_emb`", codebooks))
-    q_lut = q.select("query_id", lut.alias("__lut"))
-    dist = F.aggregate(
-        F.zip_with(
-            F.col(codes_col),
-            F.col("__lut"),
-            lambda c, l: F.element_at(l, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    q_lut = _vectors(queries, "query", id_col, emb_col).select(
+        "query_id", lut.alias("__lut")
     )
     scored = (
         codes_df.crossJoin(F.broadcast(q_lut))
@@ -1306,16 +1234,11 @@ def pq_topk(
         .select(
             "query_id",
             F.col(id_col).alias("corpus_id"),
-            dist.alias("approx_dist"),
+            _pq_adc_dist(codes_col).alias("approx_dist"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "approx_dist", "rank")
+    return _topk(scored, k, _adc_order()).select(
+        "query_id", "corpus_id", "approx_dist", "rank"
     )
 
 
@@ -1331,13 +1254,15 @@ def ivf_pq_fit(
     train_fraction: float | None = None,
     train_salt: int = 42,
     train_hash_method: str = "xxhash64",
-    residual: bool = True,
     literal_max: int = LITERAL_CELL_MAX,
 ) -> list[list[list[float]]]:
     """Train the PQ codebooks for an IVF-PQ index over trained coarse
-    ``centroids``: residual mode (default) fits :func:`pq_fit` on
-    ``x - centroid[cell]`` so the codes spend their bits on within-cell
-    structure. Use this to build the model for
+    ``centroids``: fits :func:`pq_fit` on the residuals
+    ``x - centroid[cell]`` (FAISS's ``encode_residual``), so the codes
+    spend their bits on within-cell structure instead of re-encoding the
+    coarse position the cell id already carries — the sweep measured
+    this as the difference between ~0.2 and usable recall on clustered
+    corpora (SCALING.md). Use this to build the model for
     ``ivf_index_write(codebooks=...)`` — it is exactly the training
     ``ivf_pq_topk`` runs inline.
 
@@ -1356,21 +1281,12 @@ def ivf_pq_fit(
             d, train_fraction, keys=[id_col], salt=train_salt,
             method=train_hash_method,
         )
-    if residual:
-        assigned = _with_cell(d, emb_col, centroids, literal_max)
-        cent_arr = _centroid_arr(centroids, F.col("cell"))
-        src = assigned.select(
-            id_col,
-            F.zip_with(F.col(emb_col), cent_arr, lambda x, y: x - y).alias(
-                emb_col
-            ),
-        )
-    else:
-        src = d
-    # persist the (sampled) training frame across the m sub-trainings:
-    # each kmeans_fit call materializes its sliced projection, and without
-    # this the assignment + residual arithmetic would recompute m times
-    src = src.persist()
+    assigned = _with_cell(d, emb_col, centroids, literal_max)
+    # persist the (sampled) residual training frame: pq_fit reads it
+    # for its dim probe and again for its own persisted projection
+    src = _with_residual(assigned, emb_col, centroids, emb_col).select(
+        id_col, emb_col
+    ).persist()
     try:
         return pq_fit(
             src, m, n_codes, n_iter, id_col, emb_col, dim,
@@ -1397,22 +1313,14 @@ def ivf_pq_topk(
     train_salt: int = 42,
     train_hash_method: str = "xxhash64",
     rerank: int | None = None,
-    residual: bool = True,
     literal_max: int = LITERAL_CELL_MAX,
 ) -> DataFrame:
     """IVF-PQ (the FAISS default at billion scale): coarse k-means cells
     route each query to ``n_probe`` cells, then candidates inside those
     cells are scored by PQ asymmetric distance — the probed scan touches
-    only the ``m``-int code column, never raw embeddings.
-
-    ``residual=True`` (default, FAISS's ``encode_residual``): codebooks
-    train on and codes encode ``x - centroid[cell]``, so the PQ bits
-    spend entirely on WITHIN-cell structure instead of re-encoding the
-    coarse position the cell id already carries — the sweep measured
-    this as the difference between ~0.2 and usable recall on clustered
-    corpora (SCALING.md). Residual arithmetic is slice-wise (see
-    ``_pq_res_slice``), so it costs the same O(dim) per row as raw mode.
-    Queries compute one LUT per probed cell (vs one per query raw) —
+    only the ``m``-int code column, never raw embeddings. Codebooks train
+    on and codes encode the residual ``x - centroid[cell]``
+    (:func:`ivf_pq_fit`); queries compute one LUT per probed cell —
     n_probe x m x n_codes tiny.
 
     With ``rerank`` set, the top ``rerank`` ADC candidates per query are
@@ -1423,100 +1331,226 @@ def ivf_pq_topk(
     rank).
 
     Both trainings ride :func:`kmeans_fit`'s deterministic sampled
-    contract. Scale shape: cells prune the candidate COUNT
-    (corpus/n_cells x n_probe rows per query), PQ prunes the candidate
-    WIDTH (m ints vs dim doubles), and the re-rank joins embeddings for
-    only queries x rerank rows — the three-level funnel that serves
-    billion-vector corpora from RAM.
+    contract; the search is the PQ-ADC plan of the module skeleton
+    (``_pq_plan``) over the in-memory encoded corpus. Scale shape: cells
+    prune the candidate COUNT (corpus/n_cells x n_probe rows per query),
+    PQ prunes the candidate WIDTH (m ints vs dim doubles), and the
+    re-rank joins embeddings for only queries x rerank rows — the
+    three-level funnel that serves billion-vector corpora from RAM.
     """
     centroids = kmeans_fit(
         corpus, n_cells, n_iter, id_col, emb_col, dim,
         train_fraction, train_salt, train_hash_method, literal_max,
     )
-    d = with_double_embedding(corpus, emb_col).select(id_col, emb_col)
-    assigned = _with_cell(d, emb_col, centroids, literal_max)
     codebooks = ivf_pq_fit(
         corpus, centroids, m, n_codes, pq_n_iter, id_col, emb_col, dim,
-        train_fraction, train_salt, train_hash_method, residual,
-        literal_max,
+        train_fraction, train_salt, train_hash_method, literal_max,
     )
-    # Residual-ONCE layering (optimization round 14): the residual used
-    # to be re-derived slice-wise INSIDE every per-(subspace, code)
-    # distance expression, embedding the whole n_cells x dim coarse
-    # centroid table m x n_codes x 2 times in the plan — q78's plan text
-    # was 310 KB and its analysis dominated the query. One named
-    # full-dim residual column carries the centroid table once;
-    # element values are identical (x[i] - cent[i] either way), so every
-    # training-unrolled oracle still matches bit-for-bit. CollapseProject
-    # cannot inline it back: the alias is non-cheap and referenced by
-    # every subspace slice (SPARK-36718 guard).
-    if residual:
-        coded_src = _with_residual(assigned, emb_col, centroids, "__res")
-        codes_sql = _pq_codes_sql("`__res`", codebooks)
-    else:
-        coded_src = assigned
-        codes_sql = _pq_codes_sql(f"`{emb_col}`", codebooks)
-    coded = coded_src.select(
-        F.col(id_col), "cell", F.expr(codes_sql).alias("codes")
+    q, probed, candidates = _in_memory_index(
+        corpus, queries, centroids, n_probe, literal_max, id_col, emb_col,
+        codebooks=codebooks,
     )
-    q = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
-    probed_src = _with_probed_cells(
-        q, "__q_emb", centroids, n_probe, literal_max
-    )
-    if residual:
-        probed_src = _with_residual(probed_src, "__q_emb", centroids, "__qres")
-        lut_sql = _pq_lut_sql("`__qres`", codebooks)
-    else:
-        lut_sql = _pq_lut_sql("`__q_emb`", codebooks)
-    probed = probed_src.select(
-        "query_id", "cell", F.expr(lut_sql).alias("__lut")
-    )
-    scored = (
-        F.broadcast(probed)
-        .join(coded, "cell")
-        .where(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("corpus_id"),
-            _pq_adc_dist().alias("approx_dist"),
+    return _pq_plan(q, probed, candidates, k, centroids, codebooks, rerank)
+
+
+# --- the IVF skeleton: one index encoder, one search plan per index kind ----
+
+
+def _encode_index(
+    df: DataFrame,
+    centroids: list[list[float]],
+    emb_col: str = "embedding",
+    literal_max: int = LITERAL_CELL_MAX,
+    planes: int | None = None,
+    sig_seed: int = 42,
+    sig_hash_method: str = "xxhash64",
+    dim: int | None = None,
+    codebooks: list[list[list[float]]] | None = None,
+    sq8: list[float] | None = None,
+) -> DataFrame:
+    """The stored-row encoding of an IVF index — the only code that
+    computes its columns. Returns ``df`` with the embedding cast to double
+    plus ``sq8_code`` (int8 codes, with ``sq8`` scales), ``sig`` (the
+    ``planes``-bit hyperplane sign sketch, with ``planes``), ``cell`` (the
+    nearest centroid, always) and ``codes`` (PQ codes of the residual
+    ``x - centroid[cell]``, with ``codebooks``). A per-row projection with
+    no shuffle, so it runs unchanged on a streaming frame."""
+    work = with_double_embedding(df, emb_col)
+    if sq8 is not None:
+        work = work.withColumn("sq8_code", sq8_encode_expr(F.col(emb_col), sq8))
+    if planes is not None:
+        work = work.withColumn(
+            "sig",
+            hyperplane_signature(
+                F.col(emb_col), planes, sig_seed, sig_hash_method, dim
+            ),
         )
+    work = _with_cell(work, emb_col, centroids, literal_max)
+    if codebooks is None:
+        return work
+    return (
+        _with_residual(work, emb_col, centroids, "__res")
+        .withColumn("codes", F.expr(_pq_codes_sql("`__res`", codebooks)))
+        .drop("__res")
     )
-    w_adc = W.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("corpus_id").asc()
+
+
+def _index_cols(cols, id_col: str, emb_col: str) -> "list[Column]":
+    """Select list of a ``candidates(*cols)`` read: ``corpus_id`` first,
+    then each requested stored column — ``"__c_emb"`` names the
+    double-cast embedding."""
+    return [F.col(id_col).alias("corpus_id")] + [
+        F.col(emb_col).cast("array<double>").alias("__c_emb")
+        if c == "__c_emb"
+        else F.col(c)
+        for c in cols
+    ]
+
+
+def _probe_queries(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    n_probe: int,
+    literal_max: int,
+    id_col: str,
+    emb_col: str,
+) -> "tuple[DataFrame, DataFrame]":
+    """(q, probed): the (query_id, __q_emb) frame and its explosion into
+    the ``n_probe`` nearest cells — the query side of every IVF plan. A
+    corpus row lives in exactly one cell and the probed cells are
+    distinct, so the cell join yields each (query_id, corpus_id) pair at
+    most once: no plan dedups."""
+    q = _vectors(queries, "query", id_col, emb_col)
+    return q, _with_probed_cells(q, "__q_emb", centroids, n_probe, literal_max)
+
+
+def _in_memory_index(
+    corpus: DataFrame,
+    queries: DataFrame,
+    centroids: list[list[float]],
+    n_probe: int,
+    literal_max: int,
+    id_col: str,
+    emb_col: str,
+    **encoding,
+):
+    """(q, probed, candidates) for an in-memory ``ivf_*_topk``: the corpus
+    encoded by ``_encode_index`` exactly as a persisted index stores it.
+    Embedding-only reads (the re-rank joins) select from the unencoded
+    corpus, so they carry no cell assignment."""
+    encoded = _encode_index(corpus, centroids, emb_col, literal_max, **encoding)
+
+    def candidates(*cols) -> DataFrame:
+        src = corpus if set(cols) <= {"__c_emb"} else encoded
+        return src.select(*_index_cols(cols, id_col, emb_col))
+
+    q, probed = _probe_queries(
+        queries, centroids, n_probe, literal_max, id_col, emb_col
     )
-    if rerank is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w_adc))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "approx_dist", "rank")
+    return q, probed, candidates
+
+
+def _flat_plan(probed: DataFrame, candidates, k: int) -> DataFrame:
+    """IVF-Flat: every row of the probed cells is a candidate, scored by
+    exact cosine in place (the cell join carries the embeddings)."""
+    pairs = F.broadcast(probed).join(candidates("__c_emb", "cell"), "cell")
+    return _cosine_topk(_exact_rerank(pairs).where(_not_self()), k)
+
+
+def _hybrid_plan(
+    q: DataFrame,
+    probed: DataFrame,
+    candidates,
+    k: int,
+    max_hamming: int,
+    planes: int,
+    seed: int,
+    hash_method: str,
+    dim: "int | None",
+) -> DataFrame:
+    """IVF + sign sketch: the cell join carries only (id, cell, stored
+    8-byte ``sig``); pairs within ``max_hamming`` of the query's sketch
+    are re-ranked by exact cosine. The sketch parameters must be the
+    ones the index was encoded with."""
+    sketched = probed.withColumn(
+        "__q_sig",
+        hyperplane_signature(F.col("__q_emb"), planes, seed, hash_method, dim),
+    ).select("query_id", "__q_sig", "cell")
+    pairs = (
+        F.broadcast(sketched)
+        .join(candidates("cell", "sig"), "cell")
+        .where(
+            F.bit_count(F.col("__q_sig").bitwiseXOR(F.col("sig")))
+            <= max_hamming
         )
-    shortlist = (
-        scored.withColumn("__adc_rank", F.row_number().over(w_adc))
-        .where(F.col("__adc_rank") <= rerank)
+        .where(_not_self())
         .select("query_id", "corpus_id")
     )
-    emb_c = d.select(
-        F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("__c_emb")
+    return _cosine_topk(
+        _exact_rerank(pairs, candidates("__c_emb"), F.broadcast(q)), k
     )
-    exact = (
-        shortlist.join(emb_c, "corpus_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "corpus_id",
-            cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+
+
+def _pq_plan(
+    q: DataFrame,
+    probed: DataFrame,
+    candidates,
+    k: int,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    rerank: "int | None",
+) -> DataFrame:
+    """IVF-PQ: the cell join carries (id, cell, ``codes``) and scores each
+    pair by asymmetric distance against the query's per-(query, cell)
+    residual LUT. Without ``rerank``, returns the ADC top-k
+    (approx_dist); with it, the ADC top-``rerank`` shortlist is re-ranked
+    by exact cosine."""
+    lut = _with_residual(probed, "__q_emb", centroids, "__qres").select(
+        "query_id",
+        "cell",
+        F.expr(_pq_lut_sql("`__qres`", codebooks)).alias("__lut"),
+    )
+    adc = (
+        F.broadcast(lut)
+        .join(candidates("cell", "codes"), "cell")
+        .where(_not_self())
+        .select("query_id", "corpus_id", _pq_adc_dist().alias("approx_dist"))
+    )
+    if rerank is None:
+        return _topk(adc, k, _adc_order()).select(
+            "query_id", "corpus_id", "approx_dist", "rank"
         )
+    shortlist = _topk(adc, rerank, _adc_order(), rank="__adc_rank").select(
+        "query_id", "corpus_id"
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
+    return _cosine_topk(
+        _exact_rerank(shortlist, candidates("__c_emb"), F.broadcast(q)), k
     )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine_sim", "rank")
+
+
+def _sq8_plan(
+    q: DataFrame,
+    probed: DataFrame,
+    candidates,
+    k: int,
+    scales: list[float],
+    shortlist: "int | None",
+) -> DataFrame:
+    """IVF,SQ8: the cell join carries (id, cell, ``sq8_code``) and scores
+    each pair by the exact int8 dot product against the query's codes;
+    the ``shortlist`` is re-ranked by exact cosine (``_sq8_rerank``)."""
+    coded = probed.select(
+        "query_id",
+        "cell",
+        sq8_encode_expr(F.col("__q_emb"), scales).alias("__q_code"),
     )
+    scored = (
+        F.broadcast(coded)
+        .join(candidates("cell", "sq8_code"), "cell")
+        .where(_not_self())
+        .select("query_id", "corpus_id", _int8_dot().alias("int8_dot"))
+    )
+    return _sq8_rerank(scored, candidates("__c_emb"), q, k, shortlist)
 
 
 # --- persisted IVF index (offline build / streaming ingest / pruned search) --
@@ -1608,7 +1642,6 @@ def ivf_index_write(
     sig_hash_method: str = "xxhash64",
     dim: int | None = None,
     codebooks: list[list[list[float]]] | None = None,
-    pq_residual: bool = True,
     sq8: list[float] | None = None,
 ) -> None:
     """Build the persisted index: assign every corpus row its nearest cell
@@ -1625,14 +1658,11 @@ def ivf_index_write(
     The sketch parameters are caller-managed: pass the same
     (planes, sig_seed, sig_hash_method, dim) to the search.
 
-    With ``codebooks`` set (from :func:`pq_fit`), each row also stores
-    its PQ code array in a ``codes`` column; ``ivf_index_search`` with
-    the same ``codebooks`` then serves the IVF-PQ plan — the probed
+    With ``codebooks`` set (from :func:`ivf_pq_fit`, trained on
+    residuals), each row also stores the PQ code array of its residual
+    ``x - centroid[cell]`` in a ``codes`` column; ``ivf_index_search``
+    with the same ``codebooks`` then serves the IVF-PQ plan — the probed
     partitions' scan reads m ints per row instead of the embedding.
-    ``pq_residual`` (default, the FAISS design) encodes
-    ``x - centroid[cell]``; like the sketch parameters it is caller-
-    managed — pass the same value to the search (and the codebooks must
-    have been trained on residuals, as ``ivf_pq_topk`` does).
 
     With ``sq8`` set (the per-dimension absmax scales from
     :func:`sq8_scales`), each row also stores its int8 code array in an
@@ -1643,37 +1673,20 @@ def ivf_index_write(
     "byte"/dim of codes instead of the embedding column (parquet column
     pruning makes storing BOTH the embedding and the codes free at scan
     time — the re-rank alone touches the wide column, by id, for
-    shortlist rows only)."""
+    shortlist rows only).
+
+    The rows are exactly ``_encode_index``'s output, so base rows,
+    streamed delta rows and the in-memory operators' rows agree."""
     spark = corpus.sparkSession
     ivf_model_write(spark, centroids, fs.join(root, "model"))
     if sq8 is not None:
         sq8_scales_write(spark, sq8, fs.join(root, "sq8_scales"))
     fs.write_text(spark, fs.join(root, GENERATION_MARKER), "0")
-    work = with_double_embedding(corpus, emb_col)
-    if sq8 is not None:
-        work = work.withColumn(
-            "sq8_code", sq8_encode_expr(F.col(emb_col), sq8)
-        )
-    if planes is not None:
-        work = work.withColumn(
-            "sig",
-            hyperplane_signature(
-                F.col(emb_col), planes, sig_seed, sig_hash_method, dim
-            ),
-        )
-    assigned = _with_cell(work, emb_col, centroids, literal_max)
-    if codebooks is not None:
-        if pq_residual:
-            assigned = _with_residual(
-                assigned, emb_col, centroids, "__res"
-            ).withColumn(
-                "codes", F.expr(_pq_codes_sql("`__res`", codebooks))
-            ).drop("__res")
-        else:
-            assigned = assigned.withColumn(
-                "codes", F.expr(_pq_codes_sql(f"`{emb_col}`", codebooks))
-            )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
+    encoded = _encode_index(
+        corpus, centroids, emb_col, literal_max,
+        planes, sig_seed, sig_hash_method, dim, codebooks, sq8,
+    )
+    encoded.write.mode("overwrite").partitionBy("cell").parquet(
         fs.join(root, "index")
     )
 
@@ -1905,7 +1918,6 @@ def ivf_index_search(
     dim: int | None = None,
     codebooks: list[list[list[float]]] | None = None,
     rerank: int | None = None,
-    pq_residual: bool = True,
     predicate: "Column | str | None" = None,
     centroids: "list[list[float]] | None" = None,
     sq8: bool = False,
@@ -1917,14 +1929,16 @@ def ivf_index_search(
     ``n_probe`` nearest cells from the stored model, joins only those
     cells' partitions of the index (broadcast query side -> dynamic
     partition pruning on the parquet scan), exact cosine re-rank.
-    Identical ranking semantics to ``ivf_topk`` with the same model.
+    It loads the model state and dispatches to the index kind's plan of
+    the module skeleton — the same plan the in-memory ``ivf_*_topk``
+    operator runs — with ``candidates`` reading the stored index; so
+    results are identical to ``ivf_topk`` with the same model.
 
-    With ``max_hamming`` set (requires an index written with ``planes`` so
-    a ``sig`` column is stored), serves the HYBRID plan of
-    ``ivf_lsh_topk``: the cell join carries only (id, cell, stored 8-byte
-    sig), the codegen hamming filter prunes candidates join-side, and the
-    wide embeddings are joined back BY ID for the survivors only — the
-    sketch parameters must match the ones given at write time.
+    With ``max_hamming`` set (requires an index written with ``planes``,
+    so a ``sig`` column is stored, and the same sketch parameters),
+    serves the hybrid plan of ``ivf_lsh_topk``. With ``codebooks`` set
+    (the ones the index was written with), serves the IVF-PQ plan of
+    ``ivf_pq_topk``, ``rerank`` included, with its output schema.
 
     ``predicate`` (a Column or SQL string over the index's stored corpus
     columns, e.g. ``"label = 3"``) serves FILTERED ANN: it lands on the
@@ -1952,14 +1966,9 @@ def ivf_index_search(
 
     With ``sq8=True`` (requires an index written with ``sq8=scales``, so
     an ``sq8_code`` column and the ``<root>/sq8_scales`` model table
-    exist), serves the persisted FAISS ``IVF,SQ8`` plan of
-    :func:`ivf_sq8_topk` (round 10): queries encode with the STORED
-    scales, the probed partitions' scan reads (id, cell, sq8_code) only,
-    the exact integer dot product shortlists ``shortlist`` candidates
-    per query (default ``4 * k``), and true embeddings join back BY ID
-    for the exact cosine re-rank of the shortlist alone. Output schema
-    matches ``ivf_sq8_topk``: (query_id, corpus_id, int8_dot,
-    cosine_sim, rank). ``sq8_scales_vec`` skips the per-search scales
+    exist), serves the FAISS ``IVF,SQ8`` plan of :func:`ivf_sq8_topk`,
+    ``shortlist`` included, with its output schema; queries encode with
+    the STORED scales. ``sq8_scales_vec`` skips the per-search scales
     read the way ``centroids`` does for the model."""
     if sq8 and (codebooks is not None or max_hamming is not None):
         raise ValueError(
@@ -1987,17 +1996,8 @@ def ivf_index_search(
         else None
     )
 
-    def read_index(cols) -> DataFrame:
-        base = spark.read.parquet(fs.join(root, "index"))
-        if pred is not None:
-            # filtered (metadata-constrained) search: the predicate sits on
-            # the RAW index read, so it reaches the parquet scan as a
-            # pushed filter alongside the cells' partition pruning — the
-            # persisted-index analog of pre-filtering the corpus before
-            # ivf_topk (which callers of the inline operators do
-            # themselves). Applies to base and delta alike.
-            base = base.where(pred)
-        c = base.select(*cols)
+    def candidates(*cols) -> DataFrame:
+        scans = [spark.read.parquet(fs.join(root, "index"))]
         delta_path = fs.join(root, "stream_index")
         if fs.is_dir(spark, delta_path):
             # the sink may have committed only empty epochs: the directory
@@ -2010,198 +2010,43 @@ def ivf_index_search(
             from pyspark.errors import AnalysisException
 
             try:
-                raw = spark.read.parquet(delta_path)
+                scans.append(spark.read.parquet(delta_path))
             except AnalysisException:
-                return c
-            if pred is not None:
-                raw = raw.where(pred)
-            c = c.unionByName(raw.select(*cols))
+                pass
+        # filtered (metadata-constrained) search: the predicate sits on
+        # each RAW index read, so it reaches the parquet scan as a pushed
+        # filter alongside the cells' partition pruning — the
+        # persisted-index analog of pre-filtering the corpus before
+        # ivf_topk (which callers of the inline operators do themselves).
+        sel = _index_cols(cols, id_col, emb_col)
+        c = reduce(
+            DataFrame.unionByName,
+            [(r if pred is None else r.where(pred)).select(*sel) for r in scans],
+        )
         if tomb_ids is not None:
             c = c.join(tomb_ids, "corpus_id", "left_anti")
         return c
 
-    corpus_id = F.col(id_col).alias("corpus_id")
-    c_emb_cols = [corpus_id, F.col(emb_col).cast("array<double>").alias("__c_emb")]
-    q = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
+    q, probed = _probe_queries(
+        queries, centroids, n_probe, literal_max, id_col, emb_col
     )
-
     if sq8:
-        # IVF,SQ8 serving (round 10): same stages as ivf_sq8_topk, every
-        # model input read from (or passed alongside) the stored index.
+        # IVF,SQ8 serving (round 10): every model input read from (or
+        # passed alongside) the stored index.
         scales = (
             sq8_scales_vec
             if sq8_scales_vec is not None
             else sq8_scales_read(spark, fs.join(root, "sq8_scales"))
         )
-        if shortlist is None:
-            shortlist = 4 * k
-        probed = _with_probed_cells(
-            q, "__q_emb", centroids, n_probe, literal_max
-        ).select(
-            "query_id",
-            "cell",
-            sq8_encode_expr(F.col("__q_emb"), scales).alias("__q_code"),
-        )
-        c_codes = read_index([corpus_id, F.col("cell"), F.col("sq8_code")])
-        idot = F.aggregate(
-            F.zip_with(
-                F.col("__q_code"), F.col("sq8_code"), lambda a, b: a * b
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        scored = (
-            F.broadcast(probed)
-            .join(c_codes, "cell")
-            .where(F.col("query_id") != F.col("corpus_id"))
-            .select("query_id", "corpus_id", idot.alias("int8_dot"))
-        )
-        w_short = W.partitionBy("query_id").orderBy(
-            F.col("int8_dot").desc(), F.col("corpus_id").asc()
-        )
-        short = (
-            scored.withColumn("srank", F.row_number().over(w_short))
-            .where(F.col("srank") <= shortlist)
-            .select("query_id", "corpus_id", "int8_dot")
-        )
-        reranked = (
-            F.broadcast(short)
-            .join(read_index(c_emb_cols), "corpus_id")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "corpus_id",
-                "int8_dot",
-                cosine(F.col("__q_emb"), F.col("__c_emb")).alias(
-                    "cosine_sim"
-                ),
-            )
-        )
-        w_rank = W.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-        )
-        return (
-            reranked.withColumn("rank", F.row_number().over(w_rank))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "int8_dot", "cosine_sim", "rank")
-        )
-
+        return _sq8_plan(q, probed, candidates, k, scales, shortlist)
     if codebooks is not None:
-        # IVF-PQ serving: the probed partitions' scan reads (id, cell,
-        # codes) — m ints per row, never the stored embedding; with
-        # ``rerank``, true embeddings are joined back BY ID for the ADC
-        # shortlist only. Same output schema as ivf_pq_topk: ADC rows
-        # (approx_dist) without rerank, cosine rows with. The index must
-        # have been written with the same ``codebooks`` and
-        # ``pq_residual``.
-        probed_src = _with_probed_cells(
-            q, "__q_emb", centroids, n_probe, literal_max
-        )
-        if pq_residual:
-            probed_src = _with_residual(
-                probed_src, "__q_emb", centroids, "__qres"
-            )
-            lut_sql = _pq_lut_sql("`__qres`", codebooks)
-        else:
-            lut_sql = _pq_lut_sql("`__q_emb`", codebooks)
-        probed = probed_src.select(
-            "query_id", "cell", F.expr(lut_sql).alias("__lut")
-        )
-        c_codes = read_index([corpus_id, F.col("cell"), F.col("codes")])
-        adc = (
-            F.broadcast(probed)
-            .join(c_codes, "cell")
-            .where(F.col("query_id") != F.col("corpus_id"))
-            .select(
-                "query_id", "corpus_id", _pq_adc_dist().alias("approx_dist")
-            )
-        )
-        w_adc = W.partitionBy("query_id").orderBy(
-            F.col("approx_dist").asc(), F.col("corpus_id").asc()
-        )
-        if rerank is None:
-            return (
-                adc.withColumn("rank", F.row_number().over(w_adc))
-                .where(F.col("rank") <= k)
-                .select("query_id", "corpus_id", "approx_dist", "rank")
-            )
-        shortlist = (
-            adc.withColumn("__adc_rank", F.row_number().over(w_adc))
-            .where(F.col("__adc_rank") <= rerank)
-            .select("query_id", "corpus_id")
-        )
-        scored = (
-            shortlist.join(read_index(c_emb_cols), "corpus_id")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "corpus_id",
-                cosine(F.col("__q_emb"), F.col("__c_emb")).alias(
-                    "cosine_sim"
-                ),
-            )
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "cosine_sim", "rank")
-        )
-
+        return _pq_plan(q, probed, candidates, k, centroids, codebooks, rerank)
     if max_hamming is not None:
-        q_sig = q.withColumn(
-            "__q_sig",
-            hyperplane_signature(
-                F.col("__q_emb"), planes, sig_seed, sig_hash_method, dim
-            ),
+        return _hybrid_plan(
+            q, probed, candidates, k, max_hamming, planes, sig_seed,
+            sig_hash_method, dim,
         )
-        probed = _with_probed_cells(
-            q_sig, "__q_emb", centroids, n_probe, literal_max
-        ).select("query_id", "__q_sig", "cell")
-        c_compact = read_index([corpus_id, F.col("cell"), F.col("sig")])
-        pairs = (
-            F.broadcast(probed)
-            .join(c_compact, "cell")
-            .where(
-                F.bit_count(F.col("__q_sig").bitwiseXOR(F.col("sig")))
-                <= max_hamming
-            )
-            .where(F.col("query_id") != F.col("corpus_id"))
-            .select("query_id", "corpus_id")
-        )
-        scored = (
-            pairs.join(read_index(c_emb_cols), "corpus_id")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "corpus_id",
-                cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-            )
-        )
-    else:
-        c = read_index(c_emb_cols + [F.col("cell")])
-        probed = _with_probed_cells(q, "__q_emb", centroids, n_probe, literal_max)
-        scored = (
-            F.broadcast(probed)
-            .join(c, "cell")
-            .select(
-                "query_id",
-                "corpus_id",
-                cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-            )
-            .where(F.col("query_id") != F.col("corpus_id"))
-        )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine_sim", "rank")
-    )
+    return _flat_plan(probed, candidates, k)
 
 
 # ===========================================================================
@@ -2321,61 +2166,64 @@ def sq8_topk(
     must be serving-sized: ``max_queries`` (one cheap count job)
     enforces the broadcast contract with a loud error instead of a
     silent quadratic scan."""
-    if shortlist is None:
-        shortlist = 4 * k
     _guard_query_count(queries, max_queries)
     scales = sq8_scales(corpus, emb_col)
     c_codes = with_double_embedding(corpus, emb_col).select(
         F.col(id_col).alias("corpus_id"),
-        sq8_encode_expr(F.col(emb_col), scales).alias("__c_code"),
+        sq8_encode_expr(F.col(emb_col), scales).alias("sq8_code"),
     )
     q_codes = with_double_embedding(queries, emb_col).select(
         F.col(id_col).alias("query_id"),
         sq8_encode_expr(F.col(emb_col), scales).alias("__q_code"),
     )
-    idot = F.aggregate(
-        F.zip_with(F.col("__q_code"), F.col("__c_code"), lambda a, b: a * b),
+    # shortlist scan carries CODES ONLY — no full-precision vectors in
+    # the shuffle; the exact re-rank touches shortlist-sized sets
+    scored = c_codes.join(F.broadcast(q_codes), _not_self()).select(
+        "query_id", "corpus_id", _int8_dot().alias("int8_dot")
+    )
+    return _sq8_rerank(
+        scored,
+        _vectors(corpus, "corpus", id_col, emb_col),
+        _vectors(queries, "query", id_col, emb_col),
+        k,
+        shortlist,
+    )
+
+
+def _int8_dot() -> Column:
+    """Exact integer dot product of the query's ``__q_code`` and the
+    row's ``sq8_code`` (BIGINT accumulator)."""
+    return F.aggregate(
+        F.zip_with(F.col("__q_code"), F.col("sq8_code"), lambda a, b: a * b),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    # shortlist scan carries CODES ONLY — no full-precision vectors in
-    # the shuffle; the exact re-rank below touches shortlist-sized sets
-    scored = c_codes.join(
-        F.broadcast(q_codes), F.col("query_id") != F.col("corpus_id")
-    ).select("query_id", "corpus_id", idot.alias("int8_dot"))
-    w_short = W.partitionBy("query_id").orderBy(
-        F.col("int8_dot").desc(), F.col("corpus_id").asc()
+
+
+def _sq8_rerank(
+    scored: DataFrame,
+    corpus_emb: DataFrame,
+    q: DataFrame,
+    k: int,
+    shortlist: "int | None",
+) -> DataFrame:
+    """The SQ8 tail shared by ``sq8_topk`` and ``_sq8_plan``: keep the
+    top ``shortlist`` (default ``4 * k``) pairs per query by ``int8_dot``
+    (ties: corpus id), re-rank them by exact cosine (shortlist and query
+    side broadcast), return (query_id, corpus_id, int8_dot, cosine_sim,
+    rank)."""
+    if shortlist is None:
+        shortlist = 4 * k
+    short = _topk(
+        scored,
+        shortlist,
+        (F.col("int8_dot").desc(), F.col("corpus_id").asc()),
+        rank="srank",
+    ).select("query_id", "corpus_id", "int8_dot")
+    reranked = _exact_rerank(
+        F.broadcast(short), corpus_emb, F.broadcast(q), carry=("int8_dot",)
     )
-    short = (
-        scored.withColumn("srank", F.row_number().over(w_short))
-        .where(F.col("srank") <= shortlist)
-        .select("query_id", "corpus_id", "int8_dot")
-    )
-    c_emb = with_double_embedding(corpus, emb_col).select(
-        F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("__c_emb")
-    )
-    q_emb = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
-    reranked = (
-        F.broadcast(short)
-        .join(c_emb, "corpus_id")
-        .join(F.broadcast(q_emb), "query_id")
-        .select(
-            "query_id",
-            "corpus_id",
-            "int8_dot",
-            cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-        )
-    )
-    w_rank = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "int8_dot", "cosine_sim", "rank")
-    )
+    return _cosine_topk(reranked, k, carry=("int8_dot",))
 
 
 def ivf_sq8_topk(
@@ -2409,10 +2257,10 @@ def ivf_sq8_topk(
     Scale shape: the probed-cell equi-join carries codes only — the
     full-precision vectors never enter the shuffle (same plan contract
     as ``sq8_topk``, the codes-only exchange); the exact re-rank
-    broadcast-joins the shortlist back to the corpus. In a persisted
-    deployment the (cell, codes) frame is the stored index —
-    cell-partitioned like ``ivf_index_write``'s layout, with the scales
-    vector as model state beside the centroids.
+    broadcast-joins the shortlist back to the corpus. The search is the
+    SQ8 plan of the module skeleton (``_sq8_plan``) over the in-memory
+    encoded corpus — the plan ``ivf_index_search(sq8=True)`` runs on the
+    stored index.
 
     ``train_fraction``/``train_salt``/``train_hash_method`` pass through
     to :func:`kmeans_fit`'s deterministic hash-sample training contract
@@ -2420,8 +2268,6 @@ def ivf_sq8_topk(
     pipeline stays SQL-oracle-expressible, which is what backs q133).
     ``max_queries`` enforces the broadcast small-query-side contract as
     in :func:`sq8_topk`."""
-    if shortlist is None:
-        shortlist = 4 * k
     _guard_query_count(queries, max_queries)
     scales = sq8_scales(corpus, emb_col)
     centroids = kmeans_fit(
@@ -2429,66 +2275,8 @@ def ivf_sq8_topk(
         train_fraction=train_fraction, train_salt=train_salt,
         train_hash_method=train_hash_method, literal_max=literal_max,
     )
-    c_codes = _with_cell(
-        with_double_embedding(corpus, emb_col).select(
-            F.col(id_col).alias("corpus_id"),
-            sq8_encode_expr(F.col(emb_col), scales).alias("__c_code"),
-            F.col(emb_col).alias("__c_emb"),
-        ),
-        "__c_emb",
-        centroids,
-        literal_max,
-    ).select("cell", "corpus_id", "__c_code")
-    q = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("__q_emb"),
-        sq8_encode_expr(F.col(emb_col), scales).alias("__q_code"),
+    q, probed, candidates = _in_memory_index(
+        corpus, queries, centroids, n_probe, literal_max, id_col, emb_col,
+        sq8=scales,
     )
-    probed = _with_probed_cells(
-        q.select("query_id", "__q_emb", "__q_code"),
-        "__q_emb", centroids, n_probe, literal_max,
-    ).select("cell", "query_id", "__q_code")
-    idot = F.aggregate(
-        F.zip_with(F.col("__q_code"), F.col("__c_code"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        F.broadcast(probed)
-        .join(c_codes, "cell")
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id", idot.alias("int8_dot"))
-    )
-    w_short = W.partitionBy("query_id").orderBy(
-        F.col("int8_dot").desc(), F.col("corpus_id").asc()
-    )
-    short = (
-        scored.withColumn("srank", F.row_number().over(w_short))
-        .where(F.col("srank") <= shortlist)
-        .select("query_id", "corpus_id", "int8_dot")
-    )
-    c_emb = with_double_embedding(corpus, emb_col).select(
-        F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("__c_emb")
-    )
-    q_emb = with_double_embedding(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("__q_emb")
-    )
-    reranked = (
-        F.broadcast(short)
-        .join(c_emb, "corpus_id")
-        .join(F.broadcast(q_emb), "query_id")
-        .select(
-            "query_id",
-            "corpus_id",
-            "int8_dot",
-            cosine(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
-        )
-    )
-    w_rank = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "int8_dot", "cosine_sim", "rank")
-    )
+    return _sq8_plan(q, probed, candidates, k, scales, shortlist)

@@ -2436,8 +2436,7 @@ def _ivf_pq_oracle(
     per-row residuals against the trained coarse centroid, per-subspace
     sampled Lloyd PQ training ON THE RESIDUALS, residual encoding, one
     6-dp LUT per (query, probed cell), and the left-to-right LUT-sum ADC
-    distance — every stage of similarity.ivf_pq_topk(residual=True)
-    value-checked."""
+    distance — every stage of similarity.ivf_pq_topk value-checked."""
     final = f"c{n_iter}"
     coarse_its = ",".join(_ivf_iter_ctes(i, dim) for i in range(1, n_iter + 1))
     train = _IVF_TRAIN.format(salt=train_salt, cutoff=train_cutoff)
@@ -2558,7 +2557,6 @@ def q78_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, emb.where(F.col("vec_id") < 3), k=5,
         n_cells=8, n_iter=3, n_probe=2, m=2, n_codes=8, pq_n_iter=2,
         dim=64, train_fraction=0.5, train_hash_method="md5",
-        residual=True,
     )
     return out.withColumn("rank", F.col("rank").cast("int"))
 
@@ -3006,8 +3004,7 @@ def _q86_model(spark: SparkSession, sf_dir: str):
         seed, n_cells=p["n_cells"], n_iter=0, dim=p["dim"]
     )
     cb = similarity.ivf_pq_fit(
-        seed, cents, m=p["m"], n_codes=p["n_codes"], n_iter=0,
-        dim=p["dim"], residual=True,
+        seed, cents, m=p["m"], n_codes=p["n_codes"], n_iter=0, dim=p["dim"]
     )
     _Q86_MODEL_CACHE[key] = (cents, cb)
     return emb, cents, cb
@@ -3023,8 +3020,7 @@ def _q86_prepare(spark: SparkSession, sf_dir: str) -> None:
     def build(stage: str) -> None:
         emb, cents, cb = _q86_model(spark, sf_dir)
         similarity.ivf_index_write(
-            emb, cents, stage, dim=_Q86["dim"], codebooks=cb,
-            pq_residual=True,
+            emb, cents, stage, dim=_Q86["dim"], codebooks=cb
         )
 
     _staged_publish(_q86_root(sf_dir), sf_dir, build)
@@ -3161,8 +3157,7 @@ def q86_ivf_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _q86_root(sf_dir),
         emb.where(F.col("vec_id") < p["n_queries"]),
         k=p["k"], n_probe=p["n_probe"], dim=p["dim"],
-        codebooks=cb, rerank=p["rerank"], pq_residual=True,
-        centroids=cents,
+        codebooks=cb, rerank=p["rerank"], centroids=cents,
     )
     return out.withColumn("rank", F.col("rank").cast("int"))
 

@@ -14,11 +14,11 @@ Every bronze and silver read uses the table's declared schema
 (``TABLE_SCHEMA``, from ``schemas.py``): no read infers one, and a bronze
 write whose columns differ from it is refused before anything is written.
 
-Scale notes: silver tables are append-only parquet partitioned by nothing at
-test size — at 100 TB partition the daily tables by ``event_date`` (so delta
-appends touch only recent partitions and compaction is per-day) and leave the
-campaign-grain totals unpartitioned (dimension-sized). Gold rebuilds read the
-deduped silver view, not bronze.
+Scale notes: silver tables are append-only parquet. ``initial_load``
+partitions the two daily tables by their date column (``TABLE_PARTITION``),
+so delta appends touch only recent partitions and compaction is per-day;
+the campaign-grain totals stay unpartitioned (dimension-sized). Gold
+rebuilds read the deduped silver view, not bronze.
 """
 
 from __future__ import annotations
@@ -247,7 +247,7 @@ class Pipeline:
         self._write_daily_ctr(daily_ctr_report(ac, imp_d, clk_d))
 
     def rebuild_reports_incremental(self, touched_buckets: set[int]) -> None:
-        """Partition-incremental gold maintenance (ROADMAP #5): the totals
+        """Partition-incremental gold maintenance: the totals
         report stays full-rebuild (campaign grain = dimension-sized, the
         rebuild IS the cheap path), but the daily CTR report — whose rows
         grow with campaign-days — is partitioned by ``gold_bucket =

@@ -519,27 +519,26 @@ def stream_ivf_ingest(
     dim: int | None = None,
     index_root: "str | None" = None,
     codebooks: "list | None" = None,
-    pq_residual: bool = True,
     sq8_scales_vec: "list | None" = None,
 ):
     """Streaming ANN ingestion: new embedding parquet files land → each row
-    is routed to its nearest trained IVF centroid cell (the same
-    ``operators.similarity._with_cell`` assignment ``ivf_topk`` uses at
-    query time) → rows append to a cell-partitioned parquet index. Composes
-    the trained-index path (``kmeans_fit``) with Structured Streaming: the
-    model is trained once offline, then the index absorbs new vectors
-    continuously without retraining, and ``ivf_topk``-style search reads
-    the cell-partitioned layout with partition pruning on the probed cells.
+    is encoded by ``operators.similarity._encode_index`` (the one
+    stored-row encoding, shared with ``ivf_index_write`` and the in-memory
+    ``ivf_*_topk`` operators) → rows append to a cell-partitioned parquet
+    index. Composes the trained-index path (``kmeans_fit``) with
+    Structured Streaming: the model is trained once offline, then the
+    index absorbs new vectors continuously without retraining, and
+    ``ivf_index_search`` reads the cell-partitioned layout with partition
+    pruning on the probed cells.
 
-    Growing a HYBRID index (``similarity.ivf_index_write`` with
-    ``planes``): pass the SAME (planes, sig_seed, sig_hash_method, dim) so
-    delta rows carry the stored ``sig`` sketch — ``ivf_index_search``
-    fails loudly if a hybrid search finds delta rows without it. Growing
-    an IVF-PQ index likewise: pass the SAME ``codebooks`` (and
-    ``pq_residual``) so delta rows carry stored ``codes``; growing an
-    IVF,SQ8 index (round 10), pass the STORED scales as
-    ``sq8_scales_vec`` (``similarity.sq8_scales_read``) so delta rows
-    carry ``sq8_code`` — re-deriving scales from arriving data would
+    Growing an index built with extra stored columns: pass the SAME
+    (planes, sig_seed, sig_hash_method, dim) as the hybrid index's
+    ``ivf_index_write`` so delta rows carry the ``sig`` sketch —
+    ``ivf_index_search`` fails loudly if a hybrid search finds delta rows
+    without it; the SAME ``codebooks`` for an IVF-PQ index (delta rows
+    carry residual ``codes``); the STORED scales as ``sq8_scales_vec``
+    (``similarity.sq8_scales_read``) for an IVF,SQ8 index (delta rows
+    carry ``sq8_code``) — re-deriving scales from arriving data would
     silently re-quantize the delta against a different model.
 
     ``schema`` overrides the default ``EMBEDDING_SCHEMA`` when the landing
@@ -547,27 +546,24 @@ def stream_ivf_ingest(
     explicit schema — columns absent from it read as NULL, so a mismatched
     id column would otherwise silently populate the index with null ids).
 
-    Sink semantics: this is a stateless per-row projection (plan-literal
-    argmin for small models, broadcast centroid table above — both are
-    supported stream-side transforms), so the NATIVE parquet streaming sink
-    applies, whose manifest log gives exactly-once file commits — no
-    foreachBatch, no custom idempotence needed. That manifest governs batch
-    reads of ``output_path``, so do NOT mix batch-written files into it —
-    to grow an offline-built index (``similarity.ivf_index_write``), point
-    ``output_path`` at the index root's ``stream_index/`` delta directory,
-    which ``ivf_index_search`` unions with the base automatically.
+    Sink semantics: the encoding is a stateless per-row projection
+    (plan-literal argmin for small models, broadcast centroid table above
+    — both are supported stream-side transforms), so the NATIVE parquet
+    streaming sink applies, whose manifest log gives exactly-once file
+    commits — no foreachBatch, no custom idempotence needed. That
+    manifest governs batch reads of ``output_path``, so do NOT mix
+    batch-written files into it — to grow an offline-built index
+    (``similarity.ivf_index_write``), point ``output_path`` at the index
+    root's ``stream_index/`` delta directory, which ``ivf_index_search``
+    unions with the base automatically.
 
     Scale shape: no shuffle anywhere — assignment is a projection, and
     ``partitionBy("cell")`` fans files out at write time. At 100 TB of
     arriving vectors this is embarrassingly parallel across executors; the
     only cross-node traffic is the (tiny) broadcast model above
-    ``literal_max`` cells.
+    ``LITERAL_CELL_MAX`` cells.
     """
-    from ..operators.similarity import (
-        _with_cell,
-        hyperplane_signature,
-        with_double_embedding,
-    )
+    from ..operators.similarity import _encode_index
 
     # the persisted index whose compaction generation the checkpoint
     # pins: index_root, or the root whose stream_index/ delta this grows
@@ -579,34 +575,11 @@ def stream_ivf_ingest(
     _pin_generation(spark, checkpoint_dir, root, ".ivf_generation", "vectors")
 
     stream = spark.readStream.schema(schema or EMBEDDING_SCHEMA).parquet(input_dir)
-    work = with_double_embedding(stream, emb_col)
-    if planes is not None:
-        work = work.withColumn(
-            "sig",
-            hyperplane_signature(
-                F.col(emb_col), planes, sig_seed, sig_hash_method, dim
-            ),
-        )
-    if sq8_scales_vec is not None:
-        from ..operators.similarity import sq8_encode_expr
-
-        work = work.withColumn(
-            "sq8_code", sq8_encode_expr(F.col(emb_col), sq8_scales_vec)
-        )
-    assigned = _with_cell(work, emb_col, centroids)
-    if codebooks is not None:
-        from ..operators.similarity import _pq_codes_sql, _with_residual
-
-        if pq_residual:
-            assigned = _with_residual(
-                assigned, emb_col, centroids, "__res"
-            ).withColumn(
-                "codes", F.expr(_pq_codes_sql("`__res`", codebooks))
-            ).drop("__res")
-        else:
-            assigned = assigned.withColumn(
-                "codes", F.expr(_pq_codes_sql(f"`{emb_col}`", codebooks))
-            )
+    assigned = _encode_index(
+        stream, centroids, emb_col, planes=planes, sig_seed=sig_seed,
+        sig_hash_method=sig_hash_method, dim=dim, codebooks=codebooks,
+        sq8=sq8_scales_vec,
+    )
     return _start(
         assigned, checkpoint_dir, processing_time, output_path,
         partition_by=("cell",),

@@ -110,10 +110,15 @@ def test_ivf_lsh_cell_join_carries_no_embeddings(spark):
     plan = _plan(spark, "q55_ivf_lsh_topk")
     assert "CartesianProduct" not in plan
     # the cell equi-join output columns: embeddings (__c_emb/__q_emb) may
-    # appear only in the later id-joins, never alongside the sig columns
+    # appear only in the later id-joins, never alongside the sig columns.
+    # Keyed on the query sketch column the shared hybrid plan joins on;
+    # the match count guards against a rename making the loop vacuous.
+    matched = 0
     for ln in plan.splitlines():
-        if "__c_sig" in ln and "Join" in ln:
+        if "__q_sig" in ln and "Join" in ln:
+            matched += 1
             assert "__c_emb" not in ln, ln
+    assert matched >= 1, plan
 
 
 def test_bigram_novelty_score_join_is_equi(spark):

@@ -887,6 +887,28 @@ def test_ivf_index_delete_tombstones_match_rebuilt_index(spark, tmp_path):
     )
 
 
+def test_tombstones_apply_beside_an_empty_streamed_delta(spark, tmp_path):
+    """A streamed delta holding no committed files (only the sink's
+    _spark_metadata log) must not bypass the tombstone anti-join."""
+    emb = Testdata(spark, SF_ORACLE).embeddings
+    root = str(tmp_path / "ivf")
+    cents = similarity.kmeans_fit(emb, n_cells=4, n_iter=1, dim=64)
+    similarity.ivf_index_write(emb, cents, root)
+    (tmp_path / "ivf" / "stream_index" / "_spark_metadata").mkdir(parents=True)
+    q = emb.where(F.col("vec_id") < 3)
+
+    def hits():
+        return {
+            r.corpus_id
+            for r in similarity.ivf_index_search(spark, root, q, k=3).collect()
+        }
+
+    victims = hits()
+    similarity.ivf_index_delete(spark, root, victims)
+    survivors = hits()
+    assert survivors and not survivors & victims
+
+
 def test_tombstone_fold_guards_and_contract(spark, tmp_path):
     """The tombstone fold refuses interrupted rewrites (leftover
     index.rewriting / index.old), rejects an id column the index does not
