@@ -1282,18 +1282,15 @@ def ivf_pq_fit(
             method=train_hash_method,
         )
     assigned = _with_cell(d, emb_col, centroids, literal_max)
-    # persist the (sampled) residual training frame: pq_fit reads it
-    # for its dim probe and again for its own persisted projection
+    # not persisted here: pq_fit persists its own projection of the
+    # (sampled) residual training frame, the one copy its rounds read
     src = _with_residual(assigned, emb_col, centroids, emb_col).select(
         id_col, emb_col
-    ).persist()
-    try:
-        return pq_fit(
-            src, m, n_codes, n_iter, id_col, emb_col, dim,
-            train_fraction, train_salt, train_hash_method,
-        )
-    finally:
-        src.unpersist()
+    )
+    return pq_fit(
+        src, m, n_codes, n_iter, id_col, emb_col, dim,
+        train_fraction, train_salt, train_hash_method,
+    )
 
 
 def ivf_pq_topk(

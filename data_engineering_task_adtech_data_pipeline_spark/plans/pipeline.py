@@ -14,6 +14,18 @@ Every bronze and silver read uses the table's declared schema
 (``TABLE_SCHEMA``, from ``schemas.py``): no read infers one, and a bronze
 write whose columns differ from it is refused before anything is written.
 
+Overlap: a cycle's independent actions run concurrently (``_concurrently``):
+the bronze table writes, the three silver writes of ``initial_load``, the
+three per-table chains of ``track_deltas`` (extract → ``changed_rows`` →
+count → append) and the two gold reports. The lake is small per action,
+so each action is mostly driver and scheduling overhead, and overlapping
+them keeps the cores busy. This is safe because no two concurrent actions
+write the same path (each has its own committer staging directory under
+its own table), every silver append holds its own table's write fence
+(``upsert._write_fence``), and the chains share no data: each table's
+change detection reads only bronze and its own silver table. Every action
+runs under the caller's job group, description and session tags.
+
 Scale notes: silver tables are append-only parquet. ``initial_load``
 partitions the two daily tables by their date column (``TABLE_PARTITION``),
 so delta appends touch only recent partitions and compaction is per-day;
@@ -23,8 +35,12 @@ rebuilds read the deduped silver view, not bronze.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -95,6 +111,21 @@ class Pipeline:
         self.paths = Paths(root)
         self.as_of = as_of
 
+    def _concurrently(self, actions: list[Callable[[], object]]) -> list:
+        """Run independent zero-argument actions at once, one thread each,
+        and return their results in order. Each thread inherits the
+        caller's job group, job description and session tags. Every action
+        runs to its end; the first failure in list order is then raised."""
+        with ThreadPoolExecutor(max_workers=max(1, len(actions))) as pool:
+            # one wrapper per action: each clones the caller's local
+            # properties, and its thread owns that copy, so a job group
+            # set inside one action does not reach its siblings
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(action))
+                for action in actions
+            ]
+        return [f.result() for f in futures]
+
     # -- bronze -----------------------------------------------------------
     def _write_bronze(self, tables: dict[str, DataFrame], mode: str) -> None:
         # refuse, before writing any table, a frame whose column names or
@@ -107,8 +138,10 @@ class Pipeline:
                 raise ValueError(
                     f"{name}: columns {got} differ from the declared schema {want}"
                 )
-        for name, df in tables.items():
-            df.write.mode(mode).parquet(self.paths.bronze(name))
+        self._concurrently([
+            partial(df.write.mode(mode).parquet, self.paths.bronze(name))
+            for name, df in tables.items()
+        ])
 
     def write_bronze(self, tables: dict[str, DataFrame]) -> None:
         self._write_bronze(tables, "overwrite")
@@ -144,13 +177,15 @@ class Pipeline:
 
     # -- entry point 1: initial load --------------------------------------
     def initial_load(self) -> None:
+        writes = []
         for name, df in self._extracts().items():
             writer = df.write.mode("overwrite")
             if TABLE_PARTITION[name]:
                 # daily tables partition by their date column so delta
                 # appends and compaction touch only recent partitions
                 writer = writer.partitionBy(*TABLE_PARTITION[name])
-            writer.parquet(self.paths.silver(name))
+            writes.append(partial(writer.parquet, self.paths.silver(name)))
+        self._concurrently(writes)
         self.rebuild_reports()
 
     # -- entry point 2: incremental delta ---------------------------------
@@ -165,6 +200,12 @@ class Pipeline:
         reference's full DROP+rebuild to partition-incremental maintenance:
         only gold hash-buckets containing this cycle's changed campaigns are
         recomputed (``rebuild_reports_incremental``).
+
+        The three tables' chains run concurrently. If one fails, the others
+        still run to their end, so their rows may land; the first failure in
+        table order is then raised and no report is rebuilt. A re-run
+        converges: a table whose append landed has no changed rows left, and
+        the failed table's rows are detected again.
         """
         if not fs.is_dir(self.spark, self.paths.silver("advertiser_campaigns")):
             self.initial_load()
@@ -173,9 +214,8 @@ class Pipeline:
                 name: self._read(self.paths.silver(name), name).count()
                 for name in TABLE_KEYS
             }
-        counts: dict[str, int] = {}
-        touched_buckets: set[int] = set()
-        for name, extract in self._extracts().items():
+
+        def detect_and_append(name: str, extract: DataFrame) -> tuple[int, set[int]]:
             olap_state = self._read(self.paths.silver(name), name)
             # persist: the count probe and the append below otherwise each
             # recompute the full extract + anti-join lineage (two jobs per
@@ -183,7 +223,7 @@ class Pipeline:
             upserts = changed_rows(extract, olap_state, keys=TABLE_KEYS[name]).persist()
             try:
                 n = upserts.count()
-                counts[name] = n
+                buckets: set[int] = set()
                 if n:
                     # Collect touched buckets BEFORE the silver append: if
                     # the persisted partitions were evicted after the
@@ -196,14 +236,23 @@ class Pipeline:
                     if incremental_gold:
                         bucket = F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS))
                         rows = upserts.select(bucket.alias("b")).distinct()
-                        touched_buckets |= {r.b for r in rows.collect()}
+                        buckets = {r.b for r in rows.collect()}
                     upsert_append(
                         upserts,
                         self.paths.silver(name),
                         partition_by=TABLE_PARTITION[name],
                     )
+                return n, buckets
             finally:
                 upserts.unpersist()
+
+        extracts = self._extracts()
+        results = self._concurrently([
+            partial(detect_and_append, name, extract)
+            for name, extract in extracts.items()
+        ])
+        counts = {name: n for name, (n, _) in zip(extracts, results)}
+        touched_buckets = set().union(*(buckets for _, buckets in results))
         if any(counts.values()):
             if incremental_gold:
                 self.rebuild_reports_incremental(touched_buckets)
@@ -219,6 +268,11 @@ class Pipeline:
     # canonical path): once incremental cycles ran, readers of the canonical
     # name silently got stale data. `gold()` strips the physical gold_bucket
     # partition column so the public report schema is unchanged.
+
+    def _write_totals(self, ac: DataFrame) -> None:
+        totals_report(ac, as_of=self.as_of).write.mode("overwrite").parquet(
+            self.paths.gold("advertiser_campaigns_totals_report")
+        )
 
     def _write_daily_ctr(self, report: DataFrame, dynamic: bool = False) -> None:
         path = self.paths.gold("advertiser_campaigns_daily_ctr_report")
@@ -241,10 +295,10 @@ class Pipeline:
         ac = self.silver("advertiser_campaigns")
         imp_d = self.silver("advertiser_campaigns_impressions")
         clk_d = self.silver("advertiser_campaigns_clicks")
-        totals_report(ac, as_of=self.as_of).write.mode("overwrite").parquet(
-            self.paths.gold("advertiser_campaigns_totals_report")
-        )
-        self._write_daily_ctr(daily_ctr_report(ac, imp_d, clk_d))
+        self._concurrently([
+            partial(self._write_totals, ac),
+            partial(self._write_daily_ctr, daily_ctr_report(ac, imp_d, clk_d)),
+        ])
 
     def rebuild_reports_incremental(self, touched_buckets: set[int]) -> None:
         """Partition-incremental gold maintenance: the totals
@@ -263,9 +317,6 @@ class Pipeline:
         rewrites ≤ min(k, 64) buckets ≈ k/5000 of the gold table instead of
         all of it."""
         ac = self.silver("advertiser_campaigns")
-        totals_report(ac, as_of=self.as_of).write.mode("overwrite").parquet(
-            self.paths.gold("advertiser_campaigns_totals_report")
-        )
         path = self.paths.gold("advertiser_campaigns_daily_ctr_report")
         imp_d = self.silver("advertiser_campaigns_impressions")
         clk_d = self.silver("advertiser_campaigns_clicks")
@@ -275,9 +326,11 @@ class Pipeline:
                 sorted(touched_buckets)
             )
             imp_d, clk_d = imp_d.where(flt), clk_d.where(flt)
-        self._write_daily_ctr(
-            daily_ctr_report(ac, imp_d, clk_d), dynamic=not first_build
-        )
+        self._concurrently([
+            partial(self._write_totals, ac),
+            partial(self._write_daily_ctr, daily_ctr_report(ac, imp_d, clk_d),
+                    dynamic=not first_build),
+        ])
 
     def gold(self, name: str) -> DataFrame:
         """Public gold reader; strips the physical ``gold_bucket`` partition

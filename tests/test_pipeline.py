@@ -10,11 +10,9 @@ from data_engineering_task_adtech_data_pipeline_spark.operators.upsert import (
     latest_version,
 )
 from data_engineering_task_adtech_data_pipeline_spark.plans.pipeline import (
-    DAILY_KEYS,
     TABLE_KEYS,
     TABLE_SCHEMA,
     TABLE_TIEBREAK,
-    TOTALS_KEYS,
     Pipeline,
 )
 from data_engineering_task_adtech_data_pipeline_spark.sources.generators import (
@@ -86,6 +84,23 @@ def test_delta_second_run_noop(pipe):
     assert all(v == 0 for v in counts.values()), counts
 
 
+def _full_recompute(spark, pipe, root):
+    """A second lake over a copy of ``pipe``'s bronze, loaded in full."""
+    full = Pipeline(spark, root, as_of=AS_OF)
+    for t in ("advertiser", "campaign", "impressions", "clicks"):
+        pipe.bronze(t).write.mode("overwrite").parquet(full.paths.bronze(t))
+    full.initial_load()
+    return full
+
+
+def _assert_same_view(pipe, full, table):
+    inc = pipe.silver(table)
+    ful = full.silver(table)
+    assert inc.count() == ful.count(), table
+    assert inc.exceptAll(ful).count() == 0, table
+    assert ful.exceptAll(inc).count() == 0, table
+
+
 def test_delta_picks_up_new_batch_and_matches_full_recompute(pipe, spark, tmp_path):
     # append a generator tick (the reference's generate_new_data DAG shape)
     batch = gen_all(
@@ -99,21 +114,9 @@ def test_delta_picks_up_new_batch_and_matches_full_recompute(pipe, spark, tmp_pa
     assert counts["advertiser_campaigns_impressions"] > 0
 
     # invariant: incremental state == full recompute from bronze
-    full = Pipeline(spark, str(tmp_path / "full"), as_of=AS_OF)
-    for t in ("advertiser", "campaign", "impressions", "clicks"):
-        pipe.bronze(t).write.mode("overwrite").parquet(full.paths.bronze(t))
-    full.initial_load()
-
-    for table, keys in [
-        ("advertiser_campaigns", TOTALS_KEYS),
-        ("advertiser_campaigns_impressions", DAILY_KEYS),
-        ("advertiser_campaigns_clicks", DAILY_KEYS),
-    ]:
-        inc = pipe.silver(table)
-        ful = full.silver(table)
-        assert inc.count() == ful.count(), table
-        assert inc.exceptAll(ful).count() == 0, table
-        assert ful.exceptAll(inc).count() == 0, table
+    full = _full_recompute(spark, pipe, str(tmp_path / "full"))
+    for table in TABLE_KEYS:
+        _assert_same_view(pipe, full, table)
 
     # third run: no-op again
     assert all(v == 0 for v in pipe.track_deltas().values())
@@ -236,6 +239,96 @@ def test_track_deltas_releases_upserts_when_append_fails(
     with pytest.raises(RuntimeError, match="silver append failed"):
         p.track_deltas()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_track_deltas_partial_failure_then_replay_converges(
+    spark, tmp_path, monkeypatch
+):
+    """The per-table chains run concurrently, so one table's failed append
+    does not stop the others: their rows land, the failure is raised, and
+    nothing stays cached. A re-run lands the missing rows and the lake
+    then equals a full recompute."""
+    from data_engineering_task_adtech_data_pipeline_spark.plans import (
+        pipeline as pipeline_mod,
+    )
+
+    failing = "advertiser_campaigns_impressions"
+    real_append = pipeline_mod.upsert_append
+
+    def append_failing_for_one_table(df, path, partition_by=None):
+        if path.rstrip("/").endswith("/" + failing):
+            raise RuntimeError(f"{failing} append failed")
+        return real_append(df, path, partition_by=partition_by)
+
+    p = Pipeline(spark, str(tmp_path / "lake"), as_of=AS_OF)
+    p.write_bronze(gen_all(spark, GenConfig(advertisers=2,
+                                            campaigns_per_advertiser=2,
+                                            impressions_per_campaign=60)))
+    p.initial_load()
+    p.append_bronze(gen_all(
+        spark,
+        GenConfig(advertisers=1, campaigns_per_advertiser=2,
+                  impressions_per_campaign=80, ctr=0.12, seed=7, id_offset=50),
+    ))
+    full = _full_recompute(spark, p, str(tmp_path / "full"))
+    raw_before = p._read(p.paths.silver(failing), failing).count()
+
+    monkeypatch.setattr(pipeline_mod, "upsert_append", append_failing_for_one_table)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match=f"{failing} append failed"):
+        p.track_deltas()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    for table in ("advertiser_campaigns", "advertiser_campaigns_clicks"):
+        _assert_same_view(p, full, table)
+    assert p._read(p.paths.silver(failing), failing).count() == raw_before
+
+    monkeypatch.setattr(pipeline_mod, "upsert_append", real_append)
+    counts = p.track_deltas()
+    assert counts["advertiser_campaigns"] == 0
+    assert counts["advertiser_campaigns_clicks"] == 0
+    assert counts[failing] > 0
+    for table in TABLE_KEYS:
+        _assert_same_view(p, full, table)
+
+
+def test_cycle_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Every job of a bronze append plus a delta cycle runs in the job
+    group the caller set, also the jobs started from the cycle's worker
+    threads: ``cancelJobGroup`` and per-group job accounting rely on it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group):
+        sc.setJobGroup(group, group)
+        sc.parallelize([0], 1).count()
+        return max(tracker.getJobIdsForGroup(group))
+
+    def clear_job_group():
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    p = Pipeline(spark, str(tmp_path / "lake"), as_of=AS_OF)
+    p.write_bronze(gen_all(spark, GenConfig(advertisers=2,
+                                            campaigns_per_advertiser=2,
+                                            impressions_per_campaign=40)))
+    p.initial_load()
+    batch = gen_all(
+        spark,
+        GenConfig(advertisers=1, campaigns_per_advertiser=2,
+                  impressions_per_campaign=30, seed=5, id_offset=60),
+    )
+    try:
+        first = marker_job("cycle-window-start")
+        sc.setJobGroup("cycle", "append_bronze + track_deltas")
+        p.append_bronze(batch)
+        assert any(p.track_deltas().values())
+        last = marker_job("cycle-window-end")
+    finally:
+        clear_job_group()
+    window = set(range(first + 1, last))
+    assert window
+    assert window <= set(tracker.getJobIdsForGroup("cycle"))
+    assert not window & set(tracker.getJobIdsForGroup(None))
 
 
 def test_pipeline_on_uri_scheme_root(spark, tmp_path):

@@ -169,3 +169,24 @@ def test_interleaved_perfbench_summary_medians_quartiles_and_wins():
     assert st["b_better_beyond_a_iqr"] is False
     assert s["a"] == {"incorrect_runs": 0, "failed_frac": 0.0}
     assert s["b"] == {"incorrect_runs": 2, "failed_frac": 0.125}
+
+
+def test_ab_queries_alternates_which_checkout_runs_first(monkeypatch):
+    spec = importlib.util.spec_from_file_location(
+        "ab_queries", TOOLS / "ab_queries.py"
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    calls = []
+
+    def fake_profile(root, sf_dir, names):
+        calls.append(root.name)
+        return {"_wall": 0.0, **{n: {"total_s": 1.0} for n in names}}
+
+    monkeypatch.setattr(m, "run_profile", fake_profile)
+    monkeypatch.setattr(sys, "argv", [
+        "ab_queries.py", "--a", "/ckout/A", "--b", "/ckout/B",
+        "--rounds", "2", "q01",
+    ])
+    m.main()
+    assert calls == ["A", "B", "B", "A"]

@@ -4,7 +4,8 @@ The battery-wide protocol is ``tools/interleaved_ab.py`` (full bench,
 ~8 min per invocation); this is its cheap per-change sibling: for a
 HANDFUL of named queries it alternates solo ``tools/profile_queries.py``
 subprocess runs between checkout A (baseline, usually a git worktree
-pinned at the pre-change commit) and checkout B (the working tree), then
+pinned at the pre-change commit) and checkout B (the working tree),
+switching which checkout runs first from round to round, then
 reports per-query medians of ``total_s`` (build + noop-sink exec) plus
 the deterministic plan/job counters, which are box-independent evidence.
 
@@ -60,7 +61,10 @@ def main() -> None:
     runs: dict[str, list[dict]] = {"a": [], "b": []}
     roots = {"a": Path(args.a), "b": Path(args.b)}
     for i in range(args.rounds):
-        for label, root in roots.items():
+        # alternate which checkout runs first, so an order effect (and the
+        # session's cold first run) does not always land on A
+        for label in ("a", "b") if i % 2 == 0 else ("b", "a"):
+            root = roots[label]
             d = run_profile(root, args.sf_dir, args.names)
             runs[label].append(d)
             tot = {n: d[n]["total_s"] for n in args.names if n in d}
