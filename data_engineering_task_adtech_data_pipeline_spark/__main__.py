@@ -12,8 +12,8 @@
 from __future__ import annotations
 
 import argparse
-import shutil
 
+from . import fs
 from .plans.pipeline import Pipeline
 from .plans.stats import campaign_stats, table_counts
 from .session import get_spark
@@ -64,7 +64,10 @@ def main(argv: list[str] | None = None) -> int:
             tables["impressions"], tables["clicks"],
         ).show(100, truncate=False)
     elif args.command == "reset":
-        shutil.rmtree(args.root, ignore_errors=True)
+        # through the Hadoop FileSystem, like every other lake path, so a
+        # file://, hdfs:// or s3a:// root is removed, not read as a local
+        # relative path
+        fs.delete(spark, args.root)
         print(f"removed {args.root}")
     return 0
 

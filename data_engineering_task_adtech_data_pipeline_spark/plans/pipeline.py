@@ -7,6 +7,12 @@
   state, ``operators.delta.changed_rows``, which is also the reference's
   ``VALUES`` re-extract) → versioned append (upsert) → gold rebuild.
 
+Gold has one path, ``rebuild_reports``: the reference's DROP + CREATE +
+INSERT…SELECT of both reports (``dags/track_delta.py:429-606``), run
+after ``initial_load`` and after every cycle that changed a silver table.
+Both reports are computed from the deduped silver views, not bronze,
+and written flat with ``mode("overwrite")``.
+
 All the reference's process boundaries (fetchall → XCom → INSERT,
 ``initial_load_generate_postgres_data.py:232-343``) collapse into lazy
 DataFrame lineage; the only materializations are the silver/gold writes.
@@ -29,8 +35,7 @@ runs under the caller's job group, description and session tags.
 Scale notes: silver tables are append-only parquet. ``initial_load``
 partitions the two daily tables by their date column (``TABLE_PARTITION``),
 so delta appends touch only recent partitions and compaction is per-day;
-the campaign-grain totals stay unpartitioned (dimension-sized). Gold
-rebuilds read the deduped silver view, not bronze.
+the campaign-grain totals stay unpartitioned (dimension-sized).
 """
 
 from __future__ import annotations
@@ -42,7 +47,6 @@ from functools import partial
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import fs
 from .. import schemas as S
@@ -81,14 +85,6 @@ TABLE_SCHEMA = {
     "advertiser_campaigns_impressions": S.advertiser_campaigns_daily("impressions"),
     "advertiser_campaigns_clicks": S.advertiser_campaigns_daily("clicks"),
 }
-
-# gold daily report hash-bucket partition count (incremental rebuild grain).
-# The report's campaign_day is a per-campaign ORDINAL (row_number over that
-# campaign's dates), so the only partition scheme closed under "recompute a
-# partition" is per-campaign; date partitions would corrupt ordinals when a
-# late row lands on an earlier date. 64 buckets keeps files coarse at test
-# size and bounds a cycle's rewrite to touched buckets at scale.
-GOLD_BUCKETS = 64
 
 
 @dataclass
@@ -189,17 +185,15 @@ class Pipeline:
         self.rebuild_reports()
 
     # -- entry point 2: incremental delta ---------------------------------
-    def track_deltas(self, incremental_gold: bool = False) -> dict[str, int]:
+    def track_deltas(self) -> dict[str, int]:
         """Returns per-table changed-row counts (0s on a no-op cycle).
 
         First run against an empty lake falls back to ``initial_load`` —
         the reference's empty-table branch guard (BranchPythonOperator at
         ``dags/initial_load_generate_postgres_data.py:41-55``).
 
-        ``incremental_gold=True`` switches the daily CTR report from the
-        reference's full DROP+rebuild to partition-incremental maintenance:
-        only gold hash-buckets containing this cycle's changed campaigns are
-        recomputed (``rebuild_reports_incremental``).
+        Once any table changed, both gold reports are rebuilt in full
+        (``rebuild_reports``); a no-op cycle leaves gold as it is.
 
         The three tables' chains run concurrently. If one fails, the others
         still run to their end, so their rows may land; the first failure in
@@ -215,7 +209,7 @@ class Pipeline:
                 for name in TABLE_KEYS
             }
 
-        def detect_and_append(name: str, extract: DataFrame) -> tuple[int, set[int]]:
+        def detect_and_append(name: str, extract: DataFrame) -> int:
             olap_state = self._read(self.paths.silver(name), name)
             # persist: the count probe and the append below otherwise each
             # recompute the full extract + anti-join lineage (two jobs per
@@ -223,117 +217,42 @@ class Pipeline:
             upserts = changed_rows(extract, olap_state, keys=TABLE_KEYS[name]).persist()
             try:
                 n = upserts.count()
-                buckets: set[int] = set()
                 if n:
-                    # Collect touched buckets BEFORE the silver append: if
-                    # the persisted partitions were evicted after the
-                    # append, the recomputed lineage's anti-join would run
-                    # against the post-append silver state and return
-                    # empty — silently dropping buckets from the
-                    # incremental gold rewrite. Before the append, any
-                    # recompute sees the pre-append state and yields the
-                    # same bucket set.
-                    if incremental_gold:
-                        bucket = F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS))
-                        rows = upserts.select(bucket.alias("b")).distinct()
-                        buckets = {r.b for r in rows.collect()}
                     upsert_append(
                         upserts,
                         self.paths.silver(name),
                         partition_by=TABLE_PARTITION[name],
                     )
-                return n, buckets
+                return n
             finally:
                 upserts.unpersist()
 
         extracts = self._extracts()
-        results = self._concurrently([
+        counts = dict(zip(extracts, self._concurrently([
             partial(detect_and_append, name, extract)
             for name, extract in extracts.items()
-        ])
-        counts = {name: n for name, (n, _) in zip(extracts, results)}
-        touched_buckets = set().union(*(buckets for _, buckets in results))
+        ])))
         if any(counts.values()):
-            if incremental_gold:
-                self.rebuild_reports_incremental(touched_buckets)
-            else:
-                self.rebuild_reports()
+            self.rebuild_reports()
         return counts
 
     # -- gold --------------------------------------------------------------
-    # Both rebuild modes write the daily CTR report to ONE canonical table
-    # (`advertiser_campaigns_daily_ctr_report`) in the bucketed layout —
-    # partitioned by gold_bucket = pmod(rtm_campaign_id, GOLD_BUCKETS).
-    # Round-3 VERDICT flagged the earlier split (`..._bucketed` beside the
-    # canonical path): once incremental cycles ran, readers of the canonical
-    # name silently got stale data. `gold()` strips the physical gold_bucket
-    # partition column so the public report schema is unchanged.
-
-    def _write_totals(self, ac: DataFrame) -> None:
-        totals_report(ac, as_of=self.as_of).write.mode("overwrite").parquet(
-            self.paths.gold("advertiser_campaigns_totals_report")
-        )
-
-    def _write_daily_ctr(self, report: DataFrame, dynamic: bool = False) -> None:
-        path = self.paths.gold("advertiser_campaigns_daily_ctr_report")
-        # hash-partition by bucket: several tasks write, and each bucket
-        # lands in one task, so as one file
-        tasks = min(GOLD_BUCKETS, self.spark.sparkContext.defaultParallelism)
-        writer = (
-            report.withColumn(
-                "gold_bucket", F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS))
-            )
-            .repartition(tasks, "gold_bucket")
-            .write.mode("overwrite")
-        )
-        if dynamic:
-            writer = writer.option("partitionOverwriteMode", "dynamic")
-        writer.partitionBy("gold_bucket").parquet(path)
+    def _write_gold(self, name: str, report: DataFrame) -> None:
+        report.write.mode("overwrite").parquet(self.paths.gold(name))
 
     def rebuild_reports(self) -> None:
-        """Full rebuild each cycle (``dags/track_delta.py:438, 548``)."""
+        """Full rebuild of both reports (``dags/track_delta.py:438, 548``),
+        from the silver views; the two writes overlap."""
         ac = self.silver("advertiser_campaigns")
         imp_d = self.silver("advertiser_campaigns_impressions")
         clk_d = self.silver("advertiser_campaigns_clicks")
         self._concurrently([
-            partial(self._write_totals, ac),
-            partial(self._write_daily_ctr, daily_ctr_report(ac, imp_d, clk_d)),
-        ])
-
-    def rebuild_reports_incremental(self, touched_buckets: set[int]) -> None:
-        """Partition-incremental gold maintenance: the totals
-        report stays full-rebuild (campaign grain = dimension-sized, the
-        rebuild IS the cheap path), but the daily CTR report — whose rows
-        grow with campaign-days — is partitioned by ``gold_bucket =
-        pmod(rtm_campaign_id, GOLD_BUCKETS)`` and only buckets containing
-        changed campaigns are recomputed and dynamically overwritten into
-        the SAME canonical table the full rebuild writes.
-
-        Correctness hinges on bucket-closure: every report column, including
-        the per-campaign ``campaign_day`` ordinal, depends only on rows of
-        the same campaign, so recomputing whole buckets over the filtered
-        silver inputs reproduces exactly what the full rebuild would emit
-        for those buckets. At 100 TB a delta cycle touching k campaigns
-        rewrites ≤ min(k, 64) buckets ≈ k/5000 of the gold table instead of
-        all of it."""
-        ac = self.silver("advertiser_campaigns")
-        path = self.paths.gold("advertiser_campaigns_daily_ctr_report")
-        imp_d = self.silver("advertiser_campaigns_impressions")
-        clk_d = self.silver("advertiser_campaigns_clicks")
-        first_build = not fs.is_dir(self.spark, path)
-        if not first_build:
-            flt = F.pmod("rtm_campaign_id", F.lit(GOLD_BUCKETS)).isin(
-                sorted(touched_buckets)
-            )
-            imp_d, clk_d = imp_d.where(flt), clk_d.where(flt)
-        self._concurrently([
-            partial(self._write_totals, ac),
-            partial(self._write_daily_ctr, daily_ctr_report(ac, imp_d, clk_d),
-                    dynamic=not first_build),
+            partial(self._write_gold, "advertiser_campaigns_totals_report",
+                    totals_report(ac, as_of=self.as_of)),
+            partial(self._write_gold, "advertiser_campaigns_daily_ctr_report",
+                    daily_ctr_report(ac, imp_d, clk_d)),
         ])
 
     def gold(self, name: str) -> DataFrame:
-        """Public gold reader; strips the physical ``gold_bucket`` partition
-        column so both rebuild modes expose the identical report schema."""
-        df = self.spark.read.parquet(self.paths.gold(name))
-        return df.drop("gold_bucket") if "gold_bucket" in df.columns else df
+        """Public gold reader: the report as the last rebuild wrote it."""
+        return self.spark.read.parquet(self.paths.gold(name))

@@ -1299,7 +1299,12 @@ def stream_dedup_pipeline(
     ``chunking.materialize``'s size gate, its persisted profile) are
     registered for ``release_persisted()``: call it between batches
     (after ``awaitTermination`` for a ``processing_time=None`` run), never
-    while a batch is in flight."""
+    while a batch is in flight. The gate reads Catalyst's size estimate.
+    A batch read from files keeps its file-size estimate through
+    ``checkpoint``, but a frame built with ``createDataFrame`` from rows
+    has none: it reads as ``Long.MaxValue``, so its profile always
+    persists. A long-running pipeline must therefore call
+    ``release_persisted()`` between batches, or the profiles accumulate."""
     from ..operators.dedup import (
         MINHASH_DELTA_DIR,
         _invalidate_index_memo,

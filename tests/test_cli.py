@@ -24,3 +24,11 @@ def test_cli_full_cycle(spark, tmp_path, capsys):
     import os
 
     assert not os.path.exists(root)
+
+
+def test_cli_reset_removes_a_uri_root(spark, tmp_path):
+    root = tmp_path / "lake"
+    (root / "bronze").mkdir(parents=True)
+    (root / "bronze" / "part-0.parquet").write_bytes(b"x")
+    assert main(["reset", "--root", root.as_uri()]) == 0
+    assert not root.exists()

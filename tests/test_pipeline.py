@@ -93,12 +93,15 @@ def _full_recompute(spark, pipe, root):
     return full
 
 
+def _assert_same_rows(got, want, what):
+    """``got`` and ``want`` hold the same rows, as multisets."""
+    assert got.count() == want.count(), what
+    assert got.exceptAll(want).count() == 0, what
+    assert want.exceptAll(got).count() == 0, what
+
+
 def _assert_same_view(pipe, full, table):
-    inc = pipe.silver(table)
-    ful = full.silver(table)
-    assert inc.count() == ful.count(), table
-    assert inc.exceptAll(ful).count() == 0, table
-    assert ful.exceptAll(inc).count() == 0, table
+    _assert_same_rows(pipe.silver(table), full.silver(table), table)
 
 
 def test_delta_picks_up_new_batch_and_matches_full_recompute(pipe, spark, tmp_path):
@@ -117,99 +120,13 @@ def test_delta_picks_up_new_batch_and_matches_full_recompute(pipe, spark, tmp_pa
     full = _full_recompute(spark, pipe, str(tmp_path / "full"))
     for table in TABLE_KEYS:
         _assert_same_view(pipe, full, table)
+    # gold after the cycle == a rebuild over the same state
+    for report in ("advertiser_campaigns_totals_report",
+                   "advertiser_campaigns_daily_ctr_report"):
+        _assert_same_rows(pipe.gold(report), full.gold(report), report)
 
     # third run: no-op again
     assert all(v == 0 for v in pipe.track_deltas().values())
-
-
-def test_incremental_gold_matches_full_rebuild(spark, tmp_path):
-    """ROADMAP #5: bucket-incremental daily-report maintenance reproduces the
-    full rebuild bit-for-bit — including campaign_day ordinals — because the
-    report is bucket-closed (every column depends only on same-campaign
-    rows). Both modes write ONE canonical table (round-3 VERDICT #3): after
-    incremental cycles, readers of the canonical name see fresh data, and a
-    later full rebuild of the same silver state agrees row-for-row."""
-    import os
-
-    root = str(tmp_path / "lake")
-    p = Pipeline(spark, root, as_of=AS_OF)
-    p.write_bronze(gen_all(spark, GenConfig(advertisers=3,
-                                            campaigns_per_advertiser=2,
-                                            impressions_per_campaign=150)))
-    p.initial_load()
-    # first incremental cycle builds the bucketed layout in full
-    p.append_bronze(gen_all(
-        spark,
-        GenConfig(advertisers=2, campaigns_per_advertiser=2,
-                  impressions_per_campaign=80, seed=3, id_offset=40),
-    ))
-    assert any(p.track_deltas(incremental_gold=True).values())
-    # second cycle touches a strict subset of campaigns -> partial rewrite
-    p.append_bronze(gen_all(
-        spark,
-        GenConfig(advertisers=1, campaigns_per_advertiser=1,
-                  impressions_per_campaign=60, seed=11, id_offset=200),
-    ))
-    assert any(p.track_deltas(incremental_gold=True).values())
-
-    canonical = p.paths.gold("advertiser_campaigns_daily_ctr_report")
-    # one table name for both modes: no parallel *_bucketed path, canonical
-    # is physically bucket-partitioned, public reader strips the column
-    assert not os.path.isdir(canonical + "_bucketed")
-    assert any(d.startswith("gold_bucket=") for d in os.listdir(canonical))
-    got_df = p.gold("advertiser_campaigns_daily_ctr_report")
-    assert "gold_bucket" not in got_df.columns
-    got = sorted(map(tuple, got_df.collect()))
-
-    p.rebuild_reports()  # reference full rebuild over the same silver state
-    want = sorted(map(tuple, p.gold(
-        "advertiser_campaigns_daily_ctr_report").collect()))
-    assert got == want
-
-
-def test_incremental_gold_survives_cache_eviction(spark, tmp_path, monkeypatch):
-    """Round-3 VERDICT #4: the touched-bucket set must not depend on cached
-    `upserts` partitions surviving until after the silver append. Simulate
-    total eviction by unpersisting the changed-rows frame at the moment of
-    the append; the incremental gold result must still match a full
-    rebuild."""
-    from data_engineering_task_adtech_data_pipeline_spark.plans import (
-        pipeline as pipeline_mod,
-    )
-
-    real_append = pipeline_mod.upsert_append
-
-    def evicting_append(df, path, partition_by=None):
-        df.unpersist(blocking=True)  # worst case: cache gone at append time
-        return real_append(df, path, partition_by=partition_by)
-
-    monkeypatch.setattr(pipeline_mod, "upsert_append", evicting_append)
-
-    root = str(tmp_path / "lake")
-    p = Pipeline(spark, root, as_of=AS_OF)
-    p.write_bronze(gen_all(spark, GenConfig(advertisers=3,
-                                            campaigns_per_advertiser=2,
-                                            impressions_per_campaign=120)))
-    p.initial_load()
-    p.append_bronze(gen_all(
-        spark,
-        GenConfig(advertisers=2, campaigns_per_advertiser=1,
-                  impressions_per_campaign=70, seed=5, id_offset=60),
-    ))
-    assert any(p.track_deltas(incremental_gold=True).values())
-    p.append_bronze(gen_all(
-        spark,
-        GenConfig(advertisers=1, campaigns_per_advertiser=1,
-                  impressions_per_campaign=50, seed=13, id_offset=300),
-    ))
-    assert any(p.track_deltas(incremental_gold=True).values())
-
-    got = sorted(map(tuple, p.gold(
-        "advertiser_campaigns_daily_ctr_report").collect()))
-    p.rebuild_reports()
-    want = sorted(map(tuple, p.gold(
-        "advertiser_campaigns_daily_ctr_report").collect()))
-    assert got == want
 
 
 def test_track_deltas_releases_upserts_when_append_fails(
@@ -453,30 +370,3 @@ def test_track_deltas_reads_each_bronze_input_once(spark, tmp_path, monkeypatch)
         scans = [r.rstrip("/").rsplit("/", 1)[-1] for r in handed[table]
                  if "/bronze/" in r]
         assert sorted(scans) == sorted(bronze), (table, scans)
-
-
-def test_full_rebuild_writes_one_file_per_gold_bucket(spark, tmp_path):
-    """Each gold bucket of a full rebuild lands as exactly one parquet file,
-    also when AQE does not coalesce the shuffle that feeds the write. The
-    lake has more campaigns than buckets, so buckets share campaigns."""
-    import os
-
-    p = Pipeline(spark, str(tmp_path / "lake"), as_of=AS_OF)
-    p.write_bronze(gen_all(spark, GenConfig(advertisers=10,
-                                            campaigns_per_advertiser=20,
-                                            impressions_per_campaign=5)))
-    p.initial_load()
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        p.rebuild_reports()
-    finally:
-        spark.conf.set(key, prior)
-    path = p.paths.gold("advertiser_campaigns_daily_ctr_report")
-    buckets = [d for d in os.listdir(path) if d.startswith("gold_bucket=")]
-    assert buckets
-    for d in buckets:
-        files = [f for f in os.listdir(os.path.join(path, d))
-                 if f.endswith(".parquet")]
-        assert len(files) == 1, (d, files)
