@@ -1,7 +1,7 @@
 """Path-scheme-agnostic filesystem helpers (Hadoop FileSystem API).
 
 Every persisted layout in this package (silver/gold lake dirs, the
-ReplacingMergeTree-style upsert table, the base/delta IVF index) must work
+ReplacingMergeTree-style upsert table, the base/delta indexes) must work
 wherever Spark itself can read — local disk in tests, HDFS or S3A at the
 100 TB deployment the docstrings describe. Driver-side ``os.path`` /
 ``shutil`` calls silently disagree with Spark about what exists as soon as
@@ -16,10 +16,10 @@ Semantics notes for callers:
 
 * ``rename`` is atomic on HDFS and local filesystems; on S3A it is a
   non-atomic server-side copy+delete. Code that relies on rename for
-  crash-*detection* (``ivf_index_compact``) stays correct — a torn rename
-  leaves both dirs visible, which the staging-dir guard treats as an
-  interrupted run — but code must never rely on rename for isolation on
-  object stores.
+  crash-*detection* (the ``operators.store`` staging and swap) stays
+  correct — a torn rename leaves both dirs visible, which the store's
+  leftover guards treat as an interrupted run — but code must never rely
+  on rename for isolation on object stores.
 * There is no reference analog to cite: the reference delegates all
   storage maintenance to its databases (e.g. ClickHouse merges,
   ``dags/initial_load_generate_postgres_data.py:97-98``); the equivalent

@@ -31,7 +31,9 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import fs
 from ..session import accumulators_exact
+from . import store
 from .chunking import checkpoint, materialize
 
 # --- engine-portable md5 hash family -------------------------------------
@@ -1787,12 +1789,11 @@ def record_link_pairs(
 #                           package's replay-idempotent sink recipe);
 #                           serving derives its band rows on the fly
 #                           (delta << base)
-#   <root>/tombstones       id-grain deletes (minhash_index_delete),
-#                           anti-joined out of every serving read and
-#                           folded physically by minhash_index_compact
-#   <root>/generation       compaction generation marker (same contract as
-#                           the IVF index: stream checkpoints pin it and
-#                           refuse to replay across a fold)
+#   tombstones, generation  the ``operators.store`` protocol, as for the
+#                           IVF index: id-grain deletes
+#                           (minhash_index_delete) anti-joined out of every
+#                           serving read, and the compaction generation
+#                           stream checkpoints pin
 #
 # No reference analog to cite: the reference has no dedup surface at all —
 # this extends the §7 training-data-pipeline family (SURVEY.md).
@@ -1833,7 +1834,6 @@ def _minhash_params(spark, root: str):
     (``minhash_index_write`` refuses to re-band in place); a true
     re-parameterization goes through a fresh Spark write, which always
     generates new part-file names."""
-    fs = _fs_mod()
     path = fs.join(root, MINHASH_PARAMS_DIR)
     token = fs.fingerprint(spark, path)
     key = fs.qualified(spark, path)
@@ -1845,14 +1845,6 @@ def _minhash_params(spark, root: str):
         raise ValueError(f"corrupt minhash index params at {root}")
     _PARAMS_MEMO[key] = (token, rows[0])
     return rows[0]
-
-
-def _fs_mod():
-    """Late import of the fs helper module (dedup must not import it at
-    module level for symmetry with similarity's late dedup imports)."""
-    from .. import fs
-
-    return fs
 
 
 def minhash_index_write(
@@ -1881,7 +1873,6 @@ def minhash_index_write(
     :func:`minhash_index_dedup`, which matches
     :func:`dedup_against` (same parameters, same cap contract) exactly.
     """
-    fs = _fs_mod()
     if num_hashes % bands != 0:
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     spark = corpus.sparkSession
@@ -1894,33 +1885,15 @@ def minhash_index_write(
     # refuses on sight: its rows may be half-applied, and the documented
     # recovery (rename it back) would revive an old-parameter delta under
     # the new base. Compact / recover first, or build under a fresh root.
-    # Only the "dir exists but holds no committed parquet" AnalysisException
-    # reads as empty — a transient read failure must refuse, not bypass the
-    # guard (round-13 review).
-    from pyspark.errors import AnalysisException
-
-    for overlay in (
-        MINHASH_DELTA_DIR, MINHASH_DELTA_DIR + ".compacting", "tombstones",
-    ):
-        path = fs.join(root, overlay)
-        if not fs.is_dir(spark, path):
-            continue
-        if overlay.endswith(".compacting"):
-            live = True
-        else:
-            try:
-                live = not spark.read.parquet(path).isEmpty()
-            except AnalysisException:  # no committed files yet
-                live = False
-        if live:
-            raise ValueError(
-                f"minhash index root {root} still holds a live "
-                f"'{overlay}' overlay; rebuilding the base under it "
-                "would serve delta profiles computed with the old "
-                "parameters (and stale deletes) — run "
-                "minhash_index_compact first or use a fresh root"
-            )
-    _PARAMS_MEMO.pop(root.rstrip("/"), None)
+    live = store.live_overlays(spark, root, MINHASH_DELTA_DIR)
+    if live:
+        raise ValueError(
+            f"minhash index root {root} still holds a live "
+            f"'{live[0]}' overlay; rebuilding the base under it "
+            "would serve delta profiles computed with the old "
+            "parameters (and stale deletes) — run "
+            "minhash_index_compact first or use a fresh root"
+        )
     spark.createDataFrame(
         [
             (
@@ -1951,26 +1924,8 @@ def minhash_index_write(
     band_rows.write.mode("overwrite").partitionBy("hb").parquet(
         fs.join(root, MINHASH_BANDS_DIR)
     )
-    fs.write_text(spark, fs.join(root, "generation"), "0")
+    store.set_generation(spark, root, 0)
     _invalidate_index_memo(spark, root)
-
-
-def _minhash_delta(spark, root: str) -> "DataFrame | None":
-    """The streamed delta's profile rows, without the epoch partition
-    column (None when no delta exists)."""
-    fs = _fs_mod()
-    path = fs.join(root, MINHASH_DELTA_DIR)
-    if not fs.is_dir(spark, path):
-        return None
-    from pyspark.errors import AnalysisException
-
-    from ..streaming.jobs import read_epochs
-
-    try:
-        return read_epochs(spark, path)
-    except AnalysisException:  # dir exists but holds no committed files
-        return None  # yet; any OTHER failure must surface, not read as
-        # "no delta" — that would silently serve without the streamed docs
 
 
 # Resolved stored-relation memo for the SERVING path (round 14, r13
@@ -1998,12 +1953,11 @@ def _index_relations(spark, root: str) -> dict:
     dir mtime, which is reliable on local/HDFS and weak on object stores
     — same-process writers don't depend on it, they invalidate
     explicitly)."""
-    fs = _fs_mod()
     dirs = (
         fs.join(root, MINHASH_BANDS_DIR),
         fs.join(root, MINHASH_DOCS_DIR),
         fs.join(root, MINHASH_DELTA_DIR),
-        fs.join(root, "tombstones"),
+        fs.join(root, store.TOMBSTONES),
     )
     token = tuple(fs.fingerprint(spark, d) for d in dirs)
     key = fs.qualified(spark, root)
@@ -2013,8 +1967,8 @@ def _index_relations(spark, root: str) -> dict:
     rel = {
         "bands": spark.read.parquet(dirs[0]),
         "docs": spark.read.parquet(dirs[1]),
-        "delta": _minhash_delta(spark, root),
-        "tomb": _minhash_tombstones(spark, root),
+        "delta": store.read_delta(spark, dirs[2]),
+        "tomb": store.tombstones(spark, root),
     }
     _RELATIONS_MEMO[key] = (token, rel)
     return rel
@@ -2024,16 +1978,7 @@ def _invalidate_index_memo(spark, root: str) -> None:
     """Drop the resolved-relation memo entry for ``root`` — called by
     every in-process writer that mutates a stored table, so serving
     never reads a pinned listing past a write this process made."""
-    fs = _fs_mod()
     _RELATIONS_MEMO.pop(fs.qualified(spark, root), None)
-
-
-def _minhash_tombstones(spark, root: str) -> "DataFrame | None":
-    fs = _fs_mod()
-    path = fs.join(root, "tombstones")
-    if not fs.is_dir(spark, path):
-        return None
-    return spark.read.parquet(path)
 
 
 def minhash_index_dedup(
@@ -2092,7 +2037,6 @@ def minhash_index_dedup(
         raise ValueError(f"unknown keep mode: {keep!r}")
     B = F.broadcast if broadcast_batch else (lambda df: df)
     spark = batch.sparkSession
-    fs = _fs_mod()
     p = _minhash_params(spark, root)
     corp_id = p.id_col
     prof_new = minhash_profile(
@@ -2221,122 +2165,29 @@ def minhash_index_dedup(
 def minhash_index_delete(spark, root: str, ids, id_col: str | None = None) -> None:
     """Delete docs from the persisted dedup index by id — logical and
     O(ids), exactly like ``similarity.ivf_index_delete``: ids append into
-    an id-grain ``<root>/tombstones`` table that every serving read
+    the root's id-grain tombstone table that every serving read
     anti-joins (band rows AND verification profiles, base and delta
     alike) and :func:`minhash_index_compact` folds physically. After a
     delete, serving matches an index rebuilt from the surviving corpus
     exactly — including cap determinism: the per-bucket sorted-id cap is
     applied AFTER tombstone removal, so a freed cap slot admits the next
     sorted id just as a rebuild would."""
-    fs = _fs_mod()
     if id_col is None:
         id_col = _minhash_params(spark, root).id_col
-    if isinstance(ids, DataFrame):
-        df = ids.select(F.col(id_col))
-    else:
-        df = spark.createDataFrame([(i,) for i in ids], f"{id_col} long")
-    df.write.mode("append").parquet(fs.join(root, "tombstones"))
+    store.append_tombstones(spark, root, ids, id_col)
     _invalidate_index_memo(spark, root)
 
 
-def _swap_rewrite(spark, table_path: str, kept: DataFrame, partition_by: str | None) -> None:
-    """Staged rewrite-and-swap of one table (the detectable-crash fold
-    kernel shared with the IVF index): write survivors to ``.rewriting``,
-    rename the live table aside, rename the rewrite in, drop the old."""
-    fs = _fs_mod()
-    rewriting, old = table_path + ".rewriting", table_path + ".old"
-    w = kept.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(rewriting)
-    fs.rename(spark, table_path, old)
-    fs.rename(spark, rewriting, table_path)
-    fs.delete(spark, old)
-
-
-def _fold_minhash_tombstones(spark, root: str) -> bool:
-    """Physically apply ``<root>/tombstones`` to BOTH stored tables
-    (docs, bands) via staged swaps, then drop the tombstone table.
-    Idempotent: a crash between the two table folds re-runs safely (the
-    tombstone table is deleted last; re-anti-joining already-removed ids
-    is a no-op). A leftover ``.rewriting``/``.old`` dir refuses the run —
-    same manual recovery contract as ``similarity._fold_tombstones``."""
-    fs = _fs_mod()
-    tomb = _minhash_tombstones(spark, root)
-    if tomb is None:
-        return False
-    corp_id = _minhash_params(spark, root).id_col
-    dead = F.broadcast(tomb.select(F.col(tomb.columns[0]).alias(corp_id)).distinct())
-    for name, part in ((MINHASH_DOCS_DIR, None), (MINHASH_BANDS_DIR, "hb")):
-        path = fs.join(root, name)
-        for leftover in (path + ".rewriting", path + ".old"):
-            if fs.is_dir(spark, leftover):
-                raise RuntimeError(
-                    f"interrupted tombstone fold at {leftover}: keep "
-                    f"whichever complete directory holds the table as "
-                    f"'{name}', delete the other, then re-run "
-                    "minhash_index_compact"
-                )
-        live = spark.read.parquet(path)
-        kept = live.join(dead, [corp_id], "left_anti")
-        _swap_rewrite(spark, path, kept, part)
-    fs.delete(spark, fs.join(root, "tombstones"))
-    return True
-
-
 def minhash_index_compact(spark, root: str) -> int:
-    """Fold the streamed delta into the base tables and apply tombstones
-    physically; bumps ``<root>/generation`` so stale stream checkpoints
-    refuse to replay (same contract as ``similarity.ivf_index_compact``).
-    Returns the number of delta docs folded.
-
-    Crash contract (DETECTABLE, not atomic — plain parquet): the delta
-    dir is renamed to ``.compacting`` first (new streamed epochs cannot
-    race the fold), then appended into ``docs`` and, band-derived, into
-    ``bands``; a leftover ``.compacting`` dir means a prior run may have
-    appended some or all rows and the next run refuses. Recovery is
-    manual: check whether the staged ids are in the base tables, then
-    delete the staging dir (appended) or rename it back (not appended).
-    Unlike the IVF delta, this delta is written by the foreachBatch
-    epoch-overwrite sink (no streaming-sink manifest), so the staged dir
-    reads as plain parquet."""
-    fs = _fs_mod()
+    """Fold the streamed delta into the base tables (profiles into
+    ``docs``, their derived band rows into ``bands``) and apply the
+    tombstones physically to both, through ``store.compact`` — the same
+    staged, detectable-crash maintenance pass and generation rule as
+    ``similarity.ivf_index_compact``. Returns the number of delta docs
+    folded."""
     p = _minhash_params(spark, root)
-    delta_path = fs.join(root, MINHASH_DELTA_DIR)
-    staging = delta_path + ".compacting"
-    if fs.is_dir(spark, staging):
-        raise RuntimeError(
-            f"interrupted compaction at {staging}: its rows may or may not "
-            "already be in the base tables — verify, then delete it "
-            "(appended) or rename it back to stream_profiles (not appended)"
-        )
-    from .similarity import _bump_generation
 
-    if not fs.is_dir(spark, delta_path):
-        _fold_minhash_tombstones(spark, root)
-        _bump_generation(spark, root)
-        _invalidate_index_memo(spark, root)
-        return 0
-    fs.rename(spark, delta_path, staging)
-    from pyspark.errors import AnalysisException
-
-    from ..streaming.jobs import read_epochs
-
-    # Only "no committed files" reads as an empty delta: any other read
-    # failure (a corrupt part file) raises and leaves the streamed rows in
-    # the staging dir, which the next run refuses.
-    try:
-        delta = read_epochs(spark, staging)
-    except AnalysisException:
-        delta = None
-    if delta is None:
-        fs.delete(spark, staging)
-        _fold_minhash_tombstones(spark, root)
-        _bump_generation(spark, root)
-        _invalidate_index_memo(spark, root)
-        return 0
-    n = delta.count()
-    if n:
+    def fold(delta: DataFrame) -> None:
         delta.write.mode("append").parquet(fs.join(root, MINHASH_DOCS_DIR))
         _sig_band_rows(
             delta.select(p.id_col, "signature"), p.id_col, p.bands,
@@ -2346,11 +2197,14 @@ def minhash_index_compact(spark, root: str) -> int:
         ).write.mode("append").partitionBy("hb").parquet(
             fs.join(root, MINHASH_BANDS_DIR)
         )
-    fs.delete(spark, staging)
-    _fold_minhash_tombstones(spark, root)
-    _bump_generation(spark, root)
-    _invalidate_index_memo(spark, root)
-    return n
+
+    try:
+        return store.compact(
+            spark, root, MINHASH_DELTA_DIR,
+            {MINHASH_DOCS_DIR: (), MINHASH_BANDS_DIR: ("hb",)}, fold, p.id_col,
+        )
+    finally:
+        _invalidate_index_memo(spark, root)
 
 # ---------------------------------------------------------------------------
 # Persisted duplicate-cluster assignment store: base + delta overlay, updated
@@ -2367,28 +2221,15 @@ COMP_DELTA_DIR = "delta"
 def components_write(assignments: DataFrame, root: str) -> None:
     """Initialize a persisted component store from a closure fixpoint
     (e.g. ``connected_components_star`` output, or an empty frame): base
-    table ``<root>/base`` (id, component, v=0) plus a ``generation``
-    marker. Update via :func:`components_update`, read the current view
-    via :func:`components_read`, fold via :func:`components_compact`."""
-    fs = _fs_mod()
+    table ``<root>/base`` (id, component, v=0) plus the store's
+    generation marker at 0. Update via :func:`components_update`, read
+    the current view via :func:`components_read`, fold via
+    :func:`components_compact`."""
     spark = assignments.sparkSession
     assignments.select(
         "id", "component", F.lit(0).cast("long").alias("v")
     ).write.mode("overwrite").parquet(fs.join(root, COMP_BASE_DIR))
-    fs.write_text(spark, fs.join(root, "generation"), "0")
-
-
-def _components_delta(spark, root: str) -> "DataFrame | None":
-    fs = _fs_mod()
-    path = fs.join(root, COMP_DELTA_DIR)
-    if not fs.is_dir(spark, path):
-        return None
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:  # dir exists but holds no committed files
-        return None  # yet; other failures surface (stale-view hazard)
+    store.set_generation(spark, root, 0)
 
 
 def components_read(spark, root: str) -> DataFrame:
@@ -2398,9 +2239,8 @@ def components_read(spark, root: str) -> DataFrame:
     DELTA-sized (the accumulated changed rows since the last compact,
     kept broadcastable by compacting; same small-side contract as the
     index tombstones)."""
-    fs = _fs_mod()
     base = spark.read.parquet(fs.join(root, COMP_BASE_DIR))
-    delta = _components_delta(spark, root)
+    delta = store.read_delta(spark, fs.join(root, COMP_DELTA_DIR))
     if delta is None:
         return base.select("id", "component")
     # component asc as the final tiebreak: a crash between a delta append
@@ -2435,7 +2275,6 @@ def components_update(spark, root: str, new_edges: DataFrame,
     nothing: no delta is written, the generation does not move, and 0 is
     returned (this is also what makes replaying an already-folded batch
     a no-op)."""
-    fs = _fs_mod()
     cur = components_read(spark, root)
     # materialize the (batch-sized) changed set once: the count decides
     # whether to write at all, and the write then reuses the same rows
@@ -2445,42 +2284,31 @@ def components_update(spark, root: str, new_edges: DataFrame,
     n = changed.count()
     if n == 0:
         return 0
-    gen = int(fs.read_text(spark, fs.join(root, "generation"))) + 1
+    gen = (store.generation(spark, root) or 0) + 1
     changed.select(
         "id", "component", F.lit(gen).cast("long").alias("v")
     ).write.mode("append").partitionBy("v").parquet(
         fs.join(root, COMP_DELTA_DIR)
     )
-    fs.write_text(spark, fs.join(root, "generation"), str(gen))
+    store.set_generation(spark, root, gen)
     return n
 
 
 def components_compact(spark, root: str) -> int:
-    """Fold the delta into the base via the staged rewrite-and-swap
-    kernel (detectable-crash contract shared with the index folds: a
-    leftover ``.rewriting``/``.old`` dir refuses the run; a crash after
-    the swap but before the delta delete re-runs idempotently — the
-    re-fold anti-joins ids already carrying their final labels, so the
-    view is unchanged). Returns the number of delta rows folded. The
-    generation marker is NOT reset: versions stay monotonic across
-    compactions."""
-    fs = _fs_mod()
-    delta = _components_delta(spark, root)
+    """Fold the delta into the base through the store's staged
+    rewrite-and-swap (a leftover of an interrupted swap refuses the run;
+    a crash after the swap but before the delta delete re-runs
+    idempotently — the re-fold anti-joins ids already carrying their
+    final labels, so the view is unchanged). Returns the number of delta
+    rows folded. The generation marker is NOT reset: versions stay
+    monotonic across compactions."""
+    delta = store.read_delta(spark, fs.join(root, COMP_DELTA_DIR))
     if delta is None:
         return 0
     n = delta.count()
-    base_path = fs.join(root, COMP_BASE_DIR)
-    for leftover in (base_path + ".rewriting", base_path + ".old"):
-        if fs.is_dir(spark, leftover):
-            raise RuntimeError(
-                f"interrupted component compaction at {leftover}: keep "
-                f"whichever complete directory holds the table as "
-                f"'{COMP_BASE_DIR}', delete the other, then re-run "
-                "components_compact"
-            )
     view = components_read(spark, root).select(
         "id", "component", F.lit(0).cast("long").alias("v")
     )
-    _swap_rewrite(spark, base_path, view, None)
+    store.swap(spark, fs.join(root, COMP_BASE_DIR), view, ())
     fs.delete(spark, fs.join(root, COMP_DELTA_DIR))
     return n

@@ -46,6 +46,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .. import fs
+from . import store
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1557,18 +1558,18 @@ def _sq8_plan(
 #   <root>/index         offline-built corpus rows + assigned cell, parquet
 #                        PARTITIONED BY cell
 #   <root>/stream_index  rows ingested by streaming.stream_ivf_ingest, same
-#                        cell-partitioned schema, committed exactly-once by
-#                        the streaming file sink's manifest. A SEPARATE
-#                        directory because that manifest governs batch reads
-#                        of its directory — batch-written files mixed into
-#                        it would be invisible; keeping base and delta apart
-#                        lets each use its native commit protocol.
+#                        columns, landed per epoch (``__epoch_id=N/``) and
+#                        read through ``store.read_delta``
+#   <root>/tombstones    id-grain deletes (ivf_index_delete)
+#   <root>/generation    compaction generation (``operators.store``)
 # Search unions base + delta and reads only the probed cells' partitions:
 # the query side broadcasts, so Catalyst turns the cell equi-join into
 # dynamic partition pruning on each index scan (verified in
 # tests/test_variants.py) — at 100 TB a probe=2, cells=1024 search touches
-# ~0.2% of the index files. Periodic compaction = batch-read stream_index,
-# append into index, start a fresh stream checkpoint.
+# ~0.2% of the index files (the small delta is scanned whole). Maintenance
+# (delta fold, tombstones, generation) is the ``operators.store`` protocol.
+
+IVF_DELTA_DIR = "stream_index"
 
 
 def ivf_model_write(spark, centroids: list[list[float]], path: str) -> None:
@@ -1605,26 +1606,6 @@ def sq8_scales_read(spark, path: str) -> list[float]:
     if [r.pos for r in rows] != list(range(len(rows))):
         raise ValueError(f"corrupt SQ8 scales at {path}: non-dense dims")
     return [r.s for r in rows]
-
-
-GENERATION_MARKER = "generation"
-
-
-def index_generation(spark, root: str) -> "int | None":
-    """Compaction generation of a persisted index: 0 at build, +1 per
-    successful ``ivf_index_compact`` fold. Returns None when the root has
-    no marker (an index written before markers existed, or a bare
-    streaming-only layout) — callers then skip generation validation.
-    The marker closes the silent double-ingest window: a streaming
-    checkpoint records which epochs were already written to the delta, so
-    re-using it AFTER the delta was folded away replays those epochs into
-    a fresh delta and duplicates every vector; ``stream_ivf_ingest``
-    pins the generation it saw into the checkpoint and refuses to start
-    when the index has moved on."""
-    path = fs.join(root, GENERATION_MARKER)
-    if not fs.exists(spark, path):
-        return None
-    return int(fs.read_text(spark, path).strip())
 
 
 def ivf_index_write(
@@ -1678,7 +1659,7 @@ def ivf_index_write(
     ivf_model_write(spark, centroids, fs.join(root, "model"))
     if sq8 is not None:
         sq8_scales_write(spark, sq8, fs.join(root, "sq8_scales"))
-    fs.write_text(spark, fs.join(root, GENERATION_MARKER), "0")
+    store.set_generation(spark, root, 0)
     encoded = _encode_index(
         corpus, centroids, emb_col, literal_max,
         planes, sig_seed, sig_hash_method, dim, codebooks, sq8,
@@ -1689,122 +1670,48 @@ def ivf_index_write(
 
 
 def ivf_index_compact(spark, root: str) -> int:
-    """Fold the streaming delta into the base index: atomically rename
-    ``stream_index`` to a ``.compacting`` staging dir (so new streamed
-    epochs cannot race the fold), batch-read it (the sink manifest
-    guarantees only committed files), append its rows into the
-    cell-partitioned base, then drop the staging dir. Returns the number
-    of rows compacted. AFTER compacting, restart ingestion with a FRESH
-    checkpoint and landing directory — the old checkpoint would replay
-    already-compacted epochs into a new delta (ENFORCED: compaction bumps
-    <root>/generation and ``stream_ivf_ingest`` refuses a checkpoint
-    pinned to an older generation).
+    """Fold the streamed delta into the base index and apply the
+    tombstones of :func:`ivf_index_delete` physically, through
+    ``store.compact``: the delta is staged aside first (new streamed
+    epochs cannot race the fold), its rows append into the
+    cell-partitioned base, the surviving base rows are rewritten through
+    the staged swap, and ``<root>/generation`` is bumped when either
+    happened. Returns the number of delta rows folded. AFTER compacting,
+    restart ingestion with a FRESH checkpoint: the old one would replay
+    already-compacted epochs into a new delta (ENFORCED:
+    ``stream_ivf_ingest`` refuses a checkpoint pinned to an older
+    generation). The crash contract (detectable, not atomic) is the
+    store's.
 
-    Crash contract: append-then-delete is two steps, so a crash between
-    them CANNOT be made exactly-once on plain parquet — instead it is made
-    DETECTABLE: a leftover ``.compacting`` dir means a prior run may have
-    already appended some or all of its rows, and this function refuses to
-    proceed (re-appending would silently double-ingest vectors, giving
-    duplicate corpus_ids in search results). Recovery is manual: verify
-    whether the base contains the staged ids, then delete the staging dir
-    (appended) or rename it back to ``stream_index`` (not appended). A
-    table format with atomic MERGE (Delta/Iceberg, ROADMAP #1) removes
-    this window entirely.
-
-    Tombstones (round 11): when ``<root>/tombstones`` exists (rows
-    appended by :func:`ivf_index_delete`), compaction also FOLDS the
-    deletes in — the surviving rows are rewritten via a staged
-    ``index.rewriting`` directory swapped into place, and the tombstone
-    table is dropped, so search cost returns to a bare scan with no
-    anti-join. Same detectable-crash contract as the delta fold: a
-    leftover ``index.rewriting``/``index.old`` dir refuses the run
-    (recovery: exactly one complete index dir exists — keep it as
-    ``index``, delete the other, re-run).
+    Before anything moves, a delta missing base columns refuses (e.g.
+    ``stream_ivf_ingest`` run without ``planes`` against a hybrid index,
+    so no ``sig``): folded in, those rows would read NULL there and the
+    hamming filter would silently drop them from every hybrid search.
 
     At 100 TB this is the usual base/delta maintenance job: appends are
     per-cell files (no shuffle — rows are already cell-assigned), the
     tombstone rewrite is one scan + broadcast anti-join (id-grain, no
-    shuffle), and search cost returns to one scan instead of
-    base + delta + anti-join.
-
-    All directory probes/renames/deletes go through the Hadoop FileSystem
-    API (``fs`` module), so the layout works on any scheme Spark can read
-    (file://, hdfs://, s3a://) — driver-local ``os.path`` would silently
-    report "no delta" for any URI path. On S3A the staging rename is a
-    copy+delete rather than atomic, which WIDENS the detectable-crash
-    window but never narrows detection: a torn rename leaves both dirs
-    visible and the staging guard below refuses to proceed."""
-    delta_path = fs.join(root, "stream_index")
-    staging = delta_path + ".compacting"
-    if fs.is_dir(spark, staging):
-        raise RuntimeError(
-            f"interrupted compaction at {staging}: its rows may or may not "
-            "already be in the base index — verify, then delete it "
-            "(appended) or rename it back to stream_index (not appended)"
+    shuffle), and search cost returns to one scan."""
+    index = fs.join(root, "index")
+    delta = store.read_delta(spark, fs.join(root, IVF_DELTA_DIR))
+    if delta is not None:
+        missing = sorted(
+            set(spark.read.parquet(index).columns) - set(delta.columns)
         )
-    if not fs.is_dir(spark, delta_path):
-        # no streamed delta: tombstones (if any) still fold
-        if _fold_tombstones(spark, root):
-            _bump_generation(spark, root)
-        return 0
-    # Snapshot the manifest-committed data files BEFORE the rename: the
-    # streaming sink's _spark_metadata records absolute paths, so a read
-    # through the renamed directory would resolve to the old location.
-    # Reading the snapshot by explicit file list keeps the manifest's
-    # exactly-once filtering (orphan files from aborted tasks excluded)
-    # while the rename keeps racing new epochs out of this fold.
-    # Only "no committed files" reads as an empty delta: any other read
-    # failure (a corrupt part file) raises here, before the rename, and
-    # leaves the streamed rows in place.
-    from pyspark.errors import AnalysisException
-
-    try:
-        delta_preview = spark.read.parquet(delta_path)
-        files = delta_preview.inputFiles()
-    except AnalysisException:  # only empty committed epochs -> nothing to fold
-        delta_preview, files = None, []
-    if files:
-        # Schema-coverage guard BEFORE any mutation: a delta missing base
-        # columns (e.g. stream_ivf_ingest run without ``planes`` against a
-        # hybrid index, so no ``sig``) fails loudly in ivf_index_search —
-        # folding it in would instead fill those columns with NULL on read
-        # and the hamming filter would silently drop the rows from every
-        # future hybrid search. Raising here, pre-rename, leaves the delta
-        # intact for the caller to re-ingest correctly.
-        base_cols = set(spark.read.parquet(fs.join(root, "index")).columns)
-        missing = sorted(base_cols - set(delta_preview.columns))
         if missing:
             raise ValueError(
-                f"refusing to compact {delta_path}: delta lacks base index "
+                f"refusing to compact {root}: delta lacks base index "
                 f"column(s) {missing} — rows folded without them would read "
                 "as NULL and silently vanish from hybrid searches; re-ingest "
                 "the delta with matching sketch settings first"
             )
-    fs.rename(spark, delta_path, staging)
-    if not files:
-        fs.delete(spark, staging)
-        _fold_tombstones(spark, root)
-        _bump_generation(spark, root)
-        return 0
-    # inputFiles() returns fully-qualified URIs; map them into the staging
-    # dir by suffix so bare-path roots (test dirs) and URI roots both work.
-    delta_name, staging_name = "/stream_index/", "/stream_index.compacting/"
-    moved = [f.replace(delta_name, staging_name) for f in files]
-    delta = spark.read.option("basePath", staging).parquet(*moved)
-    n = delta.count()
-    if n:
-        delta.write.mode("append").partitionBy("cell").parquet(
-            fs.join(root, "index")
-        )
-    fs.delete(spark, staging)
-    # fold tombstones AFTER the delta append so deletes targeting streamed
-    # rows land in the same maintenance pass
-    _fold_tombstones(spark, root)
-    _bump_generation(spark, root)
-    return n
-
-
-TOMBSTONES_DIR = "tombstones"
+    return store.compact(
+        spark, root, IVF_DELTA_DIR, {"index": ("cell",)},
+        lambda rows: rows.write.mode("append").partitionBy("cell").parquet(
+            index
+        ),
+        None,
+    )
 
 
 def ivf_index_delete(
@@ -1833,70 +1740,7 @@ def ivf_index_delete(
     START after the append returns; concurrent in-flight searches may
     still serve the old rows (same read-snapshot semantics as the
     streamed delta)."""
-    if isinstance(ids, DataFrame):
-        df = ids.select(F.col(id_col))
-    else:
-        df = spark.createDataFrame(
-            [(i,) for i in ids], f"{id_col} long"
-        )
-    df.write.mode("append").parquet(fs.join(root, TOMBSTONES_DIR))
-
-
-def _fold_tombstones(spark, root: str) -> bool:
-    """Physically apply ``<root>/tombstones`` to the base index: rewrite
-    the surviving rows through a staged directory swap, then drop the
-    tombstone table. Returns True when a fold happened. One scan + one
-    broadcast LEFT ANTI join (id-grain build side), written back
-    cell-partitioned — no shuffle of the index rows.
-
-    Crash contract (same DETECTABLE design as the delta fold): the swap
-    is rewrite-staging -> rename-old-aside -> rename-staging-in ->
-    delete-old, and a leftover ``index.rewriting`` or ``index.old`` dir
-    refuses the next run. Recovery is manual and unambiguous: whichever
-    complete directory holds the index content becomes ``index``, the
-    other is deleted, and the fold re-runs (tombstone application is
-    idempotent — re-anti-joining already-removed ids is a no-op)."""
-    tomb_path = fs.join(root, TOMBSTONES_DIR)
-    if not fs.is_dir(spark, tomb_path):
-        return False
-    idx_path = fs.join(root, "index")
-    rewriting = idx_path + ".rewriting"
-    old = idx_path + ".old"
-    for leftover in (rewriting, old):
-        if fs.is_dir(spark, leftover):
-            raise RuntimeError(
-                f"interrupted tombstone fold at {leftover}: keep whichever "
-                "complete directory holds the index as 'index', delete the "
-                "other, then re-run ivf_index_compact"
-            )
-    tomb = spark.read.parquet(tomb_path)
-    tcol = tomb.columns[0]
-    idx = spark.read.parquet(idx_path)
-    if tcol not in idx.columns:
-        raise ValueError(
-            f"tombstone id column {tcol!r} not in index columns "
-            f"{idx.columns} — ivf_index_delete must use the same id_col "
-            "the index was written with"
-        )
-    kept = idx.join(
-        F.broadcast(tomb.select(tcol).distinct()), [tcol], "left_anti"
-    )
-    kept.write.mode("overwrite").partitionBy("cell").parquet(rewriting)
-    fs.rename(spark, idx_path, old)
-    fs.rename(spark, rewriting, idx_path)
-    fs.delete(spark, old)
-    fs.delete(spark, tomb_path)
-    return True
-
-
-def _bump_generation(spark, root: str) -> None:
-    """Advance the compaction generation after the delta directory has
-    been consumed — any checkpoint created against the previous delta is
-    now stale, and stream_ivf_ingest will refuse it."""
-    gen = index_generation(spark, root)
-    fs.write_text(
-        spark, fs.join(root, GENERATION_MARKER), str((gen or 0) + 1)
-    )
+    store.append_tombstones(spark, root, ids, id_col)
 
 
 def ivf_index_search(
@@ -1944,10 +1788,11 @@ def ivf_index_search(
     allowed rows only — post-filtering top-k results would instead
     return fewer than k.
 
-    The streamed-delta probe goes through the Hadoop FileSystem API, so a
-    delta under an hdfs:// or s3a:// root is found exactly like a local
-    one — an ``os.path`` probe would return False for any URI and serve
-    the base index only, silently dropping every streamed row.
+    The streamed-delta probe goes through the Hadoop FileSystem API
+    (``store.read_delta``), so a delta under an hdfs:// or s3a:// root is
+    found exactly like a local one — an ``os.path`` probe would return
+    False for any URI and serve the base index only, silently dropping
+    every streamed row.
 
     Deletes (round 11): ids tombstoned via :func:`ivf_index_delete` are
     anti-joined out of every candidate read (base + delta) BEFORE any
@@ -1982,34 +1827,21 @@ def ivf_index_search(
     # slots: results match an index rebuilt from the surviving rows with
     # the same model, exactly (equivalence-tested). The build side is
     # id-grain tiny; ivf_index_compact folds it away physically.
-    tomb_path = fs.join(root, TOMBSTONES_DIR)
+    tomb = store.tombstones(spark, root)
     tomb_ids = (
-        F.broadcast(
-            spark.read.parquet(tomb_path)
-            .select(F.col(id_col).alias("corpus_id"))
-            .distinct()
-        )
-        if fs.is_dir(spark, tomb_path)
-        else None
+        None
+        if tomb is None
+        else F.broadcast(tomb.select(F.col(id_col).alias("corpus_id")).distinct())
     )
 
     def candidates(*cols) -> DataFrame:
+        # a delta holding no committed files reads as None; a delta that
+        # lacks a requested column (e.g. sig, when stream_ivf_ingest ran
+        # without planes against a hybrid index) fails loudly below
+        delta = store.read_delta(spark, fs.join(root, IVF_DELTA_DIR))
         scans = [spark.read.parquet(fs.join(root, "index"))]
-        delta_path = fs.join(root, "stream_index")
-        if fs.is_dir(spark, delta_path):
-            # the sink may have committed only empty epochs: the directory
-            # then holds just _spark_metadata and the read cannot infer a
-            # schema — an empty delta must not fail the whole search. Only
-            # the BARE read is guarded: a delta that exists but lacks a
-            # requested column (e.g. sig missing because stream_ivf_ingest
-            # ran without planes against a hybrid index) must fail loudly
-            # rather than be silently dropped from results.
-            from pyspark.errors import AnalysisException
-
-            try:
-                scans.append(spark.read.parquet(delta_path))
-            except AnalysisException:
-                pass
+        if delta is not None:
+            scans.append(delta)
         # filtered (metadata-constrained) search: the predicate sits on
         # each RAW index read, so it reaches the parquet scan as a pushed
         # filter alongside the cells' partition pruning — the

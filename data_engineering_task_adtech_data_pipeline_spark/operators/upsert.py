@@ -11,19 +11,19 @@ always wins at write time, dedup at read time:
   — scales to any ingest rate). Writes are FENCED (round 7): a sidecar
   lock makes concurrent mutation of one table fail loudly
   (``ConcurrentWriteError``) instead of corrupting it, and every fenced
-  write bumps a ``_write_generation`` marker (the same vintage-fencing
-  discipline as the persisted ANN index's ``index_generation``),
+  write bumps the table's generation marker (``operators.store``, the
+  same vintage-fencing discipline as the persisted indexes),
 - **read**: ``latest_version`` view — ``row_number() OVER (PARTITION BY keys
   ORDER BY version DESC) = 1``,
-- **compact**: periodically rewrite a partition through ``latest_version``
+- **compact**: periodically rewrite the table through ``latest_version``
   (the analog of a ClickHouse background merge) so read amplification stays
-  bounded.
+  bounded; the rewrite keeps the table's partition columns and swaps in
+  through ``store.swap``.
 
 At 100 TB the dedup window shuffles only the key+version columns it needs;
-partition the table by a time column and compact per-partition so each
-compaction touches bounded data. On a lakehouse format (Delta/Iceberg) the
-same API maps to ``MERGE INTO`` — kept behind this function so callers don't
-care.
+partition the table by a time column so appends touch recent partitions
+only. On a lakehouse format (Delta/Iceberg) the same API maps to
+``MERGE INTO`` — kept behind this function so callers don't care.
 """
 
 from __future__ import annotations
@@ -35,15 +35,15 @@ import time
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .. import fs
+from . import store
+from .store import table_generation
 
 _RN = "__rn_replacing_merge"
-
-_GEN_FILE = "_write_generation"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -151,7 +151,7 @@ def _write_fence(spark: SparkSession, path: str, op: str):
     create-if-absent of a sidecar lock file (``fs.create_exclusive`` —
     atomic on HDFS/local; see its S3A caveat); a concurrent writer FAILS
     LOUDLY with ``ConcurrentWriteError`` instead of corrupting the table.
-    On success the table's ``_write_generation`` marker is bumped, so
+    On success the table's generation marker is bumped, so
     readers/caches can fence on table vintage the same way the ANN index
     does. The lock always releases on exit — including on error — so only
     a process crash leaves it behind; a SAME-HOST crash then self-recovers
@@ -185,27 +185,15 @@ def _write_fence(spark: SparkSession, path: str, op: str):
         )
     try:
         # read the generation at ENTRY: ops that replace the table dir
-        # (compact's delete+rename) drop the in-table marker mid-fence,
-        # and re-reading at exit would reset the counter
-        gen_path = fs.join(path, _GEN_FILE)
+        # (compact's swap) drop the in-table marker mid-fence, and
+        # re-reading at exit would reset the counter
         gen = 0
-        if fs.exists(spark, gen_path):
-            with contextlib.suppress(ValueError):
-                gen = int(fs.read_text(spark, gen_path).strip())
+        with contextlib.suppress(ValueError):
+            gen = table_generation(spark, path)
         yield
-        fs.write_text(spark, gen_path, str(gen + 1))
+        store.set_table_generation(spark, path, gen + 1)
     finally:
         fs.delete(spark, lock, recursive=False)
-
-
-def table_generation(spark: SparkSession, path: str) -> int:
-    """Monotone write-generation of a fenced table (0 if never written
-    through the fence) — cache keys derived from table state should
-    include this, mirroring ``similarity.index_generation``."""
-    gen_path = fs.join(path, _GEN_FILE)
-    if not fs.exists(spark, gen_path):
-        return 0
-    return int(fs.read_text(spark, gen_path).strip())
 
 
 def latest_version(
@@ -259,22 +247,58 @@ def compact(
     tiebreak: Sequence[str] = (),
 ) -> None:
     """Rewrite the table keeping only latest versions (background-merge
-    analog). Call per time-partition at scale, not on the whole table."""
+    analog) through the store's staged swap, partitioned by the table's
+    own partition columns (read from its ``col=value`` directories), so
+    later partitioned appends stay visible to partition discovery. A crash
+    leaves the table or a complete ``store.swap`` leftover, never no
+    table. On object stores prefer a lakehouse table format, where
+    compaction is a metadata swap."""
     with _write_fence(spark, path, "compact"):
         deduped = latest_version(
             spark.read.parquet(path), keys, version, tiebreak
         )
-        tmp = path.rstrip("/") + "__compact_tmp"
-        deduped.write.mode("overwrite").parquet(tmp)
-        # scheme-agnostic swap via Hadoop FileSystem (atomic on HDFS/local,
-        # copy+delete on S3A); on object stores prefer a lakehouse table
-        # format where compaction is a metadata swap
-        fs.delete(spark, path)
-        fs.rename(spark, tmp, path)
+        store.swap(spark, path, deduped, _partition_columns(spark, path))
+
+
+def _partition_columns(spark: SparkSession, path: str) -> list[str]:
+    """The table's partition columns, outermost first: the ``col=`` names
+    along its first chain of partition directories."""
+    cols = []
+    while True:
+        sub = [n for n in fs.list_names(spark, path) if "=" in n]
+        if not sub:
+            return cols
+        cols.append(sub[0].split("=", 1)[0])
+        path = fs.join(path, sub[0])
 
 
 BUCKET_COL = "merge_bucket"
 _META_FILE = "_merge_meta"
+
+
+def _bucket(keys: Sequence[str], num_buckets: int) -> Column:
+    """The ``merge_bucket`` a key hashes into."""
+    return F.pmod(
+        F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)
+    ).cast("int")
+
+
+def _merge_staging(path: str) -> str:
+    return path.rstrip("/") + "__merge_tmp"
+
+
+def _swap_buckets(spark: SparkSession, path: str, buckets: list[int]) -> None:
+    """Replace each bucket dir of ``path`` by its staged rewrite (a bucket
+    with no staged rows is removed), then drop the staging dir. Per-bucket
+    delete+rename: a crash mid-swap is repaired by replaying the merge."""
+    staging = _merge_staging(path)
+    for b in buckets:
+        bdst = fs.join(path, f"{BUCKET_COL}={b}")
+        bsrc = fs.join(staging, f"{BUCKET_COL}={b}")
+        fs.delete(spark, bdst)
+        if fs.exists(spark, bsrc):
+            fs.rename(spark, bsrc, bdst)
+    fs.delete(spark, staging)
 
 
 def merge_upsert(
@@ -301,10 +325,9 @@ def merge_upsert(
     merge unions the source with just those target partitions (partition
     pruning on a bounded ``isin``), applies ``latest_version``, writes to
     a staging dir, then swaps the ≤ ``num_buckets`` bucket dirs through
-    Hadoop FileSystem renames (scheme-agnostic, same ``fs`` discipline as
-    ``similarity.ivf_index_compact``). At 100 TB a delta touching k keys
-    rewrites ≤ min(k, num_buckets) buckets ≈ k/|keys| of the table, the
-    same touched-bucket math as the gold incremental rebuild.
+    Hadoop FileSystem renames (scheme-agnostic ``fs`` calls). At 100 TB a
+    delta touching k keys rewrites ≤ min(k, num_buckets) buckets ≈
+    k/|keys| of the table.
 
     Crash contract: the swap is per-bucket delete+rename, so a crash
     mid-swap leaves a mixed table plus the staging dir. Recovery is
@@ -334,10 +357,7 @@ def merge_upsert(
     # window shuffle over the delta-sized source, found by property test
     # (a dup-key source used to land both rows on initial load).
     src = latest_version(source, keys, version, tiebreak).withColumn(
-        BUCKET_COL,
-        F.pmod(
-            F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)
-        ).cast("int"),
+        BUCKET_COL, _bucket(keys, num_buckets)
     )
     meta = repr((sorted(keys), version, int(num_buckets)))
     meta_path = fs.join(path, _META_FILE)
@@ -387,19 +407,12 @@ def merge_upsert(
                 keys, version, tiebreak,
             )
 
-            staging = path.rstrip("/") + "__merge_tmp"
             merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                staging
+                _merge_staging(path)
             )
         finally:
             src.unpersist()
-        for b in buckets:
-            bdst = fs.join(path, f"{BUCKET_COL}={b}")
-            bsrc = fs.join(staging, f"{BUCKET_COL}={b}")
-            fs.delete(spark, bdst)
-            if fs.exists(spark, bsrc):
-                fs.rename(spark, bsrc, bdst)
-        fs.delete(spark, staging)
+        _swap_buckets(spark, path, buckets)
 
 
 def _merge_upsert_delta(
@@ -517,15 +530,8 @@ def merge_delete(
             f"merge_delete keys {sorted(keys)} != table keys {stored[0]}"
         )
     num_buckets = stored[2]
-    dk = (
-        ids.select(*keys)
-        .distinct()
-        .withColumn(
-            BUCKET_COL,
-            F.pmod(
-                F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)
-            ).cast("int"),
-        )
+    dk = ids.select(*keys).distinct().withColumn(
+        BUCKET_COL, _bucket(keys, num_buckets)
     )
     with _write_fence(spark, path, "merge_delete"):
         # same two-consumer persist as merge_upsert's src (round 15):
@@ -540,19 +546,12 @@ def merge_delete(
             target = spark.read.option("mergeSchema", "true").parquet(path)
             relevant = target.where(F.col(BUCKET_COL).isin(buckets))
             kept = relevant.join(dk.select(*keys), list(keys), "left_anti")
-            staging = path.rstrip("/") + "__merge_tmp"
             kept.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                staging
+                _merge_staging(path)
             )
         finally:
             dk.unpersist()
-        for b in buckets:
-            bdst = fs.join(path, f"{BUCKET_COL}={b}")
-            bsrc = fs.join(staging, f"{BUCKET_COL}={b}")
-            fs.delete(spark, bdst)
-            if fs.exists(spark, bsrc):
-                fs.rename(spark, bsrc, bdst)
-        fs.delete(spark, staging)
+        _swap_buckets(spark, path, buckets)
         # a delete that emptied the whole table must leave it READABLE:
         # with zero bucket dirs there is no footer to infer from, so pin
         # the schema with one empty anchor partition

@@ -34,8 +34,10 @@ runs under the caller's job group, description and session tags.
 
 Scale notes: silver tables are append-only parquet. ``initial_load``
 partitions the two daily tables by their date column (``TABLE_PARTITION``),
-so delta appends touch only recent partitions and compaction is per-day;
-the campaign-grain totals stay unpartitioned (dimension-sized).
+so delta appends touch only recent partitions; the campaign-grain totals
+stay unpartitioned (dimension-sized). Nothing in the pipeline compacts
+yet: ``upsert.compact`` rewrites a table keeping its partition columns,
+and running it from the cycle is ROADMAP direction 2(c).
 """
 
 from __future__ import annotations
@@ -178,7 +180,7 @@ class Pipeline:
             writer = df.write.mode("overwrite")
             if TABLE_PARTITION[name]:
                 # daily tables partition by their date column so delta
-                # appends and compaction touch only recent partitions
+                # appends touch only recent partitions
                 writer = writer.partitionBy(*TABLE_PARTITION[name])
             writes.append(partial(writer.parquet, self.paths.silver(name)))
         self._concurrently(writes)

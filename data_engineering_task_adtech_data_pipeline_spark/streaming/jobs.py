@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from .. import fs
+from ..operators import store
 from ..operators.chunking import checkpoint, track_persist
 from ..operators.upsert import upsert_append
 
@@ -70,29 +71,22 @@ def _start(
     frame: DataFrame,
     checkpoint_dir: str,
     processing_time: str | None,
-    sink: Callable[[DataFrame, int], None] | str,
+    sink: Callable[[DataFrame, int], None],
     output_mode: str = "append",
-    partition_by: tuple[str, ...] = (),
 ) -> StreamingQuery:
     """Start ``frame`` as a streaming query under the module's trigger
-    mapping. A callable ``sink`` runs per non-empty micro-batch through
-    ``foreachBatch``; a string ``sink`` is the path of a native parquet
-    sink (manifest-committed, exactly-once files) partitioned by
-    ``partition_by``."""
-    writer = frame.writeStream.outputMode(output_mode).option(
-        "checkpointLocation", checkpoint_dir
+    mapping; ``sink`` runs per non-empty micro-batch through
+    ``foreachBatch``."""
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            sink(batch_df, epoch_id)
+
+    writer = (
+        frame.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(run)
     )
-    if isinstance(sink, str):
-        writer = writer.format("parquet").option("path", sink).partitionBy(
-            *partition_by
-        )
-    else:
-
-        def run(batch_df: DataFrame, epoch_id: int) -> None:
-            if not batch_df.isEmpty():
-                sink(batch_df, epoch_id)
-
-        writer = writer.foreachBatch(run)
     if processing_time is None:
         writer = writer.trigger(availableNow=True)
     else:
@@ -116,7 +110,7 @@ def _land_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
 def read_epochs(spark: SparkSession, path: str) -> DataFrame:
     """Read an epoch-landed output (:func:`stream_decontaminate`,
     :func:`stream_dedup_against`, the accepted table of
-    :func:`stream_dedup_pipeline`, a MinHash index delta) without the
+    :func:`stream_dedup_pipeline`, an IVF or MinHash index delta) without the
     physical ``__epoch_id`` partition column, so consumers see the plain
     schema (interchangeable with the batch operator's output)."""
     return spark.read.parquet(path).drop(EPOCH_COL)
@@ -130,17 +124,15 @@ def _pin_generation(
     items: str,
 ) -> None:
     """Generation guard: an index compaction consumes the streamed delta
-    and bumps ``<root>/generation``. A checkpoint created against the
-    pre-compaction delta would REPLAY its epochs into a new delta, and
-    every one of those ``items`` would then be served twice, silently.
-    So the generation a checkpoint was born under is pinned into
-    ``<checkpoint_dir>/<marker>``, and the job refuses to start once they
-    diverge: after each compaction, callers start a FRESH checkpoint. A
-    pre-marker checkpoint adopts the current generation; a root without a
-    generation marker (or no root) skips the guard."""
-    from ..operators.similarity import index_generation
-
-    gen = index_generation(spark, root) if root else None
+    and bumps the root's generation (``operators.store``). A checkpoint
+    created against the pre-compaction delta would REPLAY its epochs into
+    a new delta, and every one of those ``items`` would then be served
+    twice, silently. So the generation a checkpoint was born under is
+    pinned into ``<checkpoint_dir>/<marker>``, and the job refuses to
+    start once they diverge: after each compaction, callers start a FRESH
+    checkpoint. A pre-marker checkpoint adopts the current generation; a
+    root without a generation marker (or no root) skips the guard."""
+    gen = store.generation(spark, root) if root else None
     if gen is None:
         return
     path = fs.join(checkpoint_dir, marker)
@@ -524,12 +516,13 @@ def stream_ivf_ingest(
     """Streaming ANN ingestion: new embedding parquet files land → each row
     is encoded by ``operators.similarity._encode_index`` (the one
     stored-row encoding, shared with ``ivf_index_write`` and the in-memory
-    ``ivf_*_topk`` operators) → rows append to a cell-partitioned parquet
-    index. Composes the trained-index path (``kmeans_fit``) with
+    ``ivf_*_topk`` operators) → each micro-batch's rows land as one
+    ``__epoch_id=N/`` partition of ``output_path``, carrying their
+    ``cell``. Composes the trained-index path (``kmeans_fit``) with
     Structured Streaming: the model is trained once offline, then the
-    index absorbs new vectors continuously without retraining, and
-    ``ivf_index_search`` reads the cell-partitioned layout with partition
-    pruning on the probed cells.
+    index absorbs new vectors continuously without retraining;
+    ``ivf_index_compact`` moves them into the base index's
+    cell-partitioned layout, which searches prune by probed cell.
 
     Growing an index built with extra stored columns: pass the SAME
     (planes, sig_seed, sig_hash_method, dim) as the hybrid index's
@@ -546,32 +539,29 @@ def stream_ivf_ingest(
     explicit schema — columns absent from it read as NULL, so a mismatched
     id column would otherwise silently populate the index with null ids).
 
-    Sink semantics: the encoding is a stateless per-row projection
-    (plan-literal argmin for small models, broadcast centroid table above
-    — both are supported stream-side transforms), so the NATIVE parquet
-    streaming sink applies, whose manifest log gives exactly-once file
-    commits — no foreachBatch, no custom idempotence needed. That
-    manifest governs batch reads of ``output_path``, so do NOT mix
-    batch-written files into it — to grow an offline-built index
-    (``similarity.ivf_index_write``), point ``output_path`` at the index
-    root's ``stream_index/`` delta directory, which ``ivf_index_search``
-    unions with the base automatically.
+    Sink semantics: the module's epoch-idempotent landing and generation
+    guard, as in :func:`stream_minhash_ingest`. To grow an offline-built
+    index (``similarity.ivf_index_write``), point ``output_path`` at the
+    index root's ``stream_index/`` delta directory, which
+    ``ivf_index_search`` unions with the base automatically and
+    ``ivf_index_compact`` folds into it; read any other ``output_path``
+    through :func:`read_epochs`.
 
-    Scale shape: no shuffle anywhere — assignment is a projection, and
-    ``partitionBy("cell")`` fans files out at write time. At 100 TB of
-    arriving vectors this is embarrassingly parallel across executors; the
-    only cross-node traffic is the (tiny) broadcast model above
-    ``LITERAL_CELL_MAX`` cells.
+    Scale shape: no shuffle anywhere — the encoding (plan-literal argmin
+    for small models, broadcast centroid table above) is a per-row
+    projection of the stream. At 100 TB of arriving vectors this is
+    embarrassingly parallel across executors; the only cross-node traffic
+    is the (tiny) broadcast model above ``LITERAL_CELL_MAX`` cells.
     """
-    from ..operators.similarity import _encode_index
+    from ..operators.similarity import IVF_DELTA_DIR, _encode_index
 
     # the persisted index whose compaction generation the checkpoint
     # pins: index_root, or the root whose stream_index/ delta this grows
     root = index_root
     if root is None:
         op = output_path.rstrip("/")
-        if op.endswith("/stream_index"):
-            root = op[: -len("/stream_index")]
+        if op.endswith("/" + IVF_DELTA_DIR):
+            root = op[: -len("/" + IVF_DELTA_DIR)]
     _pin_generation(spark, checkpoint_dir, root, ".ivf_generation", "vectors")
 
     stream = spark.readStream.schema(schema or EMBEDDING_SCHEMA).parquet(input_dir)
@@ -581,8 +571,8 @@ def stream_ivf_ingest(
         sq8=sq8_scales_vec,
     )
     return _start(
-        assigned, checkpoint_dir, processing_time, output_path,
-        partition_by=("cell",),
+        assigned, checkpoint_dir, processing_time,
+        lambda batch_df, epoch_id: _land_epoch(batch_df, epoch_id, output_path),
     )
 
 

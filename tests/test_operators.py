@@ -3,6 +3,7 @@ cases: NULL timestamps, zero-match left joins, version ties, CDC key moves."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
@@ -127,6 +128,38 @@ def test_compact_preserves_latest_versions(spark, tmp_path):
     # compaction is idempotent and the dedup view is unchanged by it
     compact(spark, path, keys=["k"], version="v")
     assert latest_version(spark.read.parquet(path), ["k"], "v").count() == 2
+
+
+def test_compact_keeps_partition_columns(spark, tmp_path):
+    """Compacting a partitioned table keeps its partition layout: a flat
+    rewrite would drop out of partition discovery once the next
+    partitioned append lands, and reads would silently lose the compacted
+    rows."""
+    from data_engineering_task_adtech_data_pipeline_spark.operators.upsert import (
+        compact,
+        upsert_append,
+    )
+
+    path = str(tmp_path / "parted")
+    schema = "k int, v int, day string, hour int"
+
+    def append(*rows):
+        upsert_append(
+            spark.createDataFrame(list(rows), schema), path,
+            partition_by=["day", "hour"],
+        )
+
+    append((1, 1, "d1", 0), (1, 2, "d1", 0))
+    append((2, 1, "d2", 5))
+    compact(spark, path, keys=["k"], version="v")
+    append((3, 1, "d3", 7))
+    got = sorted(
+        (r.k, r.v, r.day, r.hour) for r in spark.read.parquet(path).collect()
+    )
+    assert got == [(1, 2, "d1", 0), (2, 1, "d2", 5), (3, 1, "d3", 7)]
+    assert sorted(n for n in os.listdir(path) if "=" in n) == [
+        "day=d1", "day=d2", "day=d3",
+    ]
 
 
 def test_jdbc_roundtrip_partitioned_derby(spark, tmp_path):

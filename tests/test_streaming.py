@@ -346,8 +346,9 @@ def test_stream_decontaminate_replay_is_idempotent(spark, tmp_path):
 
 def test_stream_ivf_ingest_matches_batch_assignment(spark, tmp_path):
     """Streaming ANN ingestion: vectors landing as files are routed to the
-    same trained IVF cells the batch assignment produces, into a
-    cell-partitioned parquet index (exactly-once native file sink)."""
+    same trained IVF cells the batch assignment produces, each micro-batch
+    landed as its own epoch partition (the module's epoch-idempotent
+    sink)."""
     import os
 
     from data_engineering_task_adtech_data_pipeline_spark.operators import similarity
@@ -355,6 +356,7 @@ def test_stream_ivf_ingest_matches_batch_assignment(spark, tmp_path):
         Testdata,
     )
     from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
+        read_epochs,
         stream_ivf_ingest,
     )
 
@@ -372,21 +374,21 @@ def test_stream_ivf_ingest_matches_batch_assignment(spark, tmp_path):
         spark, d + "/in", centroids, d + "/index", d + "/ckpt"
     ).awaitTermination(120)
 
-    # physical layout is cell-partitioned (probed-cell partition pruning)
-    assert any(
-        n.startswith("cell=") for n in os.listdir(d + "/index")
-    ), os.listdir(d + "/index")
+    # physical layout: one partition per micro-batch epoch
+    assert sorted(
+        n for n in os.listdir(d + "/index") if "=" in n
+    ) == ["__epoch_id=0", "__epoch_id=1"], os.listdir(d + "/index")
 
-    got = {
-        r.vec_id: r.cell for r in spark.read.parquet(d + "/index").collect()
-    }
+    rows = read_epochs(spark, d + "/index").collect()
+    got = {r.vec_id: r.cell for r in rows}
     want = {
         r.vec_id: r.cell
         for r in similarity._with_cell(
             similarity.with_double_embedding(emb), "embedding", centroids
         ).collect()
     }
-    assert got == want  # every vector ingested exactly once, same cell
+    assert got == want  # every vector ingested, same cell
+    assert len(rows) == emb.count()  # exactly once
 
 
 @pytest.mark.slow

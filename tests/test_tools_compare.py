@@ -190,3 +190,33 @@ def test_ab_queries_alternates_which_checkout_runs_first(monkeypatch):
     ])
     m.main()
     assert calls == ["A", "B", "B", "A"]
+
+
+def test_interleaved_perfbench_refuses_working_trees(tmp_path, monkeypatch):
+    spec = importlib.util.spec_from_file_location(
+        "interleaved_ab", TOOLS / "interleaved_ab.py"
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    monkeypatch.setattr(
+        m, "run_perfbench", lambda *a: pytest.fail("ran a checkout")
+    )
+    parent, change = tmp_path / "parent", tmp_path / "change"
+    parent.mkdir()
+    change.mkdir()
+
+    def run():
+        monkeypatch.setattr(sys, "argv", [
+            "interleaved_ab.py", "--a", str(parent), "--b", str(change),
+            "--perfbench", "etl_wide", "--out", str(tmp_path / "out"),
+        ])
+        m.main()
+
+    (change / ".git").mkdir()  # a working tree
+    with pytest.raises(SystemExit, match=r"change.*git working tree.*"
+                       r"git archive HEAD \| tar -x -C"):
+        run()
+    (change / ".git").rmdir()
+    (parent / ".git").write_text("gitdir: elsewhere\n")  # a linked worktree
+    with pytest.raises(SystemExit, match=r"parent.*git working tree"):
+        run()

@@ -12,6 +12,7 @@ from data_engineering_task_adtech_data_pipeline_spark.operators import (
     joins,
     similarity,
     similarity_pandas,
+    store,
 )
 from data_engineering_task_adtech_data_pipeline_spark.sources.readers import Testdata
 from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
@@ -531,7 +532,7 @@ def test_compaction_generation_guard(spark, tmp_path):
     root = d + "/ivf"
     cents = similarity.kmeans_fit(emb, n_cells=4, n_iter=1, dim=64)
     similarity.ivf_index_write(emb.where(F.col("vec_id") % 2 == 0), cents, root)
-    assert similarity.index_generation(spark, root) == 0
+    assert store.generation(spark, root) == 0
 
     emb.where(F.col("vec_id") % 2 == 1).write.mode("append").parquet(
         d + "/landing"
@@ -541,7 +542,7 @@ def test_compaction_generation_guard(spark, tmp_path):
     ).awaitTermination(120)
     n = similarity.ivf_index_compact(spark, root)
     assert n > 0
-    assert similarity.index_generation(spark, root) == 1
+    assert store.generation(spark, root) == 1
 
     with pytest.raises(RuntimeError, match="stale streaming checkpoint"):
         stream_ivf_ingest(
@@ -586,7 +587,7 @@ def test_compact_refuses_schema_gap_delta(spark, tmp_path):
     with pytest.raises(ValueError, match="lacks base index column"):
         similarity.ivf_index_compact(spark, root)
     assert fs.is_dir(spark, root + "/stream_index")  # delta left intact
-    assert similarity.index_generation(spark, root) == 0  # no bump
+    assert store.generation(spark, root) == 0  # no bump
 
 
 def test_pq_encode_deterministic_and_fit_validates(spark):
@@ -873,13 +874,13 @@ def test_ivf_index_delete_tombstones_match_rebuilt_index(spark, tmp_path):
     assert "LeftAnti" in plan and "Broadcast" in plan, plan
 
     # physical fold: tombstone table gone, generation bumped, results flat
-    gen_before = similarity.index_generation(spark, d + "/ivf")
+    gen_before = store.generation(spark, d + "/ivf")
     before = rows(d + "/ivf", sq8=True, shortlist=8)
     similarity.ivf_index_compact(spark, d + "/ivf")
     import os
 
     assert not os.path.isdir(d + "/ivf/tombstones")
-    assert similarity.index_generation(spark, d + "/ivf") == gen_before + 1
+    assert store.generation(spark, d + "/ivf") == gen_before + 1
     assert rows(d + "/ivf", sq8=True, shortlist=8) == before
     folded = similarity.ivf_index_search(spark, d + "/ivf", q, k=3, n_probe=2)
     assert "LeftAnti" not in (
@@ -888,13 +889,14 @@ def test_ivf_index_delete_tombstones_match_rebuilt_index(spark, tmp_path):
 
 
 def test_tombstones_apply_beside_an_empty_streamed_delta(spark, tmp_path):
-    """A streamed delta holding no committed files (only the sink's
-    _spark_metadata log) must not bypass the tombstone anti-join."""
+    """A streamed delta holding no committed files (only the _temporary
+    dir of an epoch write that crashed before committing) must not bypass
+    the tombstone anti-join."""
     emb = Testdata(spark, SF_ORACLE).embeddings
     root = str(tmp_path / "ivf")
     cents = similarity.kmeans_fit(emb, n_cells=4, n_iter=1, dim=64)
     similarity.ivf_index_write(emb, cents, root)
-    (tmp_path / "ivf" / "stream_index" / "_spark_metadata").mkdir(parents=True)
+    (tmp_path / "ivf" / "stream_index" / "_temporary" / "0").mkdir(parents=True)
     q = emb.where(F.col("vec_id") < 3)
 
     def hits():
@@ -924,9 +926,9 @@ def test_tombstone_fold_guards_and_contract(spark, tmp_path):
     similarity.ivf_index_write(emb, cents, d + "/ivf")
 
     # no delta, no tombstones: nothing to do, generation untouched
-    gen0 = similarity.index_generation(spark, d + "/ivf")
+    gen0 = store.generation(spark, d + "/ivf")
     assert similarity.ivf_index_compact(spark, d + "/ivf") == 0
-    assert similarity.index_generation(spark, d + "/ivf") == gen0
+    assert store.generation(spark, d + "/ivf") == gen0
 
     # wrong id column fails loudly instead of silently deleting nothing
     spark.createDataFrame([(1,)], "doc_id long").write.mode(
@@ -1114,7 +1116,7 @@ def test_minhash_index_stream_ingest_and_compact(spark, tmp_path):
     generation, and a stale checkpoint then refuses to restart."""
     import pytest
 
-    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup, similarity
+    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup
     from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
         stream_minhash_ingest,
     )
@@ -1147,7 +1149,7 @@ def test_minhash_index_stream_ingest_and_compact(spark, tmp_path):
 
     n = dedup.minhash_index_compact(spark, root)
     assert n == new.count()
-    assert similarity.index_generation(spark, root) == 1
+    assert store.generation(spark, root) == 1
     got2 = sorted(
         r.doc_id
         for r in dedup.minhash_index_dedup(batch, root, verify_threshold=0.5).collect()
@@ -1177,7 +1179,7 @@ def test_stream_dedup_pipeline_generation_guard(spark, tmp_path):
     checkpoint proceeds."""
     import pytest
 
-    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup, similarity
+    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup
     from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
         read_epochs,
         stream_dedup_pipeline,
@@ -1201,7 +1203,7 @@ def test_stream_dedup_pipeline_generation_guard(spark, tmp_path):
     ]).write.mode("append").parquet(d + "/in")
     run("/in", "/ckpt").awaitTermination(120)
     assert dedup.minhash_index_compact(spark, root) == 1
-    assert similarity.index_generation(spark, root) == 1
+    assert store.generation(spark, root) == 1
 
     with pytest.raises(RuntimeError, match="stale streaming checkpoint"):
         run("/in", "/ckpt")
@@ -1221,7 +1223,7 @@ def test_minhash_index_delete_matches_rebuild(spark, tmp_path):
     rebuilt from the survivors — including the per-bucket cap contract:
     with max_bucket=1, deleting the bucket's sorted-first id admits the
     next sorted id (a capped-array store could not express this)."""
-    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup, similarity
+    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup
 
     shared = (
         "identical boilerplate paragraph repeated across corpus entries "
@@ -1260,13 +1262,13 @@ def test_minhash_index_delete_matches_rebuild(spark, tmp_path):
     assert kept() == [10, 11]  # both boilerplate copies gone -> 10 is novel
 
     # physical fold: tombstone table dropped, results unchanged, gen bumped
-    gen0 = similarity.index_generation(spark, root)
+    gen0 = store.generation(spark, root)
     dedup.minhash_index_compact(spark, root)
     from data_engineering_task_adtech_data_pipeline_spark import fs
 
     assert not fs.is_dir(spark, fs.join(root, "tombstones"))
     assert kept() == [10, 11]
-    assert similarity.index_generation(spark, root) == gen0 + 1
+    assert store.generation(spark, root) == gen0 + 1
 
 
 def test_minhash_index_compact_refuses_interrupted_run(spark, tmp_path):
@@ -1282,6 +1284,42 @@ def test_minhash_index_compact_refuses_interrupted_run(spark, tmp_path):
         dedup.minhash_index_compact(spark, root)
     fs.delete(spark, fs.join(root, "stream_profiles.compacting"))
     assert dedup.minhash_index_compact(spark, root) == 0
+
+
+def test_minhash_index_compact_noop_keeps_generation(spark, tmp_path):
+    """A compaction with no delta and no tombstones folds nothing, so it
+    does not bump the generation (the IVF rule): a bump would refuse every
+    live ingest checkpoint. The live checkpoint keeps ingesting after the
+    no-op, and the next real fold bumps once."""
+    import os
+
+    from data_engineering_task_adtech_data_pipeline_spark.operators import dedup
+    from data_engineering_task_adtech_data_pipeline_spark.streaming.jobs import (
+        stream_minhash_ingest,
+    )
+
+    d = str(tmp_path)
+    root = d + "/idx"
+    docs = _mk_docs(spark, [
+        (1, "the quick brown fox jumps over the lazy dog again and again today"),
+    ])
+    dedup.minhash_index_write(docs, root, num_hashes=32, bands=8)
+
+    def ingest():
+        stream_minhash_ingest(
+            spark, d + "/in", root, d + "/ckpt", schema=docs.schema
+        ).awaitTermination(120)
+
+    os.makedirs(d + "/in")
+    ingest()  # a live checkpoint, pinned at generation 0
+    assert dedup.minhash_index_compact(spark, root) == 0
+    assert store.generation(spark, root) == 0
+    _mk_docs(spark, [
+        (10, "fresh unique content that matches nothing stored anywhere at all yet"),
+    ]).write.mode("append").parquet(d + "/in")
+    ingest()
+    assert dedup.minhash_index_compact(spark, root) == 1
+    assert store.generation(spark, root) == 1
 
 
 def test_index_compact_refuses_corrupt_delta(spark, tmp_path):
@@ -1329,7 +1367,7 @@ def test_index_compact_refuses_corrupt_delta(spark, tmp_path):
         dedup.minhash_index_compact(spark, mh)
     assert still_on_disk(mh, name)
 
-    # IVF index: native parquet sink delta
+    # IVF index: the same epoch-landed delta format
     emb = Testdata(spark, SF_ORACLE).embeddings
     ivf = d + "/ivf"
     cents = similarity.kmeans_fit(emb, n_cells=4, n_iter=1, dim=64)

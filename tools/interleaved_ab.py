@@ -24,14 +24,20 @@ instead, one pair per seed, switching which checkout runs first from pair
 to pair. For every end-to-end metric the B checkout's BENCHMARK.json
 declares, it prints each side's median and quartiles and the share of
 pairs B wins, and whether the medians differ by more than A's
-interquartile range (``perfbench_summary.json`` in ``--out``).
+interquartile range (``perfbench_summary.json`` in ``--out``). Both
+checkouts must be exported copies side by side, as the benchmark runs
+them: a git working tree (a directory with a ``.git`` entry) is refused,
+because an A/B of a working tree against an exported parent misread
+``query_mix`` (change wins 1/10 where the exported pair read 5/10).
 
 Usage:
   python tools/interleaved_ab.py --a /root/r13head --b /root/repo \
       --rounds 4 --out /root/repo/plans/r15/ab_start \
       [--label-a r13 --label-b r15] [--sf-dir /root/testdata/sf0.1]
-  python tools/interleaved_ab.py --a ../parent --b . --perfbench etl_wide \
-      --rounds 10 --first-seed 11 --out /tmp/ab_etl
+  git archive PARENT | tar -x -C ../ab/parent    # two sibling exports
+  git archive HEAD | tar -x -C ../ab/change
+  python tools/interleaved_ab.py --a ../ab/parent --b ../ab/change \
+      --perfbench etl_wide --rounds 10 --first-seed 11 --out /tmp/ab_etl
 """
 
 from __future__ import annotations
@@ -174,7 +180,19 @@ def summarize_perfbench(pairs: list[tuple[dict, dict]],
     return out
 
 
+def refuse_working_trees(roots: dict[str, Path]) -> None:
+    """Exit unless every checkout is an export (no ``.git`` entry)."""
+    for label, root in roots.items():
+        if (root / ".git").exists():
+            sys.exit(
+                f"[interleaved_ab] {label} ({root}) is a git working tree; "
+                "export each side into a sibling directory instead, e.g. "
+                "git archive HEAD | tar -x -C <dir>"
+            )
+
+
 def perfbench_ab(args, roots: dict[str, Path], out: Path) -> None:
+    refuse_working_trees(roots)
     label_a, label_b = roots
     spec = json.loads((roots[label_b] / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
